@@ -348,6 +348,10 @@ def logreg_train_fixed_point(
     is unchanged. The corpus never concentrates on a key and the driver
     never sees data.
     """
+    if iters < 1:
+        # the observed bucket set comes from the first gradient round, and
+        # the returned plan must not read ``docfe`` after it is freed
+        raise ValueError(f"iters must be >= 1, got {iters}")
     sc = labeled.sparkSession.sparkContext
 
     def _pinned_ids() -> set:
@@ -471,18 +475,6 @@ def logreg_train_fixed_point(
         _free(state_ids)
         state_ids = _pinned_ids() - before - docfe_ids
         state = new_state
-    if iters == 0:
-        # degenerate guard: no gradient round ran, so derive the observed
-        # bucket set directly (all weights are still 0.0 — same relation
-        # the pre-rewrite form returned)
-        obs_row = (
-            docfe.select(F.explode(F.coalesce(F.col("bs"), empty_bs)).alias("b"))
-            .distinct()
-            .agg(F.array_sort(F.collect_list("b")).alias("obs_f"))
-        )
-        state = state.drop("obs").crossJoin(obs_row).withColumnRenamed(
-            "obs_f", "obs"
-        )
     _free(docfe_ids)
     return state.select(
         F.explode(

@@ -182,7 +182,9 @@ def shingle_sizes(docs: DataFrame, id_col: str = "doc_id",
 
     return docs.select(
         F.col(id_col),
-        F.size(F.array_distinct(word_shingles(F.col(text_col), n))).alias("nsh"),
+        # long, as ``count`` gives: the verify's n1/n2 are declared bigint
+        F.size(F.array_distinct(word_shingles(F.col(text_col), n)))
+        .cast("long").alias("nsh"),
     )
 
 
@@ -273,18 +275,9 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame, id_col: str = "doc_id"
 
 
 def minhash_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                  n: int = 3, threshold: float = 0.5,
-                  shingles: DataFrame | None = None) -> DataFrame:
-    """Full MinHash→LSH→exact-verify near-dup pipeline.
-
-    ``shingles`` lets a composite caller (``minhash_recall_eval``) hand in
-    an already-materialized (id, shingle) relation so the scan+tokenize
-    subtree is derived once instead of once per consumer; single-pipeline
-    callers keep the recompute form (measured cheaper than persisting for
-    one consumer — see ``shingle_table``)."""
-    sh = shingles if shingles is not None else shingle_table(
-        docs, id_col, text_col, n
-    )
+                  n: int = 3, threshold: float = 0.5) -> DataFrame:
+    """Full MinHash→LSH→exact-verify near-dup pipeline."""
+    sh = shingle_table(docs, id_col, text_col, n)
     sig = minhash_signatures(sh, id_col)
     cand = lsh_candidate_pairs(sig, id_col)
     # map-side sizes, NOT sig.select(nsh): verify references its sizes
@@ -296,8 +289,7 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 
 def ngram_jaccard_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                         n: int = 3, threshold: float = 0.5,
-                        candidate_passes: int = 1,
-                        shingles: DataFrame | None = None) -> DataFrame:
+                        candidate_passes: int = 1) -> DataFrame:
     """Exact n-gram Jaccard near-dup via PREFIX FILTERING (ppjoin-style).
 
     MinHash trades recall for speed; this operator is LOSSLESS: order each
@@ -328,9 +320,7 @@ def ngram_jaccard_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     if that matters at your corpus size. The DuckDB oracle hashes
     identically, so engine parity is bit-exact regardless of collisions.
     """
-    sh = shingles if shingles is not None else shingle_table(
-        docs, id_col, text_col, n
-    )
+    sh = shingle_table(docs, id_col, text_col, n)
     from big_data_elt_pipeline_spark.functions.text import hash60
 
     sh = sh.select(id_col, hash60(F.col("shingle")).alias("shingle"))

@@ -481,6 +481,12 @@ def ivf_topk(
     scan instead — the spread helps wide map stages, but for the
     iterative fit loop it multiplies per-round task fan-out. Assignment,
     probing and scoring still run on ``corpus``.
+
+    Partitioning: KMeans' k-means|| init samples per partition, so a fit
+    on a differently partitioned ``fit_corpus`` (or ``corpus``) can pick
+    other centroids and so other cells and top-k rows. The result is not
+    bit-identical across partitionings; the recall gate against the
+    brute-force top-k is the contract here.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.feature import VectorAssembler

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_elt_pipeline_spark.plans.queries import register
-from big_data_elt_pipeline_spark.sources.tpch import EVENTS_SQL, events_df
+from big_data_elt_pipeline_spark.sources.tpch import EVENTS_SQL, events_df, read_table
 from big_data_elt_pipeline_spark.streaming import events as EV
 
 _E = f"WITH {EVENTS_SQL.strip()}"
@@ -248,8 +248,7 @@ def q_events_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.functions.core import money_sum
 
     ev = events_df(spark, sf_dir)
-    # deliberate spread exemption: broadcast-side dimension table
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     return (
         EV.enrich_events(ev, customer)
         .groupBy("segment", "event_type")

@@ -183,15 +183,9 @@ def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ref_date(spark: SparkSession, sf_dir: str):
-    """The reference date (max ``date_achat``) collected from UNSPREAD
-    scans (r15, guide §1.2): this action returns one scalar, so the
-    single-split input-spread repartitions that help wide downstream
-    plans only add exchanges (and their local sorts) here. Identical
-    value to ``gold.reference_date(_fact(...))`` by construction:
-    ``build_fact``'s LEFT client join preserves the achats rows
-    one-to-one, so the max over ``achats`` IS the max over ``fact``, and
-    partitioning never changes a max."""
-    return gold.reference_date(tpch.achats_df(spark, sf_dir, spread=False))
+    """Max ``date_achat`` over achats — the same as over fact, whose LEFT
+    client join keeps the achats rows one-to-one."""
+    return gold.reference_date(tpch.achats_df(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------

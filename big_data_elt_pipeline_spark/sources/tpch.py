@@ -17,7 +17,9 @@ midpoint) and both engines land on the bit-identical double.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -28,43 +30,90 @@ TABLES = [
 ]
 
 
-# scan-split count per (sf_dir, table, floor) — pure file-layout metadata,
-# constant for a given input directory, so memoizing it is not result
-# caching (no query data is held, only the split count of the file)
-_SCAN_SPLITS: dict[tuple[str, str], int] = {}
+# the map-heavy corpora: their reads feed tokenize / explode / shingle /
+# vector passes that run on the scan's own tasks. Every consumer of the
+# relational tables and ``events`` is scan -> join/aggregate, which
+# shuffles anyway, so a spread exchange there is pure overhead.
+SPREAD_TABLES = frozenset({"documents", "embeddings"})
+
+# SQL confs that change what parquet schema inference returns
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+@dataclass
+class _CatalogEntry:
+    stamp: tuple  # file (mtime, length) listing + schema conf values
+    schema: T.StructType
+    splits: int | None = None  # scan split count, probed on first spread
+
+
+# one entry per corpus path: file metadata only, no query data. An entry
+# whose stamp no longer matches (rewritten file, changed conf) is
+# re-inferred and replaced.
+_CATALOG: dict[str, _CatalogEntry] = {}
+
+
+def _file_stamp(spark: SparkSession, path: str) -> tuple:
+    """(modification time, length) of every Hadoop ``FileStatus`` under
+    ``path`` — one listing call, no job, and ``s3a://`` works too."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return tuple(
+        (st.getModificationTime(), st.getLen()) for st in fs.listStatus(jpath)
+    )
 
 
 def read_table(
-    spark: SparkSession, sf_dir: str, name: str, spread: bool = True
+    spark: SparkSession, sf_dir: str, name: str, spread: bool | None = None
 ) -> DataFrame:
-    """Read one corpus table, correcting single-file INPUT SKEW.
+    """Read one corpus table with its cached schema, spreading a single-
+    split scan only for the map-heavy corpora.
 
-    The driver test corpus ships each table as ONE single-row-group
-    parquet file, so every scan plans as ONE task and all map-side work
-    (tokenize/explode/decimal snapping) runs on one core of the cluster
-    (spark_optimization_guide §2.5 "input skew: one huge unsplittable
-    file ... repartition immediately after the read"). The fix is
-    SCALE-ADAPTIVE, not tuned to local[32]: the scan's split count is
-    compared against ``defaultParallelism`` and a round-robin
-    repartition is inserted ONLY when the scan cannot feed the cluster
-    floor — on a production layout (many splittable files, row groups
-    ≥ cores) the condition is false and the plan is untouched.
-    Deterministic: round-robin repartition local-sorts its input first
-    (spark.sql.execution.sortBeforeRepartition, default on), and every
-    downstream operator is partitioning-independent by the repo's
-    determinism contract (decimal-snapped sums, total-order ties).
-    Disable with SPARK_GRAFT_SPREAD_INPUT=0.
+    Schema catalog: ``spark.read.parquet`` runs a schema-inference job on
+    every call. The first read of a file infers its schema and stores it
+    in ``_CATALOG``; every later read passes it to
+    ``spark.read.schema(...)`` and fires no job. The entry is stamped with
+    the file's modification time and length and the session's parquet
+    schema confs (``nanosAsLong`` among them), so a rewritten file or a
+    changed conf is re-inferred and ``events_ts_col`` always sees the
+    physical type.
+
+    Input spread: the test corpus ships each table as ONE single-row-
+    group parquet file, so a scan plans as ONE task. For ``documents``
+    and ``embeddings`` (``SPREAD_TABLES``) that would run all map-side
+    work on one core, so when the scan's split count is below
+    ``defaultParallelism`` a round-robin repartition is inserted. On a
+    production layout the condition is false and the plan is untouched. Deterministic: round-
+    robin repartition local-sorts its input first, and every downstream
+    operator is partitioning-independent by the repo's determinism
+    contract. Other tables are read unspread. ``spread=`` overrides the
+    per-table default; ``SPARK_GRAFT_SPREAD_INPUT=0`` disables the spread.
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        stamp = _file_stamp(spark, path)
+    except Py4JJavaError:
+        return spark.read.parquet(path)  # missing path: Spark's own error
+    stamp += tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+    entry = _CATALOG.get(path)
+    if entry is None or entry.stamp != stamp:
+        df = spark.read.parquet(path)
+        entry = _CATALOG[path] = _CatalogEntry(stamp, df.schema)
+    else:
+        df = spark.read.schema(entry.schema).parquet(path)
+    if spread is None:
+        spread = name in SPREAD_TABLES
     if not spread or os.environ.get("SPARK_GRAFT_SPREAD_INPUT", "1") == "0":
         return df
+    if entry.splits is None:
+        entry.splits = df.rdd.getNumPartitions()
     floor = spark.sparkContext.defaultParallelism
-    key = (sf_dir, name)
-    n = _SCAN_SPLITS.get(key)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-        _SCAN_SPLITS[key] = n
-    if n < floor:
+    if entry.splits < floor:
         df = df.repartition(floor)
     return df
 
@@ -88,20 +137,16 @@ def clients_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def achats_df(spark: SparkSession, sf_dir: str, spread: bool = True) -> DataFrame:
+def achats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``achats`` from lineitem ⋈ orders ⋈ part.
 
     orders/part are joined on their keys; at scale the orders join is the
     big one (fact-to-fact) and shuffles on orderkey, while part is
     dimension-sized per SF and AQE will broadcast it.
-
-    ``spread=False`` skips the single-split input spread — for callers
-    that collect ONE scalar from this frame (the reference-date action)
-    the spread exchanges are pure overhead (guide §1.2).
     """
-    lineitem = read_table(spark, sf_dir, "lineitem", spread=spread)
-    orders = read_table(spark, sf_dir, "orders", spread=spread)
-    part = read_table(spark, sf_dir, "part", spread=spread)
+    lineitem = read_table(spark, sf_dir, "lineitem")
+    orders = read_table(spark, sf_dir, "orders")
+    part = read_table(spark, sf_dir, "part")
     # (l_orderkey, l_linenumber) is NOT unique in this generator; the md5-
     # derived 60-bit hash of the full natural key is, and is portable
     # (identical expression in the DuckDB oracle CTE below)

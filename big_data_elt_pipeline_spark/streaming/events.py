@@ -250,9 +250,10 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events left-joined per micro-batch to the static customer dimension,
     appended row-by-row to the sink (no aggregate, no watermark — the
     join is stateless, so append mode needs neither)."""
+    from big_data_elt_pipeline_spark.sources.tpch import read_table
+
     ev = _stream_events(spark, sf_dir)
-    # deliberate spread exemption: broadcast-side dimension table
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     enriched = enrich_events(ev, customer)
     name = "stream_enrich_sink"
     q = enriched.writeStream.outputMode("append").format("memory").queryName(name).start()
@@ -539,11 +540,10 @@ def stream_enrich_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join must emit exactly the batch join's rows — n_mismatch
     over (event_id, segment, event_type, value), plus checksums the
     oracle recomputes from events LEFT JOIN customer."""
-    from big_data_elt_pipeline_spark.sources.tpch import events_df
+    from big_data_elt_pipeline_spark.sources.tpch import events_df, read_table
 
     s = stream_enriched_events(spark, sf_dir)
-    # deliberate spread exemption: broadcast-side dimension table
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    customer = read_table(spark, sf_dir, "customer")
     twin = enrich_events(events_df(spark, sf_dir), customer)
     checks = twin.agg(
         F.count(F.lit(1)).cast("long").alias("n_batch"),

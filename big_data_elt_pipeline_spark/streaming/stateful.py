@@ -54,16 +54,12 @@ def _update(
 
 def _stage_two_chunks(spark: SparkSession, sf_dir: str) -> str:
     """Split the events fixture into two files so the stream runs >1 batch."""
-    from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf
+    from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, read_table
 
     ensure_nanos_conf(spark)
     stage = pathlib.Path("/tmp/spark_graft_stateful") / pathlib.Path(sf_dir).name
     if not (stage / "_SUCCESS").exists():
-        # deliberate spread exemption: this once-per-process staging
-        # splits events into single-file chunks (coalesce(1) below) for
-        # the micro-batch source contract — a spread exchange would be
-        # immediately undone by the coalesce
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_table(spark, sf_dir, "events")
         mid = df.agg(F.expr("percentile(event_id, 0.5)")).first()[0]
         df.filter(F.col("event_id") <= mid).coalesce(1).write.mode("overwrite").parquet(str(stage / "a"))
         df.filter(F.col("event_id") > mid).coalesce(1).write.mode("overwrite").parquet(str(stage / "b"))

@@ -847,6 +847,20 @@ def test_logreg_partitioning_invariance(spark, docs):
     assert a == b
 
 
+def test_logreg_rejects_zero_iters(spark, docs):
+    """No gradient round means no observed bucket set: fail at call time,
+    before any checkpoint is pinned, instead of returning a plan that
+    reads a freed frame."""
+    from big_data_elt_pipeline_spark.operators.classify import (
+        logreg_train_fixed_point,
+    )
+
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    with pytest.raises(ValueError, match="iters"):
+        logreg_train_fixed_point(_planted_logreg_corpus(docs), iters=0)
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+
+
 def _bpe_python_reference(texts, rounds):
     import collections
     import re
