@@ -179,3 +179,13 @@ def hash32(col: Column) -> Column:
 def hash60(col: Column) -> Column:
     """Portable 60-bit string hash (15 hex chars of md5)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def shingle_buckets(col: Column, n: int, buckets: int) -> Column:
+    """Hashed word n-gram features: ``pmod(hash60(shingle), buckets)`` for
+    every ``word_shingles`` element, repeats kept (frequencies; apply
+    ``array_distinct`` for a set). The one feature map the NB, logreg,
+    DSIR and LM-fluency operators share, as a pure map expression."""
+    return F.transform(
+        word_shingles(col, n), lambda s: F.pmod(hash60(s), F.lit(buckets))
+    )

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from big_data_elt_pipeline_spark.functions.text import shingle_buckets
+
 NB_BUCKETS = 4096
 NB_ALPHA = 0.01
 
@@ -365,24 +367,15 @@ def logreg_train_fixed_point(
                 rdd.unpersist(False)
 
     before = _pinned_ids()
-    # the doc's distinct bucket set as a PURE MAP expression (shingle ->
-    # hash -> pmod -> array_distinct, all inside one codegen stage): the
-    # former explode + groupBy(pid) + join shape shuffled every feature
-    # occurrence just to rebuild a per-doc set the row already determines
-    from big_data_elt_pipeline_spark.functions.text import hash60, word_shingles
-
-    # no array_sort: every consumer of ``bs`` is order-free (the margin
-    # fold is an exact decimal sum; the gradient explode feeds a groupBy)
-    bs_expr = F.array_distinct(
-        F.transform(
-            word_shingles(F.col(text_col), 2),
-            lambda s: F.pmod(hash60(s), F.lit(buckets)),
-        )
-    )
+    # the doc's distinct bucket set as a PURE MAP expression: an explode +
+    # groupBy(pid) would shuffle every feature occurrence to rebuild a set
+    # the row already determines. No array_sort: every consumer of ``bs``
+    # is order-free (the margin fold is an exact decimal sum; the gradient
+    # explode feeds a groupBy)
     docfe = labeled.select(
         F.col(id_col).alias("pid"),
         F.col(label_col).cast("int").alias("y"),
-        bs_expr.alias("bs"),
+        F.array_distinct(shingle_buckets(F.col(text_col), 2, buckets)).alias("bs"),
     ).localCheckpoint(eager=True)
     # NOT compacted to fewer partitions: unlike the ml-fit frames, each
     # row here carries a real per-row decimal fold (|bs| adds), so
@@ -502,44 +495,66 @@ def logreg_train_fixed_point(
     )
 
 
-def logreg_predict(
+def model_map_row(model: DataFrame) -> DataFrame:
+    """Collapse a (feature, weight) model relation into ONE row carrying
+    (wmap: map<bigint,double>, bias: double) — the broadcastable form
+    ``score_documents`` folds against. Stays a DataFrame end-to-end (no
+    driver collect)."""
+    return (
+        model.groupBy()
+        .agg(
+            F.map_from_entries(
+                F.collect_list(
+                    F.when(
+                        F.col("feature") >= 0,
+                        F.struct(F.col("feature"), F.col("weight")),
+                    )
+                ).cast("array<struct<feature:bigint,weight:double>>")
+            ).alias("wmap"),
+            F.max(
+                F.when(F.col("feature") < 0, F.col("weight"))
+            ).alias("bias"),
+        )
+    )
+
+
+def score_documents(
     docs: DataFrame,
-    model: DataFrame,
+    model_row: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     buckets: int = LOGREG_BUCKETS,
 ) -> DataFrame:
     """(id, score, predicted): hard-sigmoid probability and 0.5-threshold
-    class under a ``logreg_train_fixed_point`` model. Same snapping as
-    training (decimal dot, exact clamp), so predictions are deterministic
-    everywhere; unseen features contribute 0."""
-    from big_data_elt_pipeline_spark.operators.sampling import _hashed_feats
-
-    feats = (
-        _hashed_feats(docs, id_col, text_col, 2, buckets)
-        .withColumnRenamed(id_col, "pid")
-        .distinct()
-    )
-    w = model.filter(F.col("feature") >= 0).select(
-        F.col("feature").alias("b"), F.col("weight").alias("w")
-    )
-    bias = F.broadcast(
-        model.filter(F.col("feature") < 0).select(F.col("weight").alias("bw"))
-    )
-    m = (
-        feats.join(F.broadcast(w), "b")
-        .groupBy("pid")
-        .agg(F.sum(F.col("w").cast("decimal(25,9)")).alias("sw"))
+    class under a ``logreg_train_fixed_point`` model in its
+    ``model_map_row`` form — the repo's one logreg scorer. Map-only: the
+    model row broadcasts, and the margin is an exact DECIMAL(25,9) fold of
+    the doc's distinct buckets against the weight map INSIDE the row (the
+    trainer's margin arithmetic; buckets the model never saw contribute
+    0). Every input row yields one output row: a null or empty text is
+    the single empty shingle and a one-word text its word, as in
+    ``word_shingles``. No explode, no doc-keyed shuffle, so the same plan
+    scores a batch DataFrame and a streaming one (one broadcast per
+    micro-batch)."""
+    bkts = F.array_distinct(shingle_buckets(F.col(text_col), 2, buckets))
+    zero = F.lit(0).cast("decimal(25,9)")
+    margin = F.aggregate(
+        bkts,
+        zero,
+        lambda acc, b: (
+            acc
+            + F.coalesce(
+                F.element_at(F.col("wmap"), b).cast("decimal(25,9)"), zero
+            )
+        ).cast("decimal(25,9)"),
     )
     return (
-        docs.select(F.col(id_col).alias("pid"))
-        .join(m, "pid", "left")
-        .crossJoin(bias)
+        docs.crossJoin(F.broadcast(model_row))
         .select(
-            F.col("pid").alias(id_col),
-            _hard_sigmoid(
-                F.coalesce(F.col("sw").cast("double"), F.lit(0.0)) + F.col("bw")
-            ).alias("score"),
+            F.col(id_col),
+            _hard_sigmoid(margin.cast("double") + F.col("bias")).alias(
+                "score"
+            ),
         )
         .select(
             id_col,

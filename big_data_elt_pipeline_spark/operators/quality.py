@@ -157,15 +157,6 @@ def c4_line_stats(
 LM_BUCKETS = 4096
 
 
-def _bigram_buckets(df: DataFrame, id_col: str, text_col: str,
-                    buckets: int) -> DataFrame:
-    """(id, bucket) raw hashed-bigram occurrences — exactly DSIR's hashed
-    feature map (frequencies, not sets), reused from ``sampling``."""
-    from big_data_elt_pipeline_spark.operators.sampling import _hashed_feats
-
-    return _hashed_feats(df, id_col, text_col, 2, buckets)
-
-
 def lm_scores(
     docs: DataFrame,
     ref_mod: int = 10,
@@ -188,7 +179,9 @@ def lm_scores(
     per partition; model + total + median are broadcast scalars/tables;
     the only corpus-sized exchange is the per-doc groupBy.
     """
-    feats = _bigram_buckets(docs, id_col, text_col, buckets)
+    from big_data_elt_pipeline_spark.operators.sampling import _hashed_feats
+
+    feats = _hashed_feats(docs, id_col, text_col, 2, buckets)
     ref = feats.filter(F.col(id_col) % ref_mod == 0)
     counts = ref.groupBy("b").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("total")).select(
@@ -303,15 +296,21 @@ def perplexity_buckets(
     )
 
 
-def quantized_percentiles(df: DataFrame, col: str, ps: list[float]) -> DataFrame:
-    """(p, value) rows: EXACT interpolated percentiles of ``col`` computed
-    from a value histogram instead of Spark's ``percentile`` aggregate.
+def grouped_quantized_percentiles(
+    df: DataFrame, group_col: str, col: str, ps: list[float]
+) -> DataFrame:
+    """(group, p, value): EXACT interpolated percentiles of ``col`` per
+    group, computed from a value histogram instead of Spark's
+    ``percentile`` aggregate — per-language length distributions,
+    per-source score spreads, any grouped exact percentile a 100 TB corpus
+    audit needs; ``quantized_percentiles`` is the one-group case.
     ``percentile`` buffers every input value in the aggregation state — at
     billions of documents that is gigabytes per buffer and an OOM, not a
     plan. This needs the values QUANTIZED (already-snapped doubles, or
-    integers), so groupBy(value) bounds the state by the VALUE DOMAIN, not
-    the corpus; the cumulative window runs over distinct values only, and
-    all requested percentiles come out of that one histogram pass.
+    integers), so groupBy(group, value) bounds the state by |groups| x
+    |value domain|, never by the corpus; the cumulative window partitions
+    BY GROUP over distinct values only, and all requested percentiles come
+    out of that one histogram pass.
 
     Bit-compatibility: reproduces the WEIGHTED interpolation both Spark's
     Percentile and DuckDB's quantile_cont implement — index = p*(n-1),
@@ -320,68 +319,8 @@ def quantized_percentiles(df: DataFrame, col: str, ps: list[float]) -> DataFrame
     equal ``lower + (upper-lower)*frac`` form differs by 1 ulp on real
     data (measured at p=0.1: 57.4 vs 57.39999999999999) — the weighted
     form is the only one that hash-matches both engines; pinned by pytest
-    against percentile() on random data.
-    """
-    from pyspark.sql import Window
-
-    counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("cnt"))
-    w = Window.orderBy(col).rowsBetween(Window.unboundedPreceding, 0)
-    cum = counts.select(
-        F.col(col).cast("double").alias("v"),
-        (F.sum("cnt").over(w) - F.col("cnt")).alias("lo"),
-        F.sum("cnt").over(w).alias("hi"),
-    )
-    n = F.broadcast(df.agg(F.count(F.lit(1)).alias("n")))
-    pdim = F.broadcast(
-        df.sparkSession.range(1).select(
-            F.explode(F.array(*[F.lit(float(p)) for p in ps])).alias("p")
-        )
-    )
-    idx = F.col("p") * (F.col("n") - F.lit(1)).cast("double")
-    lo_i = F.floor(idx).cast("long")
-    hi_i = F.ceil(idx).cast("long")
-    sel = (
-        cum.crossJoin(n)
-        .crossJoin(pdim)
-        .groupBy("p")
-        .agg(
-            F.min(
-                F.when((F.col("lo") <= lo_i) & (lo_i < F.col("hi")), F.col("v"))
-            ).alias("l"),
-            F.min(
-                F.when((F.col("lo") <= hi_i) & (hi_i < F.col("hi")), F.col("v"))
-            ).alias("u"),
-            F.max("n").alias("n"),
-        )
-    )
-    oidx = F.col("p") * (F.col("n") - F.lit(1)).cast("double")
-    olo = F.floor(oidx)
-    ohi = F.ceil(oidx)
-    return sel.select(
-        "p",
-        F.when(olo == ohi, F.col("l"))
-        .otherwise(
-            (ohi.cast("double") - oidx) * F.col("l")
-            + (oidx - olo.cast("double")) * F.col("u")
-        )
-        .alias("value"),
-    )
-
-
-def grouped_quantized_percentiles(
-    df: DataFrame, group_col: str, col: str, ps: list[float]
-) -> DataFrame:
-    """(group, p, value): ``quantized_percentiles`` generalized to one
-    histogram pass PER GROUP — per-language length distributions,
-    per-source score spreads, any grouped exact percentile a 100 TB
-    corpus audit needs. Same bit-compatible weighted interpolation and
-    the same scale contract: aggregation state is bounded by |groups| x
-    |value domain| (the values must be quantized), never by the corpus;
-    the cumulative window partitions BY GROUP over distinct values only.
-
-    A group whose index straddles two values interpolates exactly as the
-    global kernel does; a single-value group returns that value at every
-    p (index 0 everywhere)."""
+    against percentile() on random data. A single-value group returns
+    that value at every p (index 0 everywhere)."""
     from pyspark.sql import Window
 
     counts = df.groupBy(group_col, col).agg(F.count(F.lit(1)).alias("cnt"))
@@ -432,6 +371,16 @@ def grouped_quantized_percentiles(
         )
         .alias("value"),
     )
+
+
+def quantized_percentiles(df: DataFrame, col: str, ps: list[float]) -> DataFrame:
+    """(p, value) rows: EXACT interpolated percentiles of ``col`` —
+    ``grouped_quantized_percentiles`` over one constant group (see there
+    for the formula, the bit-compatibility and the scale contract)."""
+    key = "__all"
+    return grouped_quantized_percentiles(
+        df.select(F.lit(0).alias(key), col), key, col, ps
+    ).drop(key)
 
 
 def quantized_median(df: DataFrame, col: str) -> DataFrame:

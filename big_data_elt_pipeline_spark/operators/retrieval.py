@@ -54,8 +54,11 @@ def bm25_rank(
     b: float = 0.75,
     dl: DataFrame | None = None,
 ) -> DataFrame:
-    """The shared BM25 ranking kernel — both the per-call form
-    (``bm25_topk``) and the stored-index probe
+    """Top-``k`` BM25 ranking of unweighted queries: ``bm25_rank_weighted``
+    with every distinct query term at qw = 1, so repeated query terms count
+    once. Exact: ``1.000000 x round(idf * tf_factor, 6)`` is the rounded
+    contribution itself, so each score is the plain BM25 decimal sum. Both
+    the per-call form (``bm25_topk``) and the stored-index probe
     (``text_index.bm25_index_probe``) compose it, so the two are
     bit-identical BY CONSTRUCTION (the ``ivfpq_adc_scan`` shared-kernel
     discipline applied to text).
@@ -68,47 +71,9 @@ def bm25_rank(
     ``dfreq``: (term, df); ``corpus``: one row (n_docs, avgdl);
     ``queries``: (query_id, query_text).
     """
-    qterms = (
-        tokenize(queries, "query_id", "query_text").distinct()
-    )
-
-    idf = F.round(
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-        ),
-        6,
-    )
-    tf_factor = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-    )
-    contribution = F.round(F.col("idf") * tf_factor, 6).cast("decimal(25,6)")
-
-    # df/idf restricted to QUERY terms before anything touches the posting
-    # relation: idf_tbl is |query vocab| rows (tiny) regardless of corpus
-    # vocabulary size, and it carries avgdl so no second scalar join
-    idf_tbl = (
-        dfreq.join(F.broadcast(qterms.select("term").distinct()), "term")
-        .crossJoin(F.broadcast(corpus))
-        .select("term", idf.alias("idf"), "avgdl")
-    )
-    cand = (
-        tf.join(F.broadcast(qterms), "term")  # candidate postings only
-        .join(F.broadcast(idf_tbl), "term")
-    )
-    if dl is not None:
-        cand = cand.join(dl, "doc_id")
-    scored = cand.groupBy("query_id", "doc_id").agg(
-        F.sum(contribution).cast("double").alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-        .orderBy("query_id", "rank")
-    )
+    qterms = tokenize(queries, "query_id", "query_text").distinct()
+    qweights = qterms.withColumn("qw", F.lit(1.0))
+    return bm25_rank_weighted(tf, dfreq, corpus, qweights, k=k, k1=k1, b=b, dl=dl)
 
 
 def bm25_topk(
@@ -154,10 +119,11 @@ def bm25_rank_weighted(
     b: float = 0.75,
     dl: DataFrame | None = None,
 ) -> DataFrame:
-    """``bm25_rank`` with per-(query, term) WEIGHTS — the expanded-query
-    kernel (RM3 / relevance models / any soft query rewrite). Inputs as
-    ``bm25_rank`` except the query side: ``qweights`` is (query_id,
-    term, qw) with ``qw`` already snapped to 6 dp. Each candidate term
+    """The BM25 ranking kernel, with per-(query, term) WEIGHTS: ``bm25_rank``
+    calls it at unit weights, and expanded queries (RM3 / relevance models
+    / any soft query rewrite) pass real ones. Inputs as ``bm25_rank``
+    except the query side: ``qweights`` is (query_id, term, qw) with
+    ``qw`` already snapped to 6 dp. Each candidate term
     contributes the EXACT decimal product ``qw x round(idf * tf_factor,
     6)`` — DECIMAL(8,6) x DECIMAL(19,6), 12-dp, no rounding decision —
     summed as decimal and cast to double once at the end. Rounding a
@@ -166,12 +132,13 @@ def bm25_rank_weighted(
     resolve double half-way cases differently (Spark rounds the binary
     expansion HALF_UP, DuckDB rounds the scaled double) — the exact
     product sidesteps the decision entirely, keeping scores bit-stable
-    under any partitioning AND across engines. ``qw`` uniform = the
-    unweighted kernel's ranking (scaled scores, identical order).
+    under any partitioning AND across engines.
 
-    Scale shape identical to ``bm25_rank``: the weight relation is
-    |queries| x (query vocab + expansion budget) rows — broadcast — and
-    everything downstream of the posting equi-join is candidate-sized.
+    Scale shape: df/idf are restricted to the query vocabulary before
+    anything touches the posting relation, and the idf table carries
+    avgdl, so no second scalar join. The weight relation is |queries| x
+    (query vocab + expansion budget) rows — broadcast — and everything
+    downstream of the posting equi-join is candidate-sized.
     """
     qvocab = qweights.select("term").distinct()
     idf = F.round(

@@ -122,12 +122,12 @@ def _hashed_feats(df: DataFrame, id_col: str, text_col: str,
     """(id, bucket) hashed n-gram feature occurrences — RAW counts (no
     within-doc dedup; DSIR features are frequencies, not sets). Map-only:
     shingle + hash + mod inside the row, explode is a generator."""
-    from big_data_elt_pipeline_spark.functions.text import hash60, word_shingles
+    from big_data_elt_pipeline_spark.functions.text import shingle_buckets
 
     return df.select(
         F.col(id_col),
-        F.explode(word_shingles(F.col(text_col), n)).alias("sh"),
-    ).select(id_col, F.pmod(hash60(F.col("sh")), F.lit(buckets)).alias("b"))
+        F.explode(shingle_buckets(F.col(text_col), n, buckets)).alias("b"),
+    )
 
 
 def dsir_weights(

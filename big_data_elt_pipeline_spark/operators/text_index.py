@@ -830,8 +830,9 @@ def bm25_index_rm3(
     pseudo-relevance-feedback rewrite every lexical serving stack grows
     next): base ``bm25_index_probe`` at depth ``fb_k`` -> feedback term
     model from the feedback documents' stored postings
-    (``retrieval.rm3_weights``) -> weighted re-probe
-    (``retrieval.bm25_rank_weighted``) over the expanded vocabulary.
+    (``retrieval.rm3_weights``) -> weighted re-probe over the expanded
+    vocabulary (``retrieval.bm25_rank_weighted``, the BM25 kernel the
+    base probe runs at unit weights).
     Bit-identical to ``retrieval.bm25_rm3_topk`` on the corpus the index
     holds — all three stages compose the same shared kernels.
 

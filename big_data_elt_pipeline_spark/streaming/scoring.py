@@ -9,11 +9,10 @@ fold over the doc's own distinct buckets. No per-doc aggregation state,
 no watermark, no shuffle: the stream side stays append-mode stateless
 (the stream-static enrichment discipline, applied to inference).
 
-Bit-equality contract: the batch predictor (`classify.logreg_predict`)
-accumulates the same weights as DECIMAL(25,9) through a groupBy; the
-in-row fold here uses the same decimal accumulator, so the two margins
-are exactly equal (order-free exact addition), and stream == batch is
-asserted row-for-row in tests.
+The scorer itself is ``operators/classify.score_documents``, the one
+logreg scorer in the repo; batch and stream run the same plan, so
+stream == batch is asserted row-for-row in tests and in the
+``stream_doc_scoring`` evidence relation.
 """
 
 from __future__ import annotations
@@ -21,77 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_elt_pipeline_spark.functions.text import hash60, word_shingles
 from big_data_elt_pipeline_spark.operators.classify import (
-    LOGREG_BUCKETS,
-    _hard_sigmoid,
+    model_map_row,
+    score_documents,
 )
-
-
-def model_map_row(model: DataFrame) -> DataFrame:
-    """Collapse a (feature, weight) model relation into ONE row carrying
-    (wmap: map<bigint,double>, bias: double) — the broadcastable form a
-    stream can crossJoin statelessly. Stays a DataFrame end-to-end (no
-    driver collect)."""
-    return (
-        model.groupBy()
-        .agg(
-            F.map_from_entries(
-                F.collect_list(
-                    F.when(
-                        F.col("feature") >= 0,
-                        F.struct(F.col("feature"), F.col("weight")),
-                    )
-                ).cast("array<struct<feature:bigint,weight:double>>")
-            ).alias("wmap"),
-            F.max(
-                F.when(F.col("feature") < 0, F.col("weight"))
-            ).alias("bias"),
-        )
-    )
-
-
-def score_documents(
-    docs: DataFrame,
-    model_row: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    buckets: int = LOGREG_BUCKETS,
-) -> DataFrame:
-    """(id, score, predicted): map-only hard-sigmoid scoring — works
-    identically on a batch DataFrame and a streaming one (the model row
-    broadcasts into each micro-batch; everything else is per-row)."""
-    bkts = F.array_distinct(
-        F.transform(
-            word_shingles(F.col(text_col), 2),
-            lambda s: F.pmod(hash60(s), F.lit(buckets)),
-        )
-    )
-    zero = F.lit(0).cast("decimal(25,9)")
-    margin = F.aggregate(
-        bkts,
-        zero,
-        lambda acc, b: (
-            acc
-            + F.coalesce(
-                F.element_at(F.col("wmap"), b).cast("decimal(25,9)"), zero
-            )
-        ).cast("decimal(25,9)"),
-    )
-    return (
-        docs.crossJoin(F.broadcast(model_row))
-        .select(
-            F.col(id_col),
-            _hard_sigmoid(margin.cast("double") + F.col("bias")).alias(
-                "score"
-            ),
-        )
-        .select(
-            id_col,
-            "score",
-            (F.col("score") > 0.5).cast("int").alias("predicted"),
-        )
-    )
 
 
 def _staged_docs_dir(sf_dir: str, name: str = "documents.parquet") -> str:

@@ -62,9 +62,26 @@ def test_bm25_partitioning_invariant(spark, corpus):
 
 
 def test_bm25_repeated_query_terms_count_once(spark, corpus):
+    """``bm25_rank`` is the weighted kernel at qw = 1 over DISTINCT query
+    terms: a repeated term counts once, the scores are the plain BM25
+    sums (not scaled by the weight), and a query with no hits is empty."""
+    import math
+
     a = bm25_topk(corpus, _q(spark, "q", "join"), k=5).collect()
     b = bm25_topk(corpus, _q(spark, "q", "join join join"), k=5).collect()
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
+    assert bm25_topk(corpus, _q(spark, "q", "zzzunseen"), k=5).collect() == []
+    # 'join' is in docs 3 (tf 6 of 6 tokens) and 1 (tf 2 of 5)
+    n, df, avgdl = 5, 2, (5 + 3 + 6 + 3 + 4) / 5
+    idf = round(math.log(1 + (n - df + 0.5) / (df + 0.5)), 6)
+
+    def bm25(t, d):
+        return round(idf * t * 2.2 / (t + 1.2 * (0.25 + 0.75 * d / avgdl)), 6)
+
+    assert [r.doc_id for r in a] == [3, 1]
+    assert [r.score for r in a] == pytest.approx(
+        [bm25(6, 6), bm25(2, 5)], abs=2e-6
+    )
 
 
 # --------------------------------------------------------------------------

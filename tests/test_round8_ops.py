@@ -806,8 +806,9 @@ def _planted_logreg_corpus(docs):
 
 def test_logreg_learns_planted_signal(spark, docs):
     from big_data_elt_pipeline_spark.operators.classify import (
-        logreg_predict,
         logreg_train_fixed_point,
+        model_map_row,
+        score_documents,
     )
 
     labeled = _planted_logreg_corpus(docs)
@@ -822,7 +823,7 @@ def test_logreg_learns_planted_signal(spark, docs):
     assert rows[mb] == max(rows.values())
     assert rows[mb] > 0.5
     # and the trained model must separate the planted classes
-    pred = logreg_predict(labeled, model)
+    pred = score_documents(labeled, model_map_row(model))
     acc = (
         pred.join(labeled.select("doc_id", "y"), "doc_id")
         .select(F.avg((F.col("predicted") == F.col("y")).cast("int")).alias("a"))
@@ -1076,35 +1077,77 @@ def test_knn_graph_candidates_share_bucket(spark, emb):
 
 def test_stream_scoring_equals_batch(spark, docs):
     from big_data_elt_pipeline_spark.operators.classify import (
-        logreg_predict,
         logreg_train_fixed_point,
-    )
-    from big_data_elt_pipeline_spark.streaming.scoring import (
         model_map_row,
         score_documents,
+    )
+    from big_data_elt_pipeline_spark.streaming.scoring import (
         stream_scored_documents,
     )
     from tests.conftest import SF_SMOKE
 
     labeled = _planted_logreg_corpus(docs)
     model = logreg_train_fixed_point(labeled)
+    # the map-only scorer on a batch read is the reference; the
+    # independent cross-engine check is the stream_doc_scoring oracle
     batch = {
-        r.doc_id: (r.score, r.predicted)
-        for r in logreg_predict(docs, model).collect()
-    }
-    # the map-only scorer (shared batch/stream path) is bit-equal to the
-    # groupBy-based batch predictor: same decimal accumulator
-    maponly = {
         r.doc_id: (r.score, r.predicted)
         for r in score_documents(docs, model_map_row(model)).collect()
     }
-    assert maponly == batch
-    # and the real streaming run through the memory sink matches too
+    assert len(batch) == docs.count()
+    # the real streaming run through the memory sink matches row for row
     streamed = {
         r.doc_id: (r.score, r.predicted)
         for r in stream_scored_documents(spark, SF_SMOKE, model).collect()
     }
     assert streamed == batch
+
+
+def _hard_sigmoid_py(m):
+    return min(max(0.25 * m + 0.5, 0.0), 1.0)
+
+
+def test_score_documents_degenerate_texts(spark, docs):
+    """Null, empty and one-word texts each keep their row. Under an
+    intercept-only model each scores exactly hard_sigmoid(bias) with
+    predicted = (bias > 0); under a trained model each adds the weight of
+    its one bucket (md5 of "" for null and empty, of the word otherwise)."""
+    import hashlib
+
+    from big_data_elt_pipeline_spark.operators.classify import (
+        LOGREG_BUCKETS,
+        logreg_train_fixed_point,
+        model_map_row,
+        score_documents,
+    )
+
+    odd = spark.createDataFrame(
+        [(1, None), (2, ""), (3, "zzmarker")], "doc_id long, text string"
+    )
+    for bias in (-0.375, 0.125):
+        intercept = spark.createDataFrame(
+            [(-1, bias)], "feature long, weight double"
+        )
+        got = {
+            r.doc_id: (r.score, r.predicted)
+            for r in score_documents(odd, model_map_row(intercept)).collect()
+        }
+        want = (_hard_sigmoid_py(bias), int(bias > 0))
+        assert got == {1: want, 2: want, 3: want}
+
+    model = logreg_train_fixed_point(_planted_logreg_corpus(docs))
+    w = {r.feature: r.weight for r in model.collect()}
+
+    def bucket(s):
+        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % LOGREG_BUCKETS
+
+    got = {
+        r.doc_id: (r.score, r.predicted)
+        for r in score_documents(odd, model_map_row(model)).collect()
+    }
+    for doc_id, word in ((1, ""), (2, ""), (3, "zzmarker")):
+        score = _hard_sigmoid_py(w.get(bucket(word), 0.0) + w[-1])
+        assert got[doc_id] == (score, int(score > 0.5))
 
 
 def test_knn_semantic_clusters_vs_union_find(spark, emb):
