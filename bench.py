@@ -8,8 +8,8 @@ chars of stdout, and the r05 single 2+ KB JSON line lost its head there):
 - the full-fidelity report is ALSO written to ``BENCH_LOCAL.json`` in the
   repo root (4-decimal timings, scale-point row counts),
 - the LAST TWO lines are compact (no spaces) and together stay under the
-  2000-char tail window: an extras line (streaming throughput + hot-key
-  exhibit + as much of the scale block as fits) and the headline line
+  2000-char tail window: an extras line (streaming throughput + as much
+  of the scale block as fits) and the headline line
   ``{"metric":...,"value":N,"unit":"sec","queries":{...},"sf":...}``.
   The suite outgrew the window (106 timings = 2384 chars), so the
   headline itself degrades when needed: 1-dp timings, then the CHEAPEST
@@ -25,11 +25,8 @@ in fixed order of information density:
   second suite pass -> x64 singles (also default-OFF for unattended
   runs: SPARK_GRAFT_SCALE_X64=0 — the committed x64 table stands until
   the measured operators change) -> x16 -> x4/x1 -> streaming ->
-  hot-key exhibit -> pipeline repeat runs; a mid-pass suite truncation
-  is the last resort. (r9 verdict #6: streaming now runs AFTER the
-  scale block, so a slow host sheds the recomputable throughput numbers
-  before the skew exhibit — the design evidence.) Everything shed is
-  logged as a ``shed`` progress line and
+  pipeline repeat runs; a mid-pass suite truncation is the last resort.
+  Everything shed is logged as a ``shed`` progress line and
   recorded in the artifact. AND the artifact is crash-proof: a
   SIGTERM/SIGINT handler (plus an exception path) dumps BENCH_LOCAL.json
   and the two tail lines from whatever has completed, so even a kill
@@ -233,7 +230,7 @@ _STATE: dict = {
     "timings": {},       # query -> min seconds (the headline map)
     "raw": {},           # query -> [per-pass seconds]
     "host_load": {},     # query -> [[loadavg, iowait-delta], ...]
-    "extras": {},        # stream / hotkey / scale / host / shed
+    "extras": {},        # stream / scale / host / shed
     "scale_full": {},    # full scale_points map
     "shed": [],          # ordered record of everything dropped
     "sf": 0.0,
@@ -357,10 +354,8 @@ def _emit() -> None:
         for ndrop in range(1, len(keep)):
             scale_alts.append({"s1": {k: one_dp[k] for k in keep[:-ndrop]},
                                "dr": ndrop})
-    hk = extras.get("hotkey")
     components = [
         ("stream", extras.get("stream")),
-        ("hk", {"a": hk["agg"], "w": hk["window"]} if hk else None),
         ("__scale__", scale_alts),
         ("shed", extras.get("shed")),
         ("host", extras.get("host")),
@@ -551,9 +546,7 @@ def main() -> None:
     # the streaming section's cost, so a contended host sheds x16/x64
     # (whose committed tables stand as evidence until the measured
     # operators change, the x64 precedent) before it sheds the cheap
-    # streaming throughput numbers. The r9 shed ORDER within a factor is
-    # unchanged (stream still sheds before the hot-key exhibit when the
-    # deadline closes in regardless).
+    # streaming throughput numbers.
     STREAM_RESERVE = (
         140.0 if os.environ.get("SPARK_GRAFT_STREAM", "1") != "0" else 0.0
     )
@@ -562,10 +555,7 @@ def main() -> None:
     elif _remaining() < SCALE_EST[1] + SCALE_EST[4] + TAIL_RESERVE:
         _shed("scale_block")
     else:
-        from big_data_elt_pipeline_spark.plans.scale_bench import (
-            hotkey_survivor_exhibit,
-            run_scaled,
-        )
+        from big_data_elt_pipeline_spark.plans.scale_bench import run_scaled
         from big_data_elt_pipeline_spark.session import get_spark as _gs
 
         spark.stop()
@@ -599,22 +589,6 @@ def main() -> None:
             f for f in factors
             if any(k.endswith(f"_x{f}") for k in scale_full)
         ]
-        # hot-key survivor-selection exhibit (r7 verdict #1): wall-clock +
-        # sampled task concurrency of the shipped min-struct agg form vs
-        # the rejected rank-1 window form on a 99.9%-one-hash corpus
-        if _remaining() < 100 + TAIL_RESERVE:
-            _shed("hotkey_exhibit")
-        else:
-            hot = hotkey_survivor_exhibit(spark)
-            scale_full.update(hot)
-            for k in ("hotkey_agg_s", "hotkey_window_s"):
-                _progress(k, hot[k])
-            # [wall s, seconds with <=2 active tasks, mean active tasks]
-            extras["hotkey"] = {
-                k: [hot[f"hotkey_{k}_s"], hot[f"hotkey_{k}_serialized_s"],
-                    hot[f"hotkey_{k}_avg_active_tasks"]]
-                for k in ("agg", "window")
-            }
         # extras line carries factor-ORDERED second arrays under short op
         # aliases; full names + row counts live in BENCH_LOCAL.json (the
         # verbose form blows the 2000-char tail window)
@@ -658,47 +632,41 @@ def main() -> None:
     # Structured Streaming surface — file-source micro-batches driven to
     # completion (processAllAvailable), min-of-2 like everything else.
     # Recorded in the extras line, NOT in the headline total (separate
-    # unit: the *_rps entries are throughput, not latency). Runs LAST
-    # (r9 verdict #6): under a closing deadline the recomputable
-    # throughput numbers shed before the hot-key skew exhibit — the
-    # design evidence is the thing a slow host must not drop first.
+    # unit: the *_rps entries are throughput, not latency). Runs last.
     if os.environ.get("SPARK_GRAFT_STREAM", "1") == "0":
         pass
     elif _remaining() < 120 + TAIL_RESERVE:
         _shed("stream")
     else:
+        from big_data_elt_pipeline_spark.plans.scale_bench import _timed
         from big_data_elt_pipeline_spark.sources.tpch import events_df
         from big_data_elt_pipeline_spark.streaming import events as SE
         from big_data_elt_pipeline_spark.streaming import incremental as SI
 
+        secs: dict[str, float] = {}
         stream: dict[str, float] = {}
         n_events = events_df(spark, sf_dir).count()
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            SE.stream_tumbling_revenue(spark, sf_dir).count()
-            dt_s = time.perf_counter() - t0
-            best = dt_s if best is None or dt_s < best else best
+        best = _timed(spark, secs, "stream_tumbling_sec",
+                      lambda: SE.stream_tumbling_revenue(spark, sf_dir).count(),
+                      progress=_progress)
         stream["tumb_s"] = round(best, 2)
         stream["tumb_rps"] = round(n_events / best)
-        _progress("stream_tumbling_sec", best)
 
         achats = tpch.achats_df(spark, sf_dir)
         n_achats = achats.count()
-        best = None
-        for _ in range(2):
+
+        def _incremental() -> int:
             # staging_dir caches the shard staging across runs and wipes the
             # fold state, so run 2 times the pure stream-fold path
             root = SI.staging_dir("bench_incremental", sf_dir)
-            t0 = time.perf_counter()
-            SI.incremental_ca_monthly(
+            return SI.incremental_ca_monthly(
                 spark, achats, f"{root}/src", f"{root}/state"
             ).count()
-            dt_s = time.perf_counter() - t0
-            best = dt_s if best is None or dt_s < best else best
+
+        best = _timed(spark, secs, "stream_incremental_gold_sec", _incremental,
+                      progress=_progress)
         stream["incr_s"] = round(best, 2)
         stream["incr_rps"] = round(n_achats / best)
-        _progress("stream_incremental_gold_sec", best)
         extras["stream"] = stream
 
     _emit()

@@ -926,10 +926,8 @@ def _non_survivor_windows(wins: DataFrame) -> DataFrame:
     map-side partial aggregate collapses a boilerplate hash repeated 1e5x
     to one row per input partition, where the previous
     ``row_number().over(Window.partitionBy("h"))`` form sorted ALL
-    occurrences of the hottest hash inside one unsplittable task.
-    ``_non_survivor_windows_window_form`` keeps the rejected shape for
-    the equivalence pin (tests/test_dedup_skew.py) and the hot-key bench
-    exhibit."""
+    occurrences of the hottest hash inside one unsplittable task
+    (tests/test_dedup_skew.py pins the two forms equal)."""
     surv = wins.groupBy("h").agg(
         F.min(F.struct("doc_id", "off")).alias("s"),
         F.count(F.lit(1)).alias("c"),
@@ -942,22 +940,6 @@ def _non_survivor_windows(wins: DataFrame) -> DataFrame:
                 & (F.col("off") == F.col("s.off"))
             )
         )
-        .select("doc_id", "off")
-    )
-
-
-def _non_survivor_windows_window_form(wins: DataFrame) -> DataFrame:
-    """REJECTED survivor-selection shape (pre-r8): rank-1 window
-    partitioned by content hash. Bit-identical output to
-    ``_non_survivor_windows`` (the equivalence is pytest-pinned), kept
-    ONLY as the comparison baseline for the skew test and the hot-key
-    bench exhibit — a window partition is sorted whole inside one task,
-    so a boilerplate hash repeated millions of times serializes the
-    corpus-sized shuffle into a single straggler."""
-    worder = Window.partitionBy("h").orderBy("doc_id", "off")
-    return (
-        wins.withColumn("rn", F.row_number().over(worder))
-        .filter(F.col("rn") > 1)
         .select("doc_id", "off")
     )
 

@@ -31,11 +31,22 @@ every stage is blocking-key equi-join / groupBy with no all-pairs term.
 The governance composite (``training_mixture``) rides the same exhibit —
 its result is a fixed per-language rollup (constant rows), so for that
 point the linearity signal is wall-time alone.
+
+Every point follows one measurement discipline (``_staged`` +
+``_timed``): each factor's corpus is staged to parquet off the clock,
+every timed point is the min of 2 runs after an untimed warm-up — at the
+first factor for operators over the staged corpus, at every factor for
+calls on an index built at that factor — and the first index build of a
+pin is an untimed warm-up of the lakehouse write path. Whatever a timed
+call pins is freed once it has been measured.
 """
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import time
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,6 +56,11 @@ from big_data_elt_pipeline_spark.operators import similarity as S
 from big_data_elt_pipeline_spark.sources.tpch import read_table
 
 _ID_STRIDE = 10_000_000
+# every timed scale point is the min of this many runs
+_RUNS = 2
+# updates an index has taken when its probe-after-update is timed: the
+# untimed warm-up update plus the timed ones, the same at every factor
+UPDATES_BEFORE_PROBE = 1 + _RUNS
 
 
 def _sign_mask(copy: int, dim: int) -> list[float]:
@@ -107,91 +123,77 @@ def scaled_embeddings(spark: SparkSession, sf_dir: str, factor: int, dim: int = 
     )
 
 
-def hotkey_survivor_exhibit(spark: SparkSession, n_rows: int = 32_000_000,
-                            hot_every: int = 1000) -> dict[str, float]:
-    """Skew exhibit for the r8 survivor-selection fix (r7 verdict #1): a
-    synthetic window relation where ONE hash carries 99.9% of the rows
-    (~32M at the defaults — the web-boilerplate shape) amid a small
-    unique-hash background, run through BOTH survivor-selection forms on
-    the identical input (equivalence is pytest-pinned in
-    test_dedup_skew.py). The background is deliberately small in DISTINCT
-    count: a large unique background makes the final aggregate itself an
-    AQE-coalesced narrow stage (small-data coalescing, not hot-key skew)
-    and muddies the signal being exhibited.
+def _pinned(spark: SparkSession) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
 
-    The claim under test is STRUCTURAL — "the hot-key corpus no longer
-    serializes into one task" — so alongside wall-clock the exhibit
-    SAMPLES the status tracker's active-task count during each run and
-    reports the run's mean concurrency. The rejected rank-1 window form
-    must sort every occurrence of the hot hash inside one unsplittable
-    task (mean concurrency collapses toward 1 — on a 1000-executor
-    cluster that task IS the job's wall-clock and its memory ceiling);
-    the shipped min-struct aggregate form collapses the hot key map-side
-    via partial aggregation and joins survivors back (broadcast here,
-    AQE-skew-splittable SMJ at cluster scale), keeping every stage wide.
-    Wall-clock on local[32] under-sells the gap — a single in-memory
-    sort of the hot partition is cheap when the whole corpus fits in one
-    JVM — which is exactly why the concurrency signal is recorded.
-    min-of-2 after an untimed warm-up, like every other scale point."""
-    import threading
 
-    from big_data_elt_pipeline_spark.operators import dedup as DD
+def _free_since(spark: SparkSession, before: set) -> None:
+    """Unpersist every RDD pinned since ``before`` was taken."""
+    reg = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in set(reg.keySet().toArray()) - before:
+        rdd = reg.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)
 
-    wins = spark.range(n_rows).select(
-        F.floor(F.col("id") / F.lit(100)).cast("long").alias("doc_id"),
-        F.pmod(F.col("id"), F.lit(100)).cast("long").alias("off"),
-        F.when(F.pmod(F.col("id"), F.lit(hot_every)) != 0, F.lit(42))
-        .otherwise(F.col("id") + F.lit(1000))
-        .cast("long")
-        .alias("h"),
-    )
-    tracker = spark.sparkContext.statusTracker()
 
-    def _sampled_run(fn) -> tuple[float, int, float]:
-        samples: list[int] = []
-        stop = threading.Event()
+@contextmanager
+def _staged(spark: SparkSession, sf_dir: str, factor: int, *kinds: str):
+    """Stage the xK corpora named in ``kinds`` (``"docs"``, ``"emb"``) as
+    parquet under one temp root and yield ``(root, *frames)``; on exit the
+    root goes (with any index a pin built under it) and every RDD pinned
+    meanwhile is freed.
 
-        def _sampler() -> None:
-            while not stop.is_set():
-                active = 0
-                for sid in tracker.getActiveStageIds():
-                    info = tracker.getStageInfo(sid)
-                    if info is not None:
-                        active += info.numActiveTasks
-                samples.append(active)
-                time.sleep(0.05)
+    The corpus is MATERIALIZED once per factor, off the clock: the derived
+    form re-ran the per-copy salting inside every consumer pass — multi-
+    pass operators (the governance composite re-reads the corpus ~6x) were
+    charged Kx corpus construction instead of their own work. A stored
+    corpus is also the realistic shape: real dedup reads parquet.
+    repartition(32): the scaled frames inherit 1-2 input splits from the
+    tiny base tables, and a 1-2-file stage runs the timed passes nearly
+    single-core."""
+    build = {"docs": scaled_docs, "emb": scaled_embeddings}
+    root = tempfile.mkdtemp(prefix=f"scale_x{factor}_")
+    before = _pinned(spark)
+    try:
+        frames = []
+        for kind in kinds:
+            build[kind](spark, sf_dir, factor).repartition(32).write.parquet(
+                f"{root}/{kind}")
+            frames.append(spark.read.parquet(f"{root}/{kind}"))
+        yield (root, *frames)
+    finally:
+        _free_since(spark, before)
+        shutil.rmtree(root, ignore_errors=True)
 
-        th = threading.Thread(target=_sampler, daemon=True)
-        th.start()
+
+def _timed(spark: SparkSession, out: dict, key: str, fn, rows: str | None = None,
+           warm: bool = False, runs: int = _RUNS, progress=None) -> float:
+    """Time ``fn`` — a call that runs its work to completion and returns a
+    number (a row count, an update count): one untimed warm-up when
+    ``warm`` (codegen and parquet footers off the clock — the r05 artifact
+    charged them to the first factor and inverted the trend), then the min
+    of ``runs`` calls. Records ``out[key]`` (seconds) and, when ``rows``
+    is given, ``out[rows]`` = the last call's result; reports the point to
+    ``progress``; frees whatever the calls pinned (the cluster-resolution
+    runs keep their labels checkpoint alive otherwise — across the ~40
+    runs of ``run_scaled`` the accumulation measurably slowed later
+    factors). Returns the recorded seconds."""
+    before = _pinned(spark)
+    if warm:
+        fn()
+    best = None
+    for _ in range(runs):
         t0 = time.perf_counter()
-        n = fn(wins).count()
+        n = fn()
         dt = time.perf_counter() - t0
-        stop.set()
-        th.join()
-        busy = [x for x in samples if x > 0]
-        mean = (sum(busy) / len(busy)) if busy else 0.0
-        # dwell time with <=2 running tasks: the straggler signature —
-        # a wide plan only touches it at stage boundaries
-        serialized = 0.05 * sum(1 for x in busy if x <= 2)
-        return dt, n, mean, serialized
-
-    out: dict[str, float] = {}
-    forms = (
-        ("agg", DD._non_survivor_windows),
-        ("window", DD._non_survivor_windows_window_form),
-    )
-    for key, fn in forms:
-        fn(wins).count()  # untimed warm-up: codegen off the clock
-        best, n, conc, ser = None, 0, 0.0, 0.0
-        for _ in range(2):
-            dt, n, c, sz = _sampled_run(fn)
-            if best is None or dt < best:
-                best, conc, ser = dt, c, sz
-        out[f"hotkey_{key}_s"] = round(best, 4)
-        out[f"hotkey_{key}_rows"] = float(n)
-        out[f"hotkey_{key}_avg_active_tasks"] = round(conc, 1)
-        out[f"hotkey_{key}_serialized_s"] = round(ser, 2)
-    return out
+        best = dt if best is None else min(best, dt)
+    _free_since(spark, before)
+    out[key] = round(best, 4)
+    if rows is not None:
+        out[rows] = float(n)
+    if progress is not None:
+        progress(key, out[key])
+    return out[key]
 
 
 def knn_scale_pin(
@@ -209,12 +211,11 @@ def knn_scale_pin(
     near-linearly (buckets stay balanced because copy 0's means-centered
     bits split ~half/half and the ±1 masks scatter the other copies).
 
-    Min-of-2 per point after one untimed warm-up at the first factor:
-    the r9/r10 single-shot discipline existed because the FIXED-bits x64
-    point cost ~20 min; at the derived widths the whole pin is ~1 min, and
-    single shots on this host swing 4x run-to-run (measured 7.7 s vs
-    28.1 s for the same x64 point at load1 ~9) — min-of-2 is what the rest
-    of the bench already uses for exactly this reason.
+    Min-of-2 per point (the module's discipline): the r9/r10 single-shot
+    discipline existed because the FIXED-bits x64 point cost ~20 min; at
+    the derived widths the whole pin is ~1 min, and single shots on this
+    host swing 4x run-to-run (measured 7.7 s vs 28.1 s for the same x64
+    point at load1 ~9).
     Returns ``knnpin_{means,knn_graph,neardup}_x{f}`` seconds plus
     ``_rows`` and ``_bits`` audit columns.
 
@@ -225,51 +226,27 @@ def knn_scale_pin(
     fixed-8-bit pin measured the quadratic envelope (6.7 s -> 105 s). The
     derived widths are recorded per factor so the artifact shows the knob
     turning itself."""
-    import shutil
-    import tempfile
-
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="knn_scale_")
-    warmed = False
     for factor in factors:
-        # repartition before staging: the scaled frame inherits 1-2 input
-        # splits from the tiny base table, and a 1-2-file stage would run
-        # the timed passes nearly single-core (off the timers — staging
-        # cost is the harness's, not the operator's)
-        scaled_embeddings(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/emb_x{factor}")
-        emb = spark.read.parquet(f"{stage_root}/emb_x{factor}")
-        # derived widths recorded OUTSIDE the timers (the operators re-run
-        # the same two-scalar aggregate inside — its cost is part of the
-        # timed runs, as a real caller pays it)
-        out[f"knnpin_knn_graph_x{factor}_bits"] = float(
-            S.derive_bits(emb, S.KNN_TARGET_BUCKET_ROWS))
-        out[f"knnpin_neardup_x{factor}_bits"] = float(
-            S.derive_bits(emb, S.NEARDUP_TARGET_BUCKET_ROWS))
-        runs = {
-            # the means job alone: the one-row broadcast relation every
-            # bucketed operator builds first (localCheckpoint'ed inside)
-            "means": lambda: S.component_means(emb, 8),
-            "knn_graph": lambda: S.knn_graph(emb, k=5),
-            "neardup": lambda: S.embedding_neardup(emb),
-        }
-        for name, fn in runs.items():
-            if not warmed:
-                fn().count()
-            best, n = None, 0
-            for _ in range(2):
-                t0 = time.perf_counter()
-                n = fn().count()
-                dt = time.perf_counter() - t0
-                if best is None or dt < best:
-                    best = dt
-            out[f"knnpin_{name}_x{factor}"] = round(best, 4)
-            out[f"knnpin_{name}_x{factor}_rows"] = float(n)
-            if progress is not None:
-                progress(f"knnpin_{name}_x{factor}", out[f"knnpin_{name}_x{factor}"])
-        warmed = True
-        shutil.rmtree(f"{stage_root}/emb_x{factor}", ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+        with _staged(spark, sf_dir, factor, "emb") as (_, emb):
+            # derived widths recorded OUTSIDE the timers (the operators
+            # re-run the same two-scalar aggregate inside — its cost is
+            # part of the timed runs, as a real caller pays it)
+            out[f"knnpin_knn_graph_x{factor}_bits"] = float(
+                S.derive_bits(emb, S.KNN_TARGET_BUCKET_ROWS))
+            out[f"knnpin_neardup_x{factor}_bits"] = float(
+                S.derive_bits(emb, S.NEARDUP_TARGET_BUCKET_ROWS))
+            runs = {
+                # the means job alone: the one-row broadcast relation every
+                # bucketed operator builds first (localCheckpoint'ed inside)
+                "means": lambda: S.component_means(emb, 8),
+                "knn_graph": lambda: S.knn_graph(emb, k=5),
+                "neardup": lambda: S.embedding_neardup(emb),
+            }
+            for name, fn in runs.items():
+                key = f"knnpin_{name}_x{factor}"
+                _timed(spark, out, key, lambda: fn().count(), rows=f"{key}_rows",
+                       warm=factor == factors[0], progress=progress)
     return out
 
 
@@ -290,133 +267,92 @@ def ivf_scale_pin(
     ~sqrt within the power-of-two quantization, so 4× the corpus must
     cost ~4× wall, not 16× — the claim the artifact records, next to a
     per-factor audit of the derived count and the exact probed-cell row
-    total the scan pays for.
+    total the scan pays for."""
+    from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    Min-of-2 after one untimed warm-up at the first factor (the
-    knn_scale_pin measurement discipline)."""
-    import shutil
-    import tempfile
-
+    # one probe width for the timed calls AND the audit of what they scan
+    n_probe = 4
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="ivf_scale_")
-    warmed = False
-    build_warmed = False
     for factor in factors:
-        # repartition before staging (r11 advice): without it the staged
-        # parquet inherits 1-2 splits from the tiny base table and the
-        # timed passes run nearly single-core
-        scaled_embeddings(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/emb_x{factor}")
-        emb = spark.read.parquet(f"{stage_root}/emb_x{factor}")
-        n = emb.count()
-        cells = S.auto_cells(n)
-        out[f"ivfpin_x{factor}_rows"] = float(n)
-        out[f"ivfpin_x{factor}_cells"] = float(cells)
-        queries = emb.filter(F.col("vec_id") < n_queries)
+        with _staged(spark, sf_dir, factor, "emb") as (root, emb):
+            n = emb.count()
+            cells = S.auto_cells(n)
+            out[f"ivfpin_x{factor}_rows"] = float(n)
+            out[f"ivfpin_x{factor}_cells"] = float(cells)
+            queries = emb.filter(F.col("vec_id") < n_queries)
 
-        # audit OUTSIDE the timers: total corpus rows living in the
-        # n_probe cells each query probes — the row count the ADC scan
-        # actually joins (the pair-space analogue of the knn bucket audit)
-        cents1 = F.broadcast(S.fixed_centroid_cells(emb, cells))
-        csizes = (
-            emb.crossJoin(cents1)
-            .select(
-                (-F.array_max(
-                    F.transform(
-                        F.col("__cents"),
-                        lambda ct: F.struct(
-                            F.try_divide(
-                                S.dot(F.col("embedding"), ct["cvec"]),
-                                S.norm(F.col("embedding")) * ct["cvn"],
-                            ).alias("cos"),
-                            (-ct["cell"]).alias("negcell"),
-                        ),
-                    )
-                )["negcell"]).alias("cell")
+            # audit OUTSIDE the timers: total corpus rows living in the
+            # n_probe cells each query probes — the row count the ADC scan
+            # actually joins (the pair-space analogue of the knn audit)
+            cents1 = F.broadcast(S.fixed_centroid_cells(emb, cells))
+            csizes = (
+                emb.crossJoin(cents1)
+                .select(
+                    (-F.array_max(
+                        F.transform(
+                            F.col("__cents"),
+                            lambda ct: F.struct(
+                                F.try_divide(
+                                    S.dot(F.col("embedding"), ct["cvec"]),
+                                    S.norm(F.col("embedding")) * ct["cvn"],
+                                ).alias("cos"),
+                                (-ct["cell"]).alias("negcell"),
+                            ),
+                        )
+                    )["negcell"]).alias("cell")
+                )
+                .groupBy("cell").count()
             )
-            .groupBy("cell").count()
-        )
-        probes = (
-            queries.crossJoin(cents1)
-            .select(
-                F.col("vec_id").alias("qid"),
-                F.explode(
-                    F.slice(
-                        F.array_sort(
-                            F.transform(
-                                F.col("__cents"),
-                                lambda ct: F.struct(
-                                    (-F.try_divide(
-                                        S.dot(F.col("embedding"), ct["cvec"]),
-                                        S.norm(F.col("embedding")) * ct["cvn"],
-                                    )).alias("negcos"),
-                                    ct["cell"].alias("cell"),
-                                ),
-                            )
-                        ),
-                        1, 4,
-                    )
-                ).alias("pr"),
+            probes = (
+                queries.crossJoin(cents1)
+                .select(
+                    F.col("vec_id").alias("qid"),
+                    F.explode(
+                        F.slice(
+                            F.array_sort(
+                                F.transform(
+                                    F.col("__cents"),
+                                    lambda ct: F.struct(
+                                        (-F.try_divide(
+                                            S.dot(F.col("embedding"), ct["cvec"]),
+                                            S.norm(F.col("embedding")) * ct["cvn"],
+                                        )).alias("negcos"),
+                                        ct["cell"].alias("cell"),
+                                    ),
+                                )
+                            ),
+                            1, n_probe,
+                        )
+                    ).alias("pr"),
+                )
+                .select("qid", F.col("pr.cell").alias("cell"))
             )
-            .select("qid", F.col("pr.cell").alias("cell"))
-        )
-        probed_rows = (
-            probes.join(csizes, "cell").agg(F.sum("count")).head()[0]
-        )
-        out[f"ivfpin_x{factor}_probed_rows"] = float(probed_rows or 0)
+            probed_rows = (
+                probes.join(csizes, "cell").agg(F.sum("count")).head()[0]
+            )
+            out[f"ivfpin_x{factor}_probed_rows"] = float(probed_rows or 0)
 
-        fn = lambda: S.ivfpq_topk(emb, queries, k=5)  # noqa: E731
-        if not warmed:
-            fn().count()
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            nr = fn().count()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"ivfpin_ivfpq_x{factor}"] = round(best, 4)
-        out[f"ivfpin_ivfpq_x{factor}_out_rows"] = float(nr)
-        if progress is not None:
-            progress(f"ivfpin_ivfpq_x{factor}", best)
+            key = f"ivfpin_ivfpq_x{factor}"
+            _timed(spark, out, key,
+                   lambda: S.ivfpq_topk(emb, queries, k=5, n_probe=n_probe).count(),
+                   rows=f"{key}_out_rows", warm=factor == factors[0],
+                   progress=progress)
 
-        # build-once / probe-many split (r11 verdict #2): the one-shot
-        # wall above is encode-dominated; time the persisted build
-        # separately from the stored-index probe so the artifact shows
-        # what amortizing the encode buys a serving workload
-        from big_data_elt_pipeline_spark.operators import ann_index as AIX
-
-        idx = f"{stage_root}/index_x{factor}"
-        if not build_warmed:
-            # untimed warm-up build: the FIRST build in a session pays
-            # the lakehouse write path's codegen/footer costs — charged
-            # to the x-first point, it inverted the build trend (the r05
-            # x1 lesson applied to the write side)
-            AIX.build_ivfpq_index(emb, f"{stage_root}/index_warm")
-            shutil.rmtree(f"{stage_root}/index_warm", ignore_errors=True)
-            build_warmed = True
-        t0 = time.perf_counter()
-        AIX.build_ivfpq_index(emb, idx)
-        out[f"ivfpin_build_x{factor}"] = round(time.perf_counter() - t0, 4)
-        if progress is not None:
-            progress(f"ivfpin_build_x{factor}", out[f"ivfpin_build_x{factor}"])
-        pfn = lambda: AIX.ivfpq_probe(spark, idx, queries, k=5)  # noqa: E731
-        pfn().count()  # untimed warm-up: probe plan codegen + footers
-        pbest = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pn = pfn().count()
-            dt = time.perf_counter() - t0
-            if pbest is None or dt < pbest:
-                pbest = dt
-        out[f"ivfpin_probe_x{factor}"] = round(pbest, 4)
-        out[f"ivfpin_probe_x{factor}_out_rows"] = float(pn)
-        if progress is not None:
-            progress(f"ivfpin_probe_x{factor}", pbest)
-        shutil.rmtree(idx, ignore_errors=True)
-        warmed = True
-        shutil.rmtree(f"{stage_root}/emb_x{factor}", ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+            # build-once / probe-many split (r11 verdict #2): the one-shot
+            # wall above is encode-dominated; time the persisted build
+            # separately from the stored-index probe so the artifact shows
+            # what amortizing the encode buys a serving workload
+            idx = f"{root}/index"
+            if factor == factors[0]:
+                AIX.build_ivfpq_index(emb, f"{root}/index_warm")
+            _timed(spark, out, f"ivfpin_build_x{factor}",
+                   lambda: AIX.build_ivfpq_index(emb, idx), runs=1,
+                   progress=progress)
+            key = f"ivfpin_probe_x{factor}"
+            _timed(spark, out, key,
+                   lambda: AIX.ivfpq_probe(
+                       spark, idx, queries, k=5, n_probe=n_probe).count(),
+                   rows=f"{key}_out_rows", warm=True, progress=progress)
     return out
 
 
@@ -439,14 +375,7 @@ def bm25_scale_pin(
     terms match only base-copy documents — exactly the serving shape the
     claim needs: ad-hoc wall tracks the corpus, the stored-index probe
     tracks the CANDIDATES (flat), and kept-files/total-files shows the
-    pruning doing it.
-
-    Min-of-2 after one untimed warm-up at the first factor; the first
-    index build in the session is an untimed warm-up (lakehouse write
-    codegen/footer costs — the ivf_scale_pin lesson)."""
-    import shutil
-    import tempfile
-
+    pruning doing it."""
     from big_data_elt_pipeline_spark.operators import retrieval as RETR
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
@@ -465,64 +394,30 @@ def bm25_scale_pin(
     ]
 
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="bm25_scale_")
-    warmed = False
-    build_warmed = False
     for factor in factors:
-        scaled_docs(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/docs_x{factor}")
-        docs = spark.read.parquet(f"{stage_root}/docs_x{factor}").select(
-            "doc_id", "text"
-        )
-        out[f"bm25pin_x{factor}_rows"] = float(docs.count())
+        with _staged(spark, sf_dir, factor, "docs") as (root, docs):
+            docs = docs.select("doc_id", "text")
+            out[f"bm25pin_x{factor}_rows"] = float(docs.count())
+            key = f"bm25pin_adhoc_x{factor}"
+            _timed(spark, out, key,
+                   lambda: RETR.bm25_topk(docs, queries, k=10).count(),
+                   rows=f"{key}_out_rows", warm=factor == factors[0],
+                   progress=progress)
 
-        fn = lambda: RETR.bm25_topk(docs, queries, k=10)  # noqa: E731
-        if not warmed:
-            fn().count()
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            nr = fn().count()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"bm25pin_adhoc_x{factor}"] = round(best, 4)
-        out[f"bm25pin_adhoc_x{factor}_out_rows"] = float(nr)
-        if progress is not None:
-            progress(f"bm25pin_adhoc_x{factor}", best)
+            idx = f"{root}/index"
+            if factor == factors[0]:
+                TIX.build_text_index(docs, f"{root}/index_warm")
+            _timed(spark, out, f"bm25pin_build_x{factor}",
+                   lambda: TIX.build_text_index(docs, idx), runs=1,
+                   progress=progress)
+            kept, live = TIX.prune_term_files(f"{idx}/postings", qvocab)
+            out[f"bm25pin_x{factor}_kept_files"] = float(len(kept))
+            out[f"bm25pin_x{factor}_total_files"] = float(len(live))
 
-        idx = f"{stage_root}/index_x{factor}"
-        if not build_warmed:
-            TIX.build_text_index(docs, f"{stage_root}/index_warm")
-            shutil.rmtree(f"{stage_root}/index_warm", ignore_errors=True)
-            build_warmed = True
-        t0 = time.perf_counter()
-        TIX.build_text_index(docs, idx)
-        out[f"bm25pin_build_x{factor}"] = round(time.perf_counter() - t0, 4)
-        if progress is not None:
-            progress(f"bm25pin_build_x{factor}", out[f"bm25pin_build_x{factor}"])
-
-        kept, live = TIX.prune_term_files(f"{idx}/postings", qvocab)
-        out[f"bm25pin_x{factor}_kept_files"] = float(len(kept))
-        out[f"bm25pin_x{factor}_total_files"] = float(len(live))
-
-        pfn = lambda: TIX.bm25_index_probe(spark, idx, queries, k=10)  # noqa: E731
-        pfn().count()  # untimed warm-up: probe plan codegen + footers
-        pbest = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pn = pfn().count()
-            dt = time.perf_counter() - t0
-            if pbest is None or dt < pbest:
-                pbest = dt
-        out[f"bm25pin_probe_x{factor}"] = round(pbest, 4)
-        out[f"bm25pin_probe_x{factor}_out_rows"] = float(pn)
-        if progress is not None:
-            progress(f"bm25pin_probe_x{factor}", pbest)
-        shutil.rmtree(idx, ignore_errors=True)
-        warmed = True
-        shutil.rmtree(f"{stage_root}/docs_x{factor}", ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+            key = f"bm25pin_probe_x{factor}"
+            _timed(spark, out, key,
+                   lambda: TIX.bm25_index_probe(spark, idx, queries, k=10).count(),
+                   rows=f"{key}_out_rows", warm=True, progress=progress)
     return out
 
 
@@ -544,133 +439,85 @@ def hybrid_scale_pin(
     and two candidate-sized rankings — never the corpus text or the
     float vectors — so the wall tracks the (constant) query/candidate
     load while the ad-hoc twin tracks the corpus. Per factor the
-    artifact records both walls (min-of-2 after an untimed warm-up at
-    the first factor; both index builds are one-time costs recorded
-    separately), the fused output rows, and the file-skipping audits of
-    both legs (kept/total postings files by the probe vocabulary;
-    kept/total code files follow the IVFPIN probe shape and ride the
-    probe wall itself).
+    artifact records both walls (both index builds are one-time costs
+    recorded separately), the fused output rows, and the file-skipping
+    audits of both legs (kept/total postings files by the probe
+    vocabulary; kept/total code files follow the IVFPIN probe shape and
+    ride the probe wall itself).
 
     Queries are FIXED base-copy documents (8 <= doc_id < 16 — the gate
     query's ids): the salted doc copies and ±1-masked embedding copies
     grow the corpus while the probe load and its true answer set stay
     base-sized — the serving shape the claim needs.
     """
-    import shutil
-    import tempfile
-
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
     from big_data_elt_pipeline_spark.operators import retrieval as RETR
-    from big_data_elt_pipeline_spark.operators import similarity as SIM
     from big_data_elt_pipeline_spark.operators import text_index as TIX
     from big_data_elt_pipeline_spark.operators.retrieval import rrf_fuse
 
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="hybrid_scale_")
-    warmed = False
-    build_warmed = False
     for factor in factors:
-        scaled_docs(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/docs_x{factor}")
-        docs = spark.read.parquet(f"{stage_root}/docs_x{factor}").select(
-            "doc_id", "text"
-        )
-        scaled_embeddings(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/emb_x{factor}")
-        emb = spark.read.parquet(f"{stage_root}/emb_x{factor}")
-        out[f"hybridpin_x{factor}_rows"] = float(docs.count())
+        with _staged(spark, sf_dir, factor, "docs", "emb") as (root, docs, emb):
+            docs = docs.select("doc_id", "text")
+            out[f"hybridpin_x{factor}_rows"] = float(docs.count())
+            queries = docs.filter(
+                (F.col("doc_id") >= 8) & (F.col("doc_id") < 16)
+            ).select(
+                F.col("doc_id").alias("query_id"),
+                F.col("text").alias("query_text"),
+            ).localCheckpoint(eager=True)
+            vq = emb.filter(
+                (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
+            ).localCheckpoint(eager=True)
 
-        queries = docs.filter(
-            (F.col("doc_id") >= 8) & (F.col("doc_id") < 16)
-        ).select(
-            F.col("doc_id").alias("query_id"),
-            F.col("text").alias("query_text"),
-        ).localCheckpoint(eager=True)
-        vq = emb.filter(
-            (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
-        ).localCheckpoint(eager=True)
+            # ad-hoc twin: corpus tokenize + stats for the lexical leg, full
+            # corpus re-encode for the vector leg, fused — what serving pays
+            # per query batch WITHOUT the indexes
+            def adhoc():
+                lex = RETR.bm25_topk(docs, queries, k=50).filter(
+                    F.col("doc_id") != F.col("query_id")
+                )
+                vec = S.ivfpq_topk(emb, vq, k=50, n_probe=4).select(
+                    "query_id", F.col("vec_id").alias("doc_id"), "rank"
+                )
+                return rrf_fuse(lex, vec, k=10, c=60).count()
 
-        # ad-hoc twin: corpus tokenize + stats for the lexical leg, full
-        # corpus re-encode for the vector leg, fused — what serving pays
-        # per query batch WITHOUT the indexes
-        def adhoc():
-            lex = RETR.bm25_topk(docs, queries, k=50).filter(
-                F.col("doc_id") != F.col("query_id")
-            )
-            vec = SIM.ivfpq_topk(emb, vq, k=50, n_probe=4).select(
-                "query_id", F.col("vec_id").alias("doc_id"), "rank"
-            )
-            return rrf_fuse(lex, vec, k=10, c=60)
+            key = f"hybridpin_adhoc_x{factor}"
+            _timed(spark, out, key, adhoc, rows=f"{key}_out_rows",
+                   warm=factor == factors[0], progress=progress)
 
-        if not warmed:
-            adhoc().count()
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            nr = adhoc().count()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"hybridpin_adhoc_x{factor}"] = round(best, 4)
-        out[f"hybridpin_adhoc_x{factor}_out_rows"] = float(nr)
-        if progress is not None:
-            progress(f"hybridpin_adhoc_x{factor}", best)
+            # one-time builds (recorded, not part of the probe claim)
+            tix_idx, aix_idx = f"{root}/tix", f"{root}/aix"
+            if factor == factors[0]:
+                TIX.build_text_index(docs, f"{root}/tix_warm")
+            _timed(spark, out, f"hybridpin_text_build_x{factor}",
+                   lambda: TIX.build_text_index(docs, tix_idx), runs=1,
+                   progress=progress)
+            _timed(spark, out, f"hybridpin_ann_build_x{factor}",
+                   lambda: AIX.build_ivfpq_index(emb, aix_idx), runs=1,
+                   progress=progress)
 
-        # one-time builds (recorded, not part of the probe claim); the
-        # first build of the session is an untimed warm-up (lakehouse
-        # write codegen/footer costs — the ivf_scale_pin lesson)
-        tix_idx = f"{stage_root}/tix_x{factor}"
-        aix_idx = f"{stage_root}/aix_x{factor}"
-        if not build_warmed:
-            TIX.build_text_index(docs, f"{stage_root}/tix_warm")
-            shutil.rmtree(f"{stage_root}/tix_warm", ignore_errors=True)
-            build_warmed = True
-        t0 = time.perf_counter()
-        TIX.build_text_index(docs, tix_idx)
-        out[f"hybridpin_text_build_x{factor}"] = round(
-            time.perf_counter() - t0, 4
-        )
-        t0 = time.perf_counter()
-        AIX.build_ivfpq_index(emb, aix_idx)
-        out[f"hybridpin_ann_build_x{factor}"] = round(
-            time.perf_counter() - t0, 4
-        )
+            qvocab = [
+                r["term"]
+                for r in RETR.tokenize(queries, "query_id", "query_text")
+                .select("term").distinct().collect()
+            ]
+            kept, live = TIX.prune_term_files(f"{tix_idx}/postings", qvocab)
+            out[f"hybridpin_x{factor}_kept_files"] = float(len(kept))
+            out[f"hybridpin_x{factor}_total_files"] = float(len(live))
 
-        qvocab = [
-            r["term"]
-            for r in RETR.tokenize(queries, "query_id", "query_text")
-            .select("term").distinct().collect()
-        ]
-        kept, live = TIX.prune_term_files(f"{tix_idx}/postings", qvocab)
-        out[f"hybridpin_x{factor}_kept_files"] = float(len(kept))
-        out[f"hybridpin_x{factor}_total_files"] = float(len(live))
+            def fused():
+                lex = TIX.bm25_index_probe(spark, tix_idx, queries, k=50).filter(
+                    F.col("doc_id") != F.col("query_id")
+                )
+                vec = AIX.ivfpq_probe(
+                    spark, aix_idx, vq, k=50, n_probe=4
+                ).select("query_id", F.col("vec_id").alias("doc_id"), "rank")
+                return rrf_fuse(lex, vec, k=10, c=60).count()
 
-        def fused():
-            lex = TIX.bm25_index_probe(spark, tix_idx, queries, k=50).filter(
-                F.col("doc_id") != F.col("query_id")
-            )
-            vec = AIX.ivfpq_probe(
-                spark, aix_idx, vq, k=50, n_probe=4
-            ).select("query_id", F.col("vec_id").alias("doc_id"), "rank")
-            return rrf_fuse(lex, vec, k=10, c=60)
-
-        fused().count()  # untimed warm-up: probe plan codegen + footers
-        pbest = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            pn = fused().count()
-            dt = time.perf_counter() - t0
-            if pbest is None or dt < pbest:
-                pbest = dt
-        out[f"hybridpin_probe_x{factor}"] = round(pbest, 4)
-        out[f"hybridpin_probe_x{factor}_out_rows"] = float(pn)
-        if progress is not None:
-            progress(f"hybridpin_probe_x{factor}", pbest)
-        warmed = True
-        for d in (tix_idx, aix_idx, f"{stage_root}/docs_x{factor}",
-                  f"{stage_root}/emb_x{factor}"):
-            shutil.rmtree(d, ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+            key = f"hybridpin_probe_x{factor}"
+            _timed(spark, out, key, fused, rows=f"{key}_out_rows", warm=True,
+                   progress=progress)
     return out
 
 
@@ -694,148 +541,79 @@ def update_scale_pin(
     must not degrade the served plan; BM25PIN/IVFPIN pinned the same
     probes pre-mutation).
 
-    Measurement follows the pin discipline: ``.repartition(32)``
-    staging, the session's first lakehouse build untimed, one untimed
-    update + probe warm-up at the first factor, min-of-2 on every timed
-    point. Each timed update re-replaces the SAME 8 ids (identical
-    delta; generations advance, dead rows accumulate delta-sized — the
-    steady-state serving shape between compactions).
+    Each update re-replaces the SAME 8 ids (identical delta; generations
+    advance, dead rows accumulate delta-sized — the steady-state serving
+    shape between compactions). Updates and probes act on the factor's
+    fresh indexes, so both warm up at every factor: every index has taken
+    ``UPDATES_BEFORE_PROBE`` updates when its probe is timed.
     """
-    import shutil
-    import tempfile
-
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
+    queries = spark.createDataFrame(
+        [
+            ("u_join", "shuffle join broadcast table"),
+            ("u_scan", "parquet scan filter pushdown"),
+            ("u_window", "window partition order row"),
+        ],
+        "query_id string, query_text string",
+    )
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="update_scale_")
-    build_warmed = False
-    warmed = False
     for factor in factors:
-        scaled_docs(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/docs_x{factor}")
-        docs = spark.read.parquet(f"{stage_root}/docs_x{factor}").select(
-            "doc_id", "text"
-        )
-        scaled_embeddings(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/emb_x{factor}")
-        emb = spark.read.parquet(f"{stage_root}/emb_x{factor}")
-        out[f"updatepin_x{factor}_rows"] = float(docs.count())
+        with _staged(spark, sf_dir, factor, "docs", "emb") as (root, docs, emb):
+            docs = docs.select("doc_id", "text")
+            out[f"updatepin_x{factor}_rows"] = float(docs.count())
 
-        tix_idx = f"{stage_root}/tix_x{factor}"
-        aix_idx = f"{stage_root}/aix_x{factor}"
-        if not build_warmed:
-            TIX.build_text_index(docs, f"{stage_root}/tix_warm")
-            shutil.rmtree(f"{stage_root}/tix_warm", ignore_errors=True)
-            AIX.build_ivfpq_index(emb, f"{stage_root}/aix_warm")
-            shutil.rmtree(f"{stage_root}/aix_warm", ignore_errors=True)
-            build_warmed = True
-        t0 = time.perf_counter()
-        TIX.build_text_index(docs, tix_idx)
-        out[f"updatepin_text_build_x{factor}"] = round(
-            time.perf_counter() - t0, 4
-        )
-        t0 = time.perf_counter()
-        AIX.build_ivfpq_index(emb, aix_idx)
-        out[f"updatepin_ann_build_x{factor}"] = round(
-            time.perf_counter() - t0, 4
-        )
+            tix_idx, aix_idx = f"{root}/tix", f"{root}/aix"
+            if factor == factors[0]:
+                TIX.build_text_index(docs, f"{root}/tix_warm")
+                AIX.build_ivfpq_index(emb, f"{root}/aix_warm")
+            _timed(spark, out, f"updatepin_text_build_x{factor}",
+                   lambda: TIX.build_text_index(docs, tix_idx), runs=1,
+                   progress=progress)
+            _timed(spark, out, f"updatepin_ann_build_x{factor}",
+                   lambda: AIX.build_ivfpq_index(emb, aix_idx), runs=1,
+                   progress=progress)
 
-        # the FIXED revision batch: base-copy ids 8..16 rewritten /
-        # re-embedded — constant delta while the corpus scales
-        rev = docs.filter(
-            (F.col("doc_id") >= 8) & (F.col("doc_id") < 16)
-        ).select(
-            "doc_id",
-            F.concat(F.lit("revised pin edition "), F.col("text")).alias(
-                "text"
-            ),
-        ).localCheckpoint(eager=True)
-        vrev = emb.filter(
-            (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
-        ).select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: (-x).cast("float")
-            ).alias("embedding"),
-        ).localCheckpoint(eager=True)
+            # the FIXED revision batch: base-copy ids 8..16 rewritten /
+            # re-embedded — constant delta while the corpus scales
+            rev = docs.filter(
+                (F.col("doc_id") >= 8) & (F.col("doc_id") < 16)
+            ).select(
+                "doc_id",
+                F.concat(F.lit("revised pin edition "), F.col("text")).alias(
+                    "text"
+                ),
+            ).localCheckpoint(eager=True)
+            vq = emb.filter(
+                (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
+            ).localCheckpoint(eager=True)
+            vrev = vq.select(
+                "vec_id",
+                F.transform(
+                    "embedding", lambda x: (-x).cast("float")
+                ).alias("embedding"),
+            ).localCheckpoint(eager=True)
 
-        if not warmed:
-            TIX.update_text_documents(rev, tix_idx)
-            AIX.update_index_vectors(vrev, aix_idx)
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            r = TIX.update_text_documents(rev, tix_idx)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"updatepin_text_update_x{factor}"] = round(best, 4)
-        out[f"updatepin_x{factor}_text_n_updated"] = float(r["n_updated"])
-        if progress is not None:
-            progress(f"updatepin_text_update_x{factor}", best)
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            r = AIX.update_index_vectors(vrev, aix_idx)
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"updatepin_ann_update_x{factor}"] = round(best, 4)
-        out[f"updatepin_x{factor}_ann_n_updated"] = float(r["n_updated"])
-        if progress is not None:
-            progress(f"updatepin_ann_update_x{factor}", best)
+            _timed(spark, out, f"updatepin_text_update_x{factor}",
+                   lambda: TIX.update_text_documents(rev, tix_idx)["n_updated"],
+                   rows=f"updatepin_x{factor}_text_n_updated", warm=True,
+                   progress=progress)
+            _timed(spark, out, f"updatepin_ann_update_x{factor}",
+                   lambda: AIX.update_index_vectors(vrev, aix_idx)["n_updated"],
+                   rows=f"updatepin_x{factor}_ann_n_updated", warm=True,
+                   progress=progress)
 
-        # probe-after-update: the served plans over the mutated indexes
-        queries = spark.createDataFrame(
-            [
-                ("u_join", "shuffle join broadcast table"),
-                ("u_scan", "parquet scan filter pushdown"),
-                ("u_window", "window partition order row"),
-            ],
-            "query_id string, query_text string",
-        )
-        vq = emb.filter(
-            (F.col("vec_id") >= 8) & (F.col("vec_id") < 16)
-        ).localCheckpoint(eager=True)
-
-        def text_probe():
-            return TIX.bm25_index_probe(spark, tix_idx, queries, k=10)
-
-        def ann_probe():
-            return AIX.ivfpq_probe(spark, aix_idx, vq, k=10, n_probe=4)
-
-        if not warmed:
-            text_probe().count()
-            ann_probe().count()
-            warmed = True
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            nr = text_probe().count()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"updatepin_text_probe_x{factor}"] = round(best, 4)
-        out[f"updatepin_text_probe_x{factor}_out_rows"] = float(nr)
-        if progress is not None:
-            progress(f"updatepin_text_probe_x{factor}", best)
-        best = None
-        for _ in range(2):
-            t0 = time.perf_counter()
-            nr = ann_probe().count()
-            dt = time.perf_counter() - t0
-            if best is None or dt < best:
-                best = dt
-        out[f"updatepin_ann_probe_x{factor}"] = round(best, 4)
-        out[f"updatepin_ann_probe_x{factor}_out_rows"] = float(nr)
-        if progress is not None:
-            progress(f"updatepin_ann_probe_x{factor}", best)
-
-        for d in (tix_idx, aix_idx, f"{stage_root}/docs_x{factor}",
-                  f"{stage_root}/emb_x{factor}"):
-            shutil.rmtree(d, ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+            # probe-after-update: the served plans over the mutated indexes
+            key = f"updatepin_text_probe_x{factor}"
+            _timed(spark, out, key,
+                   lambda: TIX.bm25_index_probe(spark, tix_idx, queries, k=10).count(),
+                   rows=f"{key}_out_rows", warm=True, progress=progress)
+            key = f"updatepin_ann_probe_x{factor}"
+            _timed(spark, out, key,
+                   lambda: AIX.ivfpq_probe(
+                       spark, aix_idx, vq, k=10, n_probe=4).count(),
+                   rows=f"{key}_out_rows", warm=True, progress=progress)
     return out
 
 
@@ -853,60 +631,40 @@ def loader_scale_pin(
 
     Per factor the artifact records the corpus rows, the wall for
     token-level sequence packing and for the two-epoch deterministic
-    order (min-of-2 after one untimed warm-up at the first factor), the
-    output rows (packing fan-out is ~n_tokens/seq_len-bounded; epoch
-    order is exactly 2n), and the AUDIT: the number of distinct hash
-    buckets feeding the global offset window — the fan-in of the one
+    order, the output rows (packing fan-out is ~n_tokens/seq_len-bounded;
+    epoch order is exactly 2n), and the AUDIT: the number of distinct
+    hash buckets feeding the global offset window — the fan-in of the one
     non-distributed step, which must stay <= 256 at any corpus size
     (that constant is the whole scale argument)."""
-    import shutil
-    import tempfile
-
     from big_data_elt_pipeline_spark.operators import sharding as SH
 
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="loader_scale_")
-    warmed = False
     for factor in factors:
-        scaled_docs(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/docs_x{factor}")
-        docs = spark.read.parquet(f"{stage_root}/docs_x{factor}")
-        out[f"loaderpin_x{factor}_rows"] = float(docs.count())
+        with _staged(spark, sf_dir, factor, "docs") as (_, docs):
+            out[f"loaderpin_x{factor}_rows"] = float(docs.count())
 
-        # AUDIT outside the timers: fan-in of the single global window
-        okey = F.md5(F.col("doc_id").cast("string"))
-        nbkt = (
-            docs.select(
-                F.conv(F.substring(okey, 1, 2), 16, 10).cast("int").alias("b")
+            # AUDIT outside the timers: fan-in of the single global window
+            okey = F.md5(F.col("doc_id").cast("string"))
+            nbkt = (
+                docs.select(
+                    F.conv(F.substring(okey, 1, 2), 16, 10).cast("int").alias("b")
+                )
+                .agg(F.count_distinct("b"))
+                .head()[0]
             )
-            .agg(F.count_distinct("b"))
-            .head()[0]
-        )
-        out[f"loaderpin_x{factor}_window_rows"] = float(nbkt)
+            out[f"loaderpin_x{factor}_window_rows"] = float(nbkt)
 
-        runs = {
-            "pack": lambda: SH.pack_training_sequences(docs, seq_len=256),
-            "epoch": lambda: SH.epoch_order(
-                docs.select("doc_id"), 0
-            ).unionByName(SH.epoch_order(docs.select("doc_id"), 1)),
-        }
-        for name, fn in runs.items():
-            if not warmed:
-                fn().count()
-            best, n = None, 0
-            for _ in range(2):
-                t0 = time.perf_counter()
-                n = fn().count()
-                dt = time.perf_counter() - t0
-                if best is None or dt < best:
-                    best = dt
-            out[f"loaderpin_{name}_x{factor}"] = round(best, 4)
-            out[f"loaderpin_{name}_x{factor}_out_rows"] = float(n)
-            if progress is not None:
-                progress(f"loaderpin_{name}_x{factor}", best)
-        warmed = True
-        shutil.rmtree(f"{stage_root}/docs_x{factor}", ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
+            runs = {
+                "pack": lambda: SH.pack_training_sequences(docs, seq_len=256),
+                "epoch": lambda: SH.epoch_order(
+                    docs.select("doc_id"), 0
+                ).unionByName(SH.epoch_order(docs.select("doc_id"), 1)),
+            }
+            for name, fn in runs.items():
+                key = f"loaderpin_{name}_x{factor}"
+                _timed(spark, out, key, lambda: fn().count(),
+                       rows=f"{key}_out_rows", warm=factor == factors[0],
+                       progress=progress)
     return out
 
 
@@ -959,11 +717,11 @@ def run_scaled(
     budget's shed hook (r8 verdict #1: expensive trailing factors drop
     first when wall-clock runs short; a skipped factor simply has no
     ``scale_*_x{f}`` keys in the result)."""
-    import shutil
-    import tempfile
+    from big_data_elt_pipeline_spark.plans.curation_queries import (
+        governance_mixture,
+    )
 
     out: dict[str, float] = {}
-    stage_root = tempfile.mkdtemp(prefix="scale_corpus_")
     warmed = False
     for factor in tuple(factors) + tuple(single_shot):
         if should_run is not None and not should_run(factor):
@@ -973,86 +731,36 @@ def run_scaled(
         if fresh_session:
             spark.stop()
             spark = session_factory()
-        # MATERIALIZE the xK corpus once per factor (setup, untimed): the
-        # derived form re-ran the per-copy salting inside every consumer
-        # pass of every operator — multi-pass operators (the governance
-        # composite re-reads the corpus ~6x) were charged Kx corpus
-        # construction instead of their own work, and the charge grew
-        # superlinearly with K (column-replacement regexp is ~3x a literal
-        # one). A stored corpus is also the realistic shape: real dedup
-        # reads parquet, it does not re-synthesize its input per stage.
-        # repartition(32): both scaled frames inherit 1-2 input splits
-        # from the tiny base tables — a 1-2-file stage runs the timed
-        # passes nearly single-core (staging itself stays untimed)
-        scaled_docs(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/docs_x{factor}")
-        scaled_embeddings(spark, sf_dir, factor).repartition(32).write.mode(
-            "overwrite").parquet(f"{stage_root}/emb_x{factor}")
-        docs = spark.read.parquet(f"{stage_root}/docs_x{factor}")
-        emb = spark.read.parquet(f"{stage_root}/emb_x{factor}")
-        queries = emb.filter(F.col("vec_id") < 64)  # base copy only: fixed probes
-        if fresh_session:
-            # untimed warm-up on the swapped-in session: without it the
-            # single-shot is measured fully cold (session startup, codegen
-            # compilation, parquet footers) — the exact artifact that
-            # inverted the r05 x1 points
-            docs.count()
-            emb.count()
-        from big_data_elt_pipeline_spark.plans.curation_queries import (
-            governance_mixture,
-        )
-
-        runs = {
-            "dedup_minhash": lambda: D.minhash_dedup(docs),
-            # x64 runs the range-partitioned candidate passes (R=4): the
-            # unsplit join is allocator-bound at 27M shingles in one JVM
-            # (measured 205 s -> 155 s; R=8 and a checkpointed prefix both
-            # measured WORSE — numbers in the operator's comment)
-            "dedup_ngram_jaccard": lambda: D.ngram_jaccard_dedup(
-                docs, candidate_passes=4 if factor >= 64 else 1
-            ),
-            "dedup_winnow": lambda: D.winnow_neardup(docs, threshold=0.4),
-            # per-copy word salt => no window ever matches across copies:
-            # repeated spans (and the window shuffle) grow exactly xK
-            "dedup_substrings": lambda: D.substring_dedup(docs),
-            # pairs -> components: the salted copies keep each base pair
-            # inside its copy, so cluster count grows ~linearly too
-            "dedup_clusters": lambda: D.neardup_clusters(
-                D.minhash_dedup(docs).select("id1", "id2")
-            ),
-            "ann_lsh_topk": lambda: S.lsh_topk(emb, queries, k=5, n_bits=8),
-            "training_mixture": lambda: governance_mixture(docs),
-        }
-        # every run frees whatever checkpoint blocks it pinned once its
-        # count is materialized (the cluster-resolution runs keep their
-        # final labels checkpoint alive otherwise — across the ~40 runs of
-        # this exhibit the accumulation measurably slowed later factors)
-        jsc = spark.sparkContext._jsc
-
-        def _pinned() -> set:
-            return set(jsc.getPersistentRDDs().keySet().toArray())
-
-        for name, fn in runs.items():
-            base_ids = _pinned()
-            if not warmed:
-                fn().count()  # untimed warm-up: codegen + footers off the clock
-            best, n = None, 0
-            for _ in range(1 if one_shot else 2):
-                t0 = time.perf_counter()
-                n = fn().count()
-                dt = time.perf_counter() - t0
-                best = dt if best is None or dt < best else best
-            reg = jsc.getPersistentRDDs()
-            for rid in _pinned() - base_ids:
-                rdd = reg.get(rid)
-                if rdd is not None:
-                    rdd.unpersist(False)
-            out[f"scale_{name}_x{factor}"] = round(best, 4)
-            out[f"scale_{name}_x{factor}_rows"] = float(n)
-            if progress is not None:
-                progress(f"scale_{name}_x{factor}", out[f"scale_{name}_x{factor}"])
+        with _staged(spark, sf_dir, factor, "docs", "emb") as (_, docs, emb):
+            queries = emb.filter(F.col("vec_id") < 64)  # base copy only: fixed probes
+            if fresh_session:
+                docs.count()
+                emb.count()
+            runs = {
+                "dedup_minhash": lambda: D.minhash_dedup(docs),
+                # x64 runs the range-partitioned candidate passes (R=4): the
+                # unsplit join is allocator-bound at 27M shingles in one JVM
+                # (measured 205 s -> 155 s; R=8 and a checkpointed prefix
+                # both measured WORSE — numbers in the operator's comment)
+                "dedup_ngram_jaccard": lambda: D.ngram_jaccard_dedup(
+                    docs, candidate_passes=4 if factor >= 64 else 1
+                ),
+                "dedup_winnow": lambda: D.winnow_neardup(docs, threshold=0.4),
+                # per-copy word salt => no window ever matches across copies:
+                # repeated spans (and the window shuffle) grow exactly xK
+                "dedup_substrings": lambda: D.substring_dedup(docs),
+                # pairs -> components: the salted copies keep each base pair
+                # inside its copy, so cluster count grows ~linearly too
+                "dedup_clusters": lambda: D.neardup_clusters(
+                    D.minhash_dedup(docs).select("id1", "id2")
+                ),
+                "ann_lsh_topk": lambda: S.lsh_topk(emb, queries, k=5, n_bits=8),
+                "training_mixture": lambda: governance_mixture(docs),
+            }
+            for name, fn in runs.items():
+                key = f"scale_{name}_x{factor}"
+                _timed(spark, out, key, lambda: fn().count(), rows=f"{key}_rows",
+                       warm=not warmed, runs=1 if one_shot else _RUNS,
+                       progress=progress)
         warmed = True
-        shutil.rmtree(f"{stage_root}/docs_x{factor}", ignore_errors=True)
-        shutil.rmtree(f"{stage_root}/emb_x{factor}", ignore_errors=True)
-    shutil.rmtree(stage_root, ignore_errors=True)
     return out, spark

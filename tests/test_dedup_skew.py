@@ -5,9 +5,24 @@ boilerplate, the shape that serializes the window form into a single
 task) — and invariant under input partitioning."""
 
 import pandas as pd
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.operators import dedup as D
+
+
+def _window_form(wins):
+    """The REJECTED survivor-selection shape (pre-r8), kept here as the
+    reference the shipped form is compared against: a rank-1 window
+    partitioned by content hash. A window partition is sorted whole
+    inside one task, so a boilerplate hash repeated millions of times
+    serializes the corpus-sized shuffle into a single straggler."""
+    worder = Window.partitionBy("h").orderBy("doc_id", "off")
+    return (
+        wins.withColumn("rn", F.row_number().over(worder))
+        .filter(F.col("rn") > 1)
+        .select("doc_id", "off")
+    )
 
 
 def _hot_docs(spark, n_docs=900, n_tokens=131):
@@ -46,7 +61,7 @@ def _sorted(df):
 def test_agg_form_equals_window_form_hot_key(spark):
     wins = D.window_table(_hot_docs(spark), "doc_id", "text", 16, 1)
     agg = _sorted(D._non_survivor_windows(wins))
-    win = _sorted(D._non_survivor_windows_window_form(wins))
+    win = _sorted(_window_form(wins))
     assert len(agg) == 900 * (131 - 15) - 1  # all but the one survivor
     pd.testing.assert_frame_equal(agg, win)
 
@@ -54,7 +69,7 @@ def test_agg_form_equals_window_form_hot_key(spark):
 def test_agg_form_equals_window_form_mixed(spark):
     wins = D.window_table(_mixed_docs(spark), "doc_id", "text", 16, 1)
     agg = _sorted(D._non_survivor_windows(wins))
-    win = _sorted(D._non_survivor_windows_window_form(wins))
+    win = _sorted(_window_form(wins))
     assert len(agg) > 0
     pd.testing.assert_frame_equal(agg, win)
 
