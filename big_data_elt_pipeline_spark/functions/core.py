@@ -121,3 +121,27 @@ def round2(col: Column | str, alias: str | None = None) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     out = F.round(c, 2)
     return out.alias(alias) if alias else out
+
+
+def ordered_md5(*fields: str) -> Column:
+    """Aggregate: md5 over a group's rows in sorted ``fields`` order, each
+    row spelled as its fields joined by ``:`` and the rows joined by
+    ``,``. The index audits' order-independent content hash; their SQL
+    oracles spell the identical string."""
+    return F.md5(
+        F.concat_ws(
+            ",",
+            F.transform(
+                F.sort_array(F.collect_list(F.struct(*fields))),
+                lambda s: F.concat_ws(
+                    ":", *[s[f].cast("string") for f in fields]
+                ),
+            ),
+        )
+    )
+
+
+def count_sum(col: Column | str) -> Column:
+    """SUM of a count column as a long that is 0, not NULL, over no rows."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.coalesce(F.sum(c), F.lit(0)).cast("long")

@@ -25,16 +25,10 @@ index, and rebuilds are time-travelable):
   let a probe skip whole files for the cells it does not touch
   (lakehouse data skipping — partition-style pruning without a physical
   partition column). ``gen`` is the batch's write generation
-  (deterministic under the single-writer contract) — what makes
-  tombstones generation-scoped.
-- ``{path}/tombstones`` — (vec_id, upto_gen) logical deletes
-  (``delete_from_index``): a tombstone kills code rows of that vec_id
-  with ``gen <= upto_gen`` ONLY (Lucene's segment-scoped deletes), so
-  re-appending an updated vector coexists with its own tombstone — the
-  delete+append update shape (``update_index_vectors``) works WITHOUT
-  an intervening compaction. Broadcast-anti-joined at probe time and
-  folded physically by ``compact_index`` (the Delta deletion-vector
-  shape). Dimension-sized between compactions by documented contract.
+  (deterministic under the single-writer contract).
+- ``{path}/tombstones`` — (vec_id, upto_gen) logical deletes, folded
+  physically by ``compact_index``; format and generation rules in
+  ``operators/tombstones``.
 
 Determinism: the build stage IS ``similarity.ivfpq_encode_relations``
 and the probe IS ``similarity.ivfpq_adc_scan`` — the same two relations
@@ -69,7 +63,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import lakehouse as LH
+from big_data_elt_pipeline_spark.functions.core import count_sum, ordered_md5
 from big_data_elt_pipeline_spark.operators import similarity as SIM
+from big_data_elt_pipeline_spark.operators import tombstones as TS
 
 # target rows per audit hash chunk: the largest collect_list in
 # ``index_audit`` is bounded by ~this constant regardless of corpus size
@@ -109,43 +105,11 @@ def _stamp_gen(encoded: DataFrame, gen: int) -> DataFrame:
     return encoded.withColumn("gen", F.lit(gen).cast("long"))
 
 
-def _live_tombstones(
-    spark: SparkSession, path: str, version: int | None
-) -> DataFrame | None:
-    """The (vec_id, upto_gen) tombstone relation at the state-recorded
-    version, or None when the state records -1 (no unfolded delete)."""
-    if version is None or version < 0:
-        return None
-    if not LH.table_versions(f"{path}/tombstones"):
-        return None
-    return LH.read_table(spark, f"{path}/tombstones", version)
-
-
-def _anti_tombstones(codes: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Generation-scoped tombstone fold: drop code rows whose vec_id is
-    tombstoned AT OR BELOW the row's generation — rows a later
-    append/update re-added survive (the Lucene segment-scoped delete
-    semantics)."""
-    if tomb is None:
-        return codes
-    t = F.broadcast(
-        tomb.select(
-            F.col("vec_id").alias("__t_vec"),
-            F.col("upto_gen").alias("__t_upto"),
-        )
-    )
-    return codes.join(
-        t,
-        (F.col("vec_id") == F.col("__t_vec"))
-        & (F.col("gen") <= F.col("__t_upto")),
-        "left_anti",
-    )
-
-
-def _truncate_tombstones(spark: SparkSession, path: str) -> None:
-    if LH.table_versions(f"{path}/tombstones"):
-        empty = LH.read_table(spark, f"{path}/tombstones").limit(0)
-        LH.write_table(empty, f"{path}/tombstones", mode="overwrite")
+def _live_codes(spark: SparkSession, path: str, p: dict) -> DataFrame:
+    """The codes the state row ``p`` publishes, dead generations dropped."""
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
+    codes = LH.read_table(spark, f"{path}/codes", p["codes_version"])
+    return TS.anti(codes, tomb, "vec_id")
 
 
 def build_ivfpq_index(
@@ -186,16 +150,12 @@ def build_ivfpq_index(
     encoded, cells, books = SIM.ivfpq_encode_relations(
         corpus, n_cells, m, dsub, n_cents, id_col, vec_col
     )
-    # rebuild rows must outrank every tombstone a previous generation
-    # could have pinned (the truncate below also clears them; the stamp
-    # keeps generation monotone even across the rebuild)
-    prior = LH.table_versions(f"{path}/codes")
-    gen = (prior[-1] + 1) if prior else 0
+    gen = TS.next_gen(f"{path}/codes")
     codes_version = LH.write_table(
         _stamp_gen(encoded, gen), f"{path}/codes", mode="overwrite",
         cluster_by=["cell"], n_files=n_files,
     )
-    _truncate_tombstones(spark, path)
+    TS.truncate(spark, path)
     p = {"n_cells": n_cells, "m": m, "dsub": dsub, "n_cents": n_cents}
     state_version = _publish_state(cells, books, p, path, n, codes_version)
     return {
@@ -204,6 +164,38 @@ def build_ivfpq_index(
         "codes_version": codes_version,
         "state_version": state_version,
     }
+
+
+def _recount_live_and_repair(
+    spark: SparkSession, path: str, cells: DataFrame, books: DataFrame,
+    p: dict,
+) -> dict:
+    """The rare-path replay repair: the original attempt may have crashed
+    between its data commits and the state re-publish, so recount
+    n_vectors from the LIVE codes at their latest version (the latest
+    tombstone snapshot anti-joined — a replay arriving after a delete
+    never re-counts tombstoned vectors) and re-publish state iff it
+    drifted from ``p``. Under the single-writer contract the latest
+    tombstones are the ones ``p`` pins unless a crash stranded a newer
+    commit, which the repair then publishes. Returns the repair dict, or
+    ``{"skipped": True}`` when the stored state already matches."""
+    latest = LH.table_versions(f"{path}/codes")[-1]
+    tomb, latest_tomb = TS.latest(spark, path)
+    true_n = (
+        TS.anti(LH.read_table(spark, f"{path}/codes"), tomb, "vec_id")
+        .select("vec_id").distinct().count()
+    )
+    if (
+        true_n != p["n_vectors"]
+        or p["codes_version"] != latest
+        or p["tombstones_version"] != latest_tomb
+    ):
+        sv = _publish_state(cells, books, p, path, true_n, latest, latest_tomb)
+        return {
+            "skipped": True, "repaired": True,
+            "n_vectors": true_n, "state_version": sv,
+        }
+    return {"skipped": True}
 
 
 def append_to_index(
@@ -230,12 +222,10 @@ def append_to_index(
     returns ``{"skipped": True}`` but still CONVERGES state: if the
     original attempt crashed after the codes append and before the
     state re-publish, the replay recounts n_vectors from the LIVE codes
-    — the state-pinned tombstones anti-joined, generation-scoped, so a
-    replay arriving after a delete never re-counts tombstoned vectors —
     and re-publishes the state row pointing at the latest codes commit
-    (the recount is a distinct-count over the few-byte codes relation —
-    paid only on the rare replay path, never on the normal ingest
-    path).
+    (``_recount_live_and_repair`` — a distinct-count over the few-byte
+    codes relation, paid only on the rare replay path, never on the
+    normal ingest path).
 
     Snapshot note: default (unpinned) readers resolve codes at the
     version the state row references, so the appended vectors become
@@ -261,31 +251,11 @@ def append_to_index(
         cluster_by=["cell"], n_files=n_files, txn=txn,
     )
     if codes_version == -1:
-        # replayed txn: this epoch's codes are already committed, but the
-        # original attempt may have crashed between the codes append and
-        # the state re-publish — converge state from a LIVE codes count
-        # instead of returning early with n_vectors permanently
-        # understated (the crash+replay repair the txn protocol implies)
-        latest = LH.table_versions(f"{path}/codes")[-1]
-        tomb = _live_tombstones(spark, path, p.get("tombstones_version", -1))
-        true_n = (
-            _anti_tombstones(LH.read_table(spark, f"{path}/codes"), tomb)
-            .select("vec_id").distinct().count()
-        )
-        if true_n != p["n_vectors"] or p["codes_version"] != latest:
-            state_version = _publish_state(
-                cells, books, p, path, true_n, latest,
-                p.get("tombstones_version", -1),
-            )
-            return {
-                "skipped": True, "repaired": True,
-                "n_vectors": true_n, "state_version": state_version,
-            }
-        return {"skipped": True}
+        return _recount_live_and_repair(spark, path, cells, books, p)
     n_delta = delta.count()
     state_version = _publish_state(
         cells, books, p, path, p["n_vectors"] + n_delta, codes_version,
-        p.get("tombstones_version", -1),
+        p["tombstones_version"],
     )
     return {
         "n_vectors": p["n_vectors"] + n_delta,
@@ -355,7 +325,7 @@ def ivfpq_probe(
     if codes_version is None:
         codes_version = p["codes_version"]
     if tombstones_version is None:
-        tombstones_version = p.get("tombstones_version", -1)
+        tombstones_version = p["tombstones_version"]
 
     # probed-cell hull: same ranked-slice expression as the scan's probe
     # side, reduced to ONE row holding the distinct cell set
@@ -416,8 +386,8 @@ def ivfpq_probe(
         # schema without scanning the full snapshot (the best pruning
         # outcome must not degenerate to a whole-table scan).
         codes = LH.read_table(spark, codes_path, codes_version).limit(0)
-    tomb = _live_tombstones(spark, path, tombstones_version)
-    codes = _anti_tombstones(codes, tomb)
+    tomb = TS.pinned(spark, path, tombstones_version)
+    codes = TS.anti(codes, tomb, "vec_id")
     return SIM.ivfpq_adc_scan(
         codes, cells, books, queries, k, n_probe, p["m"], p["dsub"],
         id_col, vec_col, query_id_col,
@@ -533,31 +503,18 @@ def delete_from_index(
     """
     spark = ids.sparkSession
     cells, books, p = load_index_state(spark, path)
-    requested = ids.select(
-        F.col(id_col).cast("long").alias("vec_id")
-    ).distinct()
-    n_requested = requested.count()
-    tomb = _live_tombstones(spark, path, p.get("tombstones_version", -1))
-    live = _anti_tombstones(
-        LH.read_table(spark, f"{path}/codes", p["codes_version"]), tomb
+    victims, n_del, n_ignored = TS.split(
+        ids, id_col, _live_codes(spark, path, p), "vec_id"
     )
-    victims = requested.join(live, "vec_id", "left_semi")
-    n_del = victims.count()
     if n_del == 0:
-        return {"n_deleted": 0, "n_ignored": n_requested}
-    upto = p["codes_version"]  # >= every live row's generation
-    tomb_rows = victims.select(
-        "vec_id", F.lit(upto).cast("long").alias("upto_gen")
-    )
-    v = LH.write_table(tomb_rows, f"{path}/tombstones", mode="append", txn=txn)
-    if v == -1:
-        v = LH.table_versions(f"{path}/tombstones")[-1]
+        return {"n_deleted": 0, "n_ignored": n_ignored}
+    v, _ = TS.append(victims, path, "vec_id", p["codes_version"], txn)
     state_version = _publish_state(
         cells, books, p, path, p["n_vectors"] - n_del, p["codes_version"], v
     )
     return {
         "n_deleted": n_del,
-        "n_ignored": n_requested - n_del,
+        "n_ignored": n_ignored,
         "n_vectors": p["n_vectors"] - n_del,
         "tombstones_version": v,
         "state_version": state_version,
@@ -589,78 +546,24 @@ def update_index_vectors(
     """
     spark = delta.sparkSession
     cells, books, p = load_index_state(spark, path)
-    gen = p["codes_version"] + 1
-    upto = p["codes_version"]
-    tomb = _live_tombstones(spark, path, p.get("tombstones_version", -1))
-    live = _anti_tombstones(
-        LH.read_table(spark, f"{path}/codes", p["codes_version"]), tomb
+    victims, n_updated, n_inserted = TS.split(
+        delta, id_col, _live_codes(spark, path, p), "vec_id"
     )
-    batch_ids = delta.select(
-        F.col(id_col).cast("long").alias("vec_id")
-    ).distinct().localCheckpoint(eager=True)
-    victims = batch_ids.join(live, "vec_id", "left_semi").localCheckpoint(
-        eager=True
-    )
-    n_updated = victims.count()
-    n_inserted = batch_ids.count() - n_updated
-
     encoded = SIM.ivfpq_encode_with_state(
         delta, cells, books, p["m"], p["dsub"], id_col, vec_col
     )
     codes_version = LH.write_table(
-        _stamp_gen(encoded, gen), f"{path}/codes", mode="append",
-        cluster_by=["cell"], n_files=n_files, txn=txn,
+        _stamp_gen(encoded, p["codes_version"] + 1), f"{path}/codes",
+        mode="append", cluster_by=["cell"], n_files=n_files, txn=txn,
     )
-    # under a txn the tombstone commit is UNCONDITIONAL (empty victims
-    # frame for a pure-insert batch): the replay of a completed epoch —
-    # whose vec_ids are live by then — must txn-skip here, not commit a
-    # fresh tombstone batch that kills them. The state row still records
-    # the PRIOR tombstone version for a pure-insert batch (the empty
-    # commit exists only for the txn log).
-    wrote_tomb = n_updated > 0 or txn is not None
-    tomb_commit = None
-    if wrote_tomb:
-        tomb_rows = victims.select(
-            "vec_id", F.lit(upto).cast("long").alias("upto_gen")
-        )
-        tomb_commit = LH.write_table(
-            tomb_rows, f"{path}/tombstones", mode="append", txn=txn
-        )
-    replayed = codes_version == -1 and (not wrote_tomb or tomb_commit == -1)
-    if replayed:
-        # full replay: converge state from the LIVE relations at latest
-        latest = LH.table_versions(f"{path}/codes")[-1]
-        tv = LH.table_versions(f"{path}/tombstones")
-        latest_tomb = tv[-1] if tv else -1
-        lt = _live_tombstones(spark, path, latest_tomb)
-        if lt is not None and lt.limit(1).count() == 0:
-            lt, latest_tomb = None, -1
-        true_n = (
-            _anti_tombstones(LH.read_table(spark, f"{path}/codes"), lt)
-            .select("vec_id").distinct().count()
-        )
-        if (
-            true_n != p["n_vectors"]
-            or p["codes_version"] != latest
-            or p.get("tombstones_version", -1) != latest_tomb
-        ):
-            sv = _publish_state(
-                cells, books, p, path, true_n, latest, latest_tomb
-            )
-            return {
-                "skipped": True, "repaired": True,
-                "n_vectors": true_n, "state_version": sv,
-            }
-        return {"skipped": True}
+    tomb_version, fresh_tomb = TS.append_upsert(
+        victims, path, "vec_id", p["codes_version"], n_updated,
+        p["tombstones_version"], txn,
+    )
+    if codes_version == -1 and not fresh_tomb:
+        return _recount_live_and_repair(spark, path, cells, books, p)
     if codes_version == -1:
         codes_version = LH.table_versions(f"{path}/codes")[-1]
-    tomb_version = p.get("tombstones_version", -1)
-    if n_updated > 0:
-        tomb_version = (
-            tomb_commit
-            if tomb_commit is not None and tomb_commit != -1
-            else LH.table_versions(f"{path}/tombstones")[-1]
-        )
     n_vectors = p["n_vectors"] + n_inserted
     state_version = _publish_state(
         cells, books, p, path, n_vectors, codes_version, tomb_version
@@ -702,9 +605,9 @@ def compact_index(
     the deletion (hash over the surviving codes only)."""
     cells, books, p = load_index_state(spark, path)
     codes = LH.read_table(spark, f"{path}/codes", p["codes_version"])
-    tomb = _live_tombstones(spark, path, p.get("tombstones_version", -1))
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
     if tomb is not None:
-        codes = _anti_tombstones(codes, tomb)
+        codes = TS.anti(codes, tomb, "vec_id")
         # folding deletes changes the physical row set — recount exactly
         # from the surviving codes (one agg over the already-materializing
         # rewrite input; should equal the state count delete maintains)
@@ -719,7 +622,7 @@ def compact_index(
         cells, books, p, path, n_vectors, codes_version, -1
     )
     if tomb is not None:
-        _truncate_tombstones(spark, path)
+        TS.truncate(spark, path)
     return {
         "codes_version": codes_version,
         "state_version": state_version,
@@ -827,68 +730,30 @@ def index_audit(
         codes_version = p["codes_version"]
     denom = max(1, p["n_cells"] * chunk_target)
     n_chunks = max(1, (p["n_vectors"] + denom - 1) // denom)
-    tomb = _live_tombstones(spark, path, p.get("tombstones_version", -1))
-    n_tombstones = 0
-    if tomb is not None:
-        n_tombstones = tomb.select("vec_id").distinct().count()
-    codes = _anti_tombstones(
-        LH.read_table(spark, f"{path}/codes", codes_version), tomb
-    )
-    row_fold = F.md5(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("vec_id", "j", "code"))
-                ),
-                lambda s: F.concat_ws(
-                    ":",
-                    s["vec_id"].cast("string"),
-                    s["j"].cast("string"),
-                    s["code"].cast("string"),
-                ),
-            ),
-        )
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
+    n_tombstones = TS.n_ids(tomb, "vec_id")
+    codes = TS.anti(
+        LH.read_table(spark, f"{path}/codes", codes_version), tomb, "vec_id"
     )
     per_chunk = codes.groupBy(
         "cell", F.pmod(F.col("vec_id"), F.lit(n_chunks)).alias("chunk")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.count_distinct(F.col("vec_id")).cast("long").alias("n_vecs"),
-        row_fold.alias("h"),
+        ordered_md5("vec_id", "j", "code").alias("h"),
     )
     per_cell = per_chunk.groupBy("cell").agg(
         F.sum("n_rows").cast("long").alias("n_rows"),
         # a vector's m rows share vec_id, hence one chunk: per-chunk
         # distinct counts partition the cell's distinct count exactly
         F.sum("n_vecs").cast("long").alias("n_vecs"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("chunk", "h"))),
-                    lambda s: F.concat_ws(
-                        ":", s["chunk"].cast("string"), s["h"]
-                    ),
-                ),
-            )
-        ).alias("h"),
+        ordered_md5("chunk", "h").alias("h"),
     )
     return per_cell.agg(
-        F.sum("n_vecs").cast("long").alias("n_vectors"),
-        F.sum("n_rows").cast("long").alias("n_code_rows"),
+        count_sum("n_vecs").alias("n_vectors"),
+        count_sum("n_rows").alias("n_code_rows"),
         F.count(F.lit(1)).cast("long").alias("n_cells_used"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("cell", "h"))),
-                    lambda s: F.concat_ws(
-                        ":", s["cell"].cast("string"), s["h"]
-                    ),
-                ),
-            )
-        ).alias("codes_hash"),
+        ordered_md5("cell", "h").alias("codes_hash"),
     ).select(
         "n_vectors",
         "n_code_rows",

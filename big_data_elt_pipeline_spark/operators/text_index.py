@@ -17,8 +17,7 @@ half-built index, and rebuilds are time-travelable):
   probe is a SINGLE pruned scan — no second corpus-sized doc-length
   join (Lucene stores norms per doc for the same reason). ``gen`` is
   the batch's write generation (the postings version the writer is
-  about to commit, deterministic under the single-writer contract) —
-  what makes tombstones GENERATION-SCOPED, see below.
+  about to commit, deterministic under the single-writer contract).
 - ``{path}/df`` — (term, df) ADDITIVE increments, clustered by term:
   the build writes the full document frequencies; each append commits
   the delta's contribution and readers fold ``sum(df) group by term``
@@ -31,13 +30,10 @@ half-built index, and rebuilds are time-travelable):
   documents, which leave no postings), and a delete's N decrement is
   bounded by registry membership, so deleting a never-indexed id is a
   no-op instead of silent stats corruption.
-- ``{path}/tombstones`` — (doc_id, upto_gen): a tombstone kills
-  postings/registry rows of that doc_id with ``gen <= upto_gen`` ONLY
-  (Lucene's segment-scoped deletes). Re-appending an updated document
-  therefore coexists with its own tombstone: the new rows carry a
-  higher generation and survive the fold — the delete+append update
-  shape works WITHOUT an intervening compaction, and
-  ``compact_text_index`` folds exactly the dead generations.
+- ``{path}/tombstones`` — (doc_id, upto_gen) logical deletes over the
+  postings and the registry, folded physically by
+  ``compact_text_index``; format and generation rules in
+  ``operators/tombstones``.
 - ``{path}/stats`` — ONE row (n_docs, n_docs_tokenized, total_dl,
   postings_version, df_version, docs_version, tombstones_version).
   ``n_docs`` is the CORPUS count (BM25's idf N counts every document);
@@ -98,7 +94,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import lakehouse as LH
+from big_data_elt_pipeline_spark.functions.core import count_sum, ordered_md5
 from big_data_elt_pipeline_spark.operators import retrieval as RETR
+from big_data_elt_pipeline_spark.operators import tombstones as TS
 
 # target postings rows per audit hash chunk (same bound discipline as
 # ann_index.AUDIT_CHUNK_TARGET): the largest collect_list in
@@ -159,45 +157,32 @@ def _publish_stats(
     return LH.write_table(stats, f"{path}/stats", mode="overwrite")
 
 
-def _live_doc_tombstones(
-    spark: SparkSession, path: str, tombstones_version: int
-) -> DataFrame | None:
-    """The (doc_id, upto_gen) tombstone relation at the stats-recorded
-    version, or None when the stats row records -1 (no unfolded delete)."""
-    if tombstones_version is None or tombstones_version < 0:
-        return None
-    return LH.read_table(spark, f"{path}/tombstones", tombstones_version)
+def _live(
+    spark: SparkSession, path: str, table: str, version: int,
+    tomb: DataFrame | None,
+) -> DataFrame:
+    """``{path}/{table}`` at ``version`` with dead generations dropped."""
+    rel = LH.read_table(spark, f"{path}/{table}", version)
+    return TS.anti(rel, tomb, "doc_id")
 
 
-def _anti_tombstones(rel: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Generation-scoped tombstone fold: drop ``rel`` rows (carrying
-    doc_id + gen) whose doc_id is tombstoned AT OR BELOW the row's
-    generation. Rows a later append/update re-added survive — their gen
-    exceeds every tombstone pinned before them (the Lucene
-    segment-scoped delete semantics)."""
-    if tomb is None:
-        return rel
-    t = F.broadcast(
-        tomb.select(
-            F.col("doc_id").alias("__t_doc"),
-            F.col("upto_gen").alias("__t_upto"),
-        )
+def _corpus_row(spark: SparkSession, p: dict) -> DataFrame:
+    """BM25's one-row (n_docs, avgdl) corpus frame from the stats row.
+    avgdl is the same IEEE double division F.avg(dl) lowers to (cast(sum)
+    / cast(count)), so the scalar is bit-equal to the per-call form's
+    in-plan average. Its denominator is the TOKENIZED doc count (the dl
+    relation only holds docs with >= 1 token) and is NULL when that is 0,
+    as F.avg over an empty dl relation is; idf's N is the full corpus
+    count."""
+    avgdl = (
+        F.lit(p["total_dl"]).cast("double")
+        / F.lit(p["n_docs_tokenized"]).cast("double")
+        if p["n_docs_tokenized"]
+        else F.lit(None).cast("double")
     )
-    return rel.join(
-        t,
-        (F.col("doc_id") == F.col("__t_doc"))
-        & (F.col("gen") <= F.col("__t_upto")),
-        "left_anti",
+    return spark.range(1).select(
+        F.lit(p["n_docs"]).cast("long").alias("n_docs"), avgdl.alias("avgdl")
     )
-
-
-def _truncate_tombstones(spark: SparkSession, path: str) -> None:
-    """Overwrite the tombstones table to empty (physical fold complete or
-    full rebuild). Pinned readers keep resolving their recorded version;
-    only the LATEST snapshot empties."""
-    if LH.table_versions(f"{path}/tombstones"):
-        empty = LH.read_table(spark, f"{path}/tombstones").limit(0)
-        LH.write_table(empty, f"{path}/tombstones", mode="overwrite")
 
 
 def load_text_index_stats(
@@ -236,11 +221,7 @@ def build_text_index(
     rather than collapsing to one file).
     """
     spark = docs.sparkSession
-    # rebuild rows must outrank every tombstone a previous index
-    # generation could have pinned (the truncate below also clears them;
-    # the stamp keeps generation monotone even across the rebuild)
-    prior = LH.table_versions(f"{path}/postings")
-    gen = (prior[-1] + 1) if prior else 0
+    gen = TS.next_gen(f"{path}/postings")
     post = _postings(docs, id_col, text_col, gen)
     postings_version = LH.write_table(
         post, f"{path}/postings", mode="overwrite", cluster_by=["term"],
@@ -254,7 +235,7 @@ def build_text_index(
     docs_version = LH.write_table(
         _registry_rows(docs, id_col, gen), f"{path}/docs", mode="overwrite"
     )
-    _truncate_tombstones(spark, path)
+    TS.truncate(spark, path)
     n_docs = docs.count()  # corpus N (idf counts token-less docs too)
     counts = post.agg(
         F.count_distinct("doc_id").cast("long").alias("n"),
@@ -288,23 +269,13 @@ def _recount_live_and_repair(spark: SparkSession, path: str, p: dict) -> dict:
     latest_post = LH.table_versions(f"{path}/postings")[-1]
     latest_df = LH.table_versions(f"{path}/df")[-1]
     latest_docs = LH.table_versions(f"{path}/docs")[-1]
-    tv = LH.table_versions(f"{path}/tombstones")
-    latest_tomb = tv[-1] if tv else -1
-    tomb = _live_doc_tombstones(spark, path, latest_tomb)
-    if tomb is not None and tomb.limit(1).count() == 0:
-        # truncated (all folds complete) — record the no-tombstone state
-        tomb, latest_tomb = None, -1
-    live_post = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings"), tomb
-    )
-    counts = live_post.agg(
+    tomb, latest_tomb = TS.latest(spark, path)
+    counts = _live(spark, path, "postings", latest_post, tomb).agg(
         F.count_distinct("doc_id").cast("long").alias("n"),
         F.sum("tf").cast("long").alias("t"),
     ).first()
     true_tok, true_dl = int(counts["n"] or 0), int(counts["t"] or 0)
-    true_n_docs = _anti_tombstones(
-        LH.read_table(spark, f"{path}/docs"), tomb
-    ).count()
+    true_n_docs = _live(spark, path, "docs", latest_docs, tomb).count()
     if (
         true_n_docs != p["n_docs"]
         or true_tok != p["n_docs_tokenized"]
@@ -450,24 +421,14 @@ def delete_from_text_index(
     """
     spark = ids.sparkSession
     p = load_text_index_stats(spark, path)
-    requested = ids.select(
-        F.col(id_col).cast("long").alias("doc_id")
-    ).distinct()
-    n_requested = requested.count()
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
-    live_docs = _anti_tombstones(
-        LH.read_table(spark, f"{path}/docs", p["docs_version"]), tomb
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
+    victims, n_del, n_ignored = TS.split(
+        ids, id_col, _live(spark, path, "docs", p["docs_version"], tomb),
+        "doc_id",
     )
-    victims = requested.join(
-        live_docs.select("doc_id"), "doc_id", "left_semi"
-    )
-    n_del = victims.count()
     if n_del == 0:
-        return {"n_deleted": 0, "n_ignored": n_requested}
-    victims = victims.localCheckpoint(eager=True)  # reused below
-    post = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings", p["postings_version"]), tomb
-    )
+        return {"n_deleted": 0, "n_ignored": n_ignored}
+    post = _live(spark, path, "postings", p["postings_version"], tomb)
     vic_post = post.join(F.broadcast(victims), "doc_id", "left_semi")
     dec = vic_post.groupBy("term").agg(
         (-F.count(F.lit(1))).cast("long").alias("df")
@@ -475,17 +436,11 @@ def delete_from_text_index(
     df_version = LH.write_table(
         dec, f"{path}/df", mode="append", cluster_by=["term"], txn=txn
     )
-    upto = p["postings_version"]  # >= every live row's generation
-    tomb_rows = victims.select(
-        "doc_id", F.lit(upto).cast("long").alias("upto_gen")
-    )
-    tomb_version = LH.write_table(
-        tomb_rows, f"{path}/tombstones", mode="append", txn=txn
+    tomb_version, _ = TS.append(
+        victims, path, "doc_id", p["postings_version"], txn
     )
     if df_version == -1:
         df_version = LH.table_versions(f"{path}/df")[-1]
-    if tomb_version == -1:
-        tomb_version = LH.table_versions(f"{path}/tombstones")[-1]
     gone = vic_post.agg(
         F.count_distinct("doc_id").cast("long").alias("n"),
         F.sum("tf").cast("long").alias("t"),
@@ -499,7 +454,7 @@ def delete_from_text_index(
     )
     return {
         "n_deleted": n_del,
-        "n_ignored": n_requested - n_del,
+        "n_ignored": n_ignored,
         "n_docs": n_docs,
         "n_docs_tokenized": n_tok,
         "total_dl": total_dl,
@@ -542,24 +497,14 @@ def update_text_documents(
     spark = docs.sparkSession
     p = load_text_index_stats(spark, path)
     gen = p["postings_version"] + 1
-    upto = p["postings_version"]
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
-    live_docs = _anti_tombstones(
-        LH.read_table(spark, f"{path}/docs", p["docs_version"]), tomb
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
+    victims, n_updated, n_inserted = TS.split(
+        docs, id_col, _live(spark, path, "docs", p["docs_version"], tomb),
+        "doc_id",
     )
-    batch_ids = docs.select(
-        F.col(id_col).cast("long").alias("doc_id")
-    ).distinct().localCheckpoint(eager=True)
-    victims = batch_ids.join(
-        live_docs.select("doc_id"), "doc_id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_updated = victims.count()
-    n_inserted = batch_ids.count() - n_updated
-
     new_post = _postings(docs, id_col, text_col, gen)
-    old_post = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings", p["postings_version"]), tomb
-    ).join(F.broadcast(victims), "doc_id", "left_semi")
+    post = _live(spark, path, "postings", p["postings_version"], tomb)
+    old_post = post.join(F.broadcast(victims), "doc_id", "left_semi")
 
     postings_version = LH.write_table(
         new_post, f"{path}/postings", mode="append", cluster_by=["term"],
@@ -581,31 +526,18 @@ def update_text_documents(
         net_df, f"{path}/df", mode="append", cluster_by=["term"],
         n_files=n_files, txn=txn,
     )
-    # under a txn the tombstone commit is UNCONDITIONAL (an empty victims
-    # frame when the batch is pure inserts): the txn log must hold an
-    # entry for this epoch on EVERY table the replay will re-attempt,
-    # otherwise a replay of a pure-insert epoch — whose doc_ids are live
-    # by then — would commit a fresh tombstone batch and kill them. The
-    # stats row still records the PRIOR tombstone version for a
-    # pure-insert batch (the empty commit exists only for the txn log).
-    wrote_tomb = n_updated > 0 or txn is not None
-    tomb_commit = None
-    if wrote_tomb:
-        tomb_rows = victims.select(
-            "doc_id", F.lit(upto).cast("long").alias("upto_gen")
-        )
-        tomb_commit = LH.write_table(
-            tomb_rows, f"{path}/tombstones", mode="append", txn=txn
-        )
+    tomb_version, fresh_tomb = TS.append_upsert(
+        victims, path, "doc_id", p["postings_version"], n_updated,
+        p["tombstones_version"], txn,
+    )
     docs_version = LH.write_table(
         _registry_rows(docs, id_col, gen), f"{path}/docs",
         mode="append", txn=txn,
     )
-    replayed = (
+    if (
         postings_version == -1 and df_version == -1 and docs_version == -1
-        and (not wrote_tomb or tomb_commit == -1)
-    )
-    if replayed:
+        and not fresh_tomb
+    ):
         return _recount_live_and_repair(spark, path, p)
     if postings_version == -1:
         postings_version = LH.table_versions(f"{path}/postings")[-1]
@@ -613,14 +545,6 @@ def update_text_documents(
         df_version = LH.table_versions(f"{path}/df")[-1]
     if docs_version == -1:
         docs_version = LH.table_versions(f"{path}/docs")[-1]
-    tomb_version = p["tombstones_version"]
-    if n_updated > 0:
-        tomb_version = (
-            tomb_commit
-            if tomb_commit is not None and tomb_commit != -1
-            else LH.table_versions(f"{path}/tombstones")[-1]
-        )
-
     new_counts = new_post.agg(
         F.count_distinct("doc_id").cast("long").alias("n"),
         F.sum("tf").cast("long").alias("t"),
@@ -672,12 +596,10 @@ def compact_text_index(
     identically across the fold (it already audits the live relation).
     """
     p = load_text_index_stats(spark, path)
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
-    post = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings", p["postings_version"]), tomb
-    )
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
     postings_version = LH.write_table(
-        post, f"{path}/postings", mode="overwrite", cluster_by=["term"],
+        _live(spark, path, "postings", p["postings_version"], tomb),
+        f"{path}/postings", mode="overwrite", cluster_by=["term"],
         n_files=n_files,
     )
     live = LH.read_table(spark, f"{path}/postings", postings_version)
@@ -688,16 +610,16 @@ def compact_text_index(
         dfreq, f"{path}/df", mode="overwrite", cluster_by=["term"],
         n_files=n_files,
     )
-    reg = _anti_tombstones(
-        LH.read_table(spark, f"{path}/docs", p["docs_version"]), tomb
+    docs_version = LH.write_table(
+        _live(spark, path, "docs", p["docs_version"], tomb), f"{path}/docs",
+        mode="overwrite",
     )
-    docs_version = LH.write_table(reg, f"{path}/docs", mode="overwrite")
     stats_version = _publish_stats(
         spark, path, p["n_docs"], p["n_docs_tokenized"], p["total_dl"],
         postings_version, df_version, docs_version, -1,
     )
     if tomb is not None:
-        _truncate_tombstones(spark, path)
+        TS.truncate(spark, path)
     return {
         "postings_version": postings_version,
         "df_version": df_version,
@@ -788,30 +710,22 @@ def bm25_index_probe(
         .select("term").distinct().collect()
     ]
 
-    post = _read_pruned_by_terms(
-        spark, f"{path}/postings", qvocab, postings_version
+    post = TS.anti(
+        _read_pruned_by_terms(
+            spark, f"{path}/postings", qvocab, postings_version
+        ),
+        TS.pinned(spark, path, p["tombstones_version"]),
+        "doc_id",
     )
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
-    post = _anti_tombstones(post, tomb)
     dfreq = (
         _read_pruned_by_terms(spark, f"{path}/df", qvocab, df_version)
         # fold the additive increments (vocab-sized; pruned to ~query
         # vocab by the file skip + the kernel's qterms join)
         .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
     )
-    # avgdl from the exact integer pair — the same IEEE double division
-    # F.avg(dl) lowers to (cast(sum) / cast(count)), so the scalar is
-    # bit-equal to the per-call form's in-plan average. Denominator is
-    # the TOKENIZED doc count (the dl relation only holds docs with >= 1
-    # token); idf's N below is the full corpus count
-    corpus = spark.range(1).select(
-        F.lit(p["n_docs"]).cast("long").alias("n_docs"),
-        (
-            F.lit(p["total_dl"]).cast("double")
-            / F.lit(p["n_docs_tokenized"]).cast("double")
-        ).alias("avgdl"),
+    return RETR.bm25_rank(
+        post, dfreq, _corpus_row(spark, p), queries, k=k, k1=k1, b=b
     )
-    return RETR.bm25_rank(post, dfreq, corpus, queries, k=k, k1=k1, b=b)
 
 
 def bm25_index_rm3(
@@ -856,16 +770,14 @@ def bm25_index_rm3(
     p = load_text_index_stats(spark, path, stats_version)
     postings_version = p["postings_version"]
     df_version = p["df_version"]
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
 
     base = bm25_index_probe(
         spark, path, queries, k=fb_k, k1=k1, b=b,
         stats_version=stats_version,
     ).localCheckpoint(eager=True)
 
-    post_full = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings", postings_version), tomb
-    )
+    post_full = _live(spark, path, "postings", postings_version, tomb)
     qw = RETR.rm3_weights(
         base, post_full, queries, fb_k=fb_k, fb_terms=fb_terms, lam=lam
     ).localCheckpoint(eager=True)
@@ -874,24 +786,20 @@ def bm25_index_rm3(
     # probe batch (|queries| x (|q| + fb_terms)) — the serving
     # collect-the-vocab idiom bm25_index_probe documents
     evocab = [r["term"] for r in qw.select("term").distinct().collect()]
-    post = _anti_tombstones(
+    post = TS.anti(
         _read_pruned_by_terms(
             spark, f"{path}/postings", evocab, postings_version
         ),
         tomb,
+        "doc_id",
     )
     dfreq = (
         _read_pruned_by_terms(spark, f"{path}/df", evocab, df_version)
         .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
     )
-    corpus = spark.range(1).select(
-        F.lit(p["n_docs"]).cast("long").alias("n_docs"),
-        (
-            F.lit(p["total_dl"]).cast("double")
-            / F.lit(p["n_docs_tokenized"]).cast("double")
-        ).alias("avgdl"),
+    return RETR.bm25_rank_weighted(
+        post, dfreq, _corpus_row(spark, p), qw, k=k, k1=k1, b=b
     )
-    return RETR.bm25_rank_weighted(post, dfreq, corpus, qw, k=k, k1=k1, b=b)
 
 
 def text_index_audit(
@@ -945,55 +853,23 @@ def text_index_audit(
     # gone (physically folded at the next compact_text_index), so every
     # derivation — hash included — runs over the anti-joined relation,
     # matching an oracle that re-tokenizes the live corpus
-    tomb = _live_doc_tombstones(spark, path, p.get("tombstones_version", -1))
-    post = _anti_tombstones(
-        LH.read_table(spark, f"{path}/postings", postings_version), tomb
-    )
-    n_tombstones = 0
-    if tomb is not None:
-        n_tombstones = tomb.select("doc_id").distinct().count()
-    n_docs_live = _anti_tombstones(
-        LH.read_table(spark, f"{path}/docs", p["docs_version"]), tomb
-    ).count()
+    tomb = TS.pinned(spark, path, p["tombstones_version"])
+    post = _live(spark, path, "postings", postings_version, tomb)
+    n_tombstones = TS.n_ids(tomb, "doc_id")
+    n_docs_live = _live(spark, path, "docs", p["docs_version"], tomb).count()
     per_chunk = post.groupBy(
         F.pmod(F.col("doc_id"), F.lit(n_chunks)).alias("chunk")
     ).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.count_distinct("doc_id").cast("long").alias("n_docs_c"),
         F.sum("tf").cast("long").alias("dl_c"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(
-                        F.collect_list(F.struct("doc_id", "term", "tf", "dl"))
-                    ),
-                    lambda s: F.concat_ws(
-                        ":",
-                        s["doc_id"].cast("string"),
-                        s["term"],
-                        s["tf"].cast("string"),
-                        s["dl"].cast("string"),
-                    ),
-                ),
-            )
-        ).alias("h"),
+        ordered_md5("doc_id", "term", "tf", "dl").alias("h"),
     )
     fold = per_chunk.agg(
-        F.sum("n_docs_c").cast("long").alias("n_docs_tokenized"),
-        F.sum("n_rows").cast("long").alias("n_postings"),
-        F.sum("dl_c").cast("long").alias("total_dl"),
-        F.md5(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("chunk", "h"))),
-                    lambda s: F.concat_ws(
-                        ":", s["chunk"].cast("string"), s["h"]
-                    ),
-                ),
-            )
-        ).alias("postings_hash"),
+        count_sum("n_docs_c").alias("n_docs_tokenized"),
+        count_sum("n_rows").alias("n_postings"),
+        count_sum("dl_c").alias("total_dl"),
+        ordered_md5("chunk", "h").alias("postings_hash"),
     )
     derived_df = post.groupBy("term").agg(
         F.count(F.lit(1)).cast("long").alias("ddf")

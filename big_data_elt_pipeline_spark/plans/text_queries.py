@@ -10,6 +10,8 @@ scaled) so the pipelines are exercised with guaranteed positives.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1482,26 +1484,47 @@ FROM cellhash
 """
 
 
-def _ann_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build the IVF-PQ index once per (process, sf_dir) — the
-    ``shard_pruned_read`` staged-source discipline — and return its
-    lakehouse root."""
+def _staged_index(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    build: Callable[[SparkSession, str, str], None],
+    mutate: Callable[[SparkSession, str, str], None] | None = None,
+) -> str:
+    """Lakehouse root of a gate query's index, staged once per (process,
+    sf_dir) under ``name`` — the ``shard_pruned_read`` staged-source
+    discipline. ``build(spark, sf_dir, idx)`` runs when the index has no
+    publish row (ANN ``state`` / text ``stats``); ``mutate(spark, sf_dir,
+    idx)`` then runs once, while it has no tombstones. A mutated index
+    stages under its own name: mutating a shared one would corrupt the
+    other gate queries."""
     from big_data_elt_pipeline_spark.lakehouse import table_versions
-    from big_data_elt_pipeline_spark.operators import ann_index as AIX
     from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('ann_index', sf_dir)}/index"
-    if not table_versions(f"{idx}/state"):
-        emb = read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        # n_files=8: at fixture scale the clustered write would otherwise
-        # collapse to one file and the probe's per-cell file skipping
-        # would be vacuously exercised
-        AIX.build_ivfpq_index(
-            emb, idx, m=_PQ_M, dsub=_PQ_DSUB, n_cents=_PQ_CENTS, n_files=8
-        )
+    idx = f"{staging_dir(name, sf_dir)}/index"
+    if not (table_versions(f"{idx}/state") or table_versions(f"{idx}/stats")):
+        build(spark, sf_dir, idx)
+    if mutate is not None and not table_versions(f"{idx}/tombstones"):
+        mutate(spark, sf_dir, idx)
     return idx
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = read_table(spark, sf_dir, "embeddings")
+    return emb.select("vec_id", "embedding")
+
+
+def _build_ann(spark: SparkSession, sf_dir: str, idx: str, emb=None) -> None:
+    """The gate's IVF-PQ index over ``emb`` (default: the corpus)."""
+    from big_data_elt_pipeline_spark.operators import ann_index as AIX
+
+    # n_files=8: at fixture scale the clustered write would otherwise
+    # collapse to one file and the probe's per-cell file skipping
+    # would be vacuously exercised
+    AIX.build_ivfpq_index(
+        _embeddings(spark, sf_dir) if emb is None else emb, idx,
+        m=_PQ_M, dsub=_PQ_DSUB, n_cents=_PQ_CENTS, n_files=8,
+    )
 
 
 @register("ann_index_audit", _ANN_INDEX_AUDIT_SQL)
@@ -1513,7 +1536,8 @@ def q_ann_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``codes_hash``. Contract in ``operators/ann_index.index_audit``."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    return AIX.index_audit(spark, _ann_index_path(spark, sf_dir))
+    idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
+    return AIX.index_audit(spark, idx)
 
 
 @register("ann_index_probe", _ANN_INDEX_PROBE_SQL)
@@ -1526,7 +1550,7 @@ def q_ann_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/ann_index.ivfpq_probe``."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    idx = _ann_index_path(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter((F.col("vec_id") >= 16) & (F.col("vec_id") < 32))
     return AIX.ivfpq_probe(
@@ -1547,27 +1571,13 @@ _DEL_PRED_SQL = "co.vec_id % 7 = 0"  # the deterministic tombstone set
 _ANN_INDEX_DELETE_SQL = _ivfpq_sql("vec_id < 8", _DEL_PRED_SQL)
 
 
-def _ann_index_del_path(spark: SparkSession, sf_dir: str) -> str:
-    """A SEPARATE staged index with the deterministic tombstone set
-    applied once per (process, sf_dir) — deleting from the shared
-    ``_ann_index_path`` index would corrupt the other gate queries."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
+def _delete_ann_sevens(spark: SparkSession, sf_dir: str, idx: str) -> None:
+    """The deterministic tombstone set: every vec_id % 7 == 0."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('ann_index_del', sf_dir)}/index"
-    if not table_versions(f"{idx}/tombstones"):
-        emb = read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        if not table_versions(f"{idx}/state"):
-            AIX.build_ivfpq_index(
-                emb, idx, m=_PQ_M, dsub=_PQ_DSUB, n_cents=_PQ_CENTS, n_files=8
-            )
-        AIX.delete_from_index(
-            emb.filter(F.col("vec_id") % 7 == 0).select("vec_id"), idx
-        )
-    return idx
+    AIX.delete_from_index(
+        _embeddings(spark, sf_dir).filter(F.col("vec_id") % 7 == 0), idx
+    )
 
 
 @register("ann_index_delete", _ANN_INDEX_DELETE_SQL)
@@ -1581,7 +1591,9 @@ def q_ann_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/ann_index.delete_from_index``."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    idx = _ann_index_del_path(spark, sf_dir)
+    idx = _staged_index(
+        spark, sf_dir, "ann_index_del", _build_ann, _delete_ann_sevens
+    )
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter(F.col("vec_id") < 8)
     return AIX.ivfpq_probe(spark, idx, queries, k=_PQ_K, n_probe=_IVF_PROBE)
@@ -1652,7 +1664,7 @@ def q_ann_index_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contract in ``operators/ann_index.index_recall``."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    idx = _ann_index_path(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter((F.col("vec_id") >= 48) & (F.col("vec_id") < 64))
     return AIX.index_recall(
@@ -1681,31 +1693,17 @@ _ANN_INDEX_UPDATE_SQL = _ivfpq_sql(
 )
 
 
-def _ann_index_upd_path(spark: SparkSession, sf_dir: str) -> str:
-    """A SEPARATE staged index with the deterministic update batch
-    applied once per (process, sf_dir) — mutating the shared
-    ``_ann_index_path`` index would corrupt the other gate queries."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
+def _update_ann_fives(spark: SparkSession, sf_dir: str, idx: str) -> None:
+    """The deterministic update batch: every vec_id % 5 == 0 re-encoded."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('ann_index_upd', sf_dir)}/index"
-    if not table_versions(f"{idx}/tombstones"):
-        emb = read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        if not table_versions(f"{idx}/state"):
-            AIX.build_ivfpq_index(
-                emb, idx, m=_PQ_M, dsub=_PQ_DSUB, n_cents=_PQ_CENTS, n_files=8
-            )
-        upd = emb.filter(F.col("vec_id") % 5 == 0).select(
-            "vec_id",
-            F.transform(
-                F.col("embedding"), lambda x: x * F.lit(0.5) + F.lit(0.25)
-            ).alias("embedding"),
-        )
-        AIX.update_index_vectors(upd, idx, n_files=8)
-    return idx
+    upd = _embeddings(spark, sf_dir).filter(F.col("vec_id") % 5 == 0).select(
+        "vec_id",
+        F.transform(
+            F.col("embedding"), lambda x: x * F.lit(0.5) + F.lit(0.25)
+        ).alias("embedding"),
+    )
+    AIX.update_index_vectors(upd, idx, n_files=8)
 
 
 @register("ann_index_update", _ANN_INDEX_UPDATE_SQL)
@@ -1719,7 +1717,9 @@ def q_ann_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/ann_index.update_index_vectors``."""
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
-    idx = _ann_index_upd_path(spark, sf_dir)
+    idx = _staged_index(
+        spark, sf_dir, "ann_index_upd", _build_ann, _update_ann_fives
+    )
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter((F.col("vec_id") >= 8) & (F.col("vec_id") < 16))
     return AIX.ivfpq_probe(spark, idx, queries, k=_PQ_K, n_probe=_IVF_PROBE)
@@ -1761,7 +1761,7 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = _ann_index_path(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
     out = f"{staging_dir('stream_ann', sf_dir)}/state/out"
     return stream_index_probe_evidence(spark, sf_dir, idx, out)
 
@@ -1958,31 +1958,19 @@ ORDER BY m.query_id, m.mmr_rank
 """
 
 
-def _stream_loop_index(spark: SparkSession, sf_dir: str) -> str:
+def _build_stream_loop(spark: SparkSession, sf_dir: str, idx: str) -> None:
     """Build the base index (corpus MINUS the delta rows), then STREAM
-    the delta in via per-micro-batch ``append_to_index`` — once per
-    (process, sf_dir), the staged-source discipline."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
-    from big_data_elt_pipeline_spark.operators import ann_index as AIX
+    the delta in via per-micro-batch ``append_to_index``."""
     from big_data_elt_pipeline_spark.streaming.ann_serving import (
         stream_index_ingest,
     )
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
     d_lo, d_hi = _LOOP_DELTA
-    idx = f"{staging_dir('stream_loop', sf_dir)}/index"
-    if not table_versions(f"{idx}/state"):
-        emb = read_table(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding"
-        )
-        base = emb.filter(
-            ~((F.col("vec_id") >= d_lo) & (F.col("vec_id") < d_hi))
-        )
-        AIX.build_ivfpq_index(
-            base, idx, m=_PQ_M, dsub=_PQ_DSUB, n_cents=_PQ_CENTS, n_files=8
-        )
-        stream_index_ingest(spark, sf_dir, idx, d_lo, d_hi, n_files=2)
-    return idx
+    base = _embeddings(spark, sf_dir).filter(
+        ~((F.col("vec_id") >= d_lo) & (F.col("vec_id") < d_hi))
+    )
+    _build_ann(spark, sf_dir, idx, base)
+    stream_index_ingest(spark, sf_dir, idx, d_lo, d_hi, n_files=2)
 
 
 @register("stream_retrieval_loop", _stream_loop_sql())
@@ -1998,7 +1986,7 @@ def q_stream_retrieval_loop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.operators import ann_index as AIX
 
     q_lo, q_hi = _LOOP_Q
-    idx = _stream_loop_index(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "stream_loop", _build_stream_loop)
     emb = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     queries = emb.filter((F.col("vec_id") >= q_lo) & (F.col("vec_id") < q_hi))
 
@@ -2608,22 +2596,15 @@ _BM25_PROBE_QUERIES = [
 ]
 
 
-def _text_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build the BM25 index once per (process, sf_dir) — the
-    ``_ann_index_path`` staged-source discipline — and return its
-    lakehouse root."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
+def _build_text(spark: SparkSession, sf_dir: str, idx: str) -> None:
+    """The gate's BM25 index over the documents corpus."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('text_index', sf_dir)}/index"
-    if not table_versions(f"{idx}/stats"):
-        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        # n_files=8: at fixture scale the clustered write would otherwise
-        # collapse to one file and per-term file skipping would be
-        # vacuously exercised
-        TIX.build_text_index(docs, idx, n_files=8)
-    return idx
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # n_files=8: at fixture scale the clustered write would otherwise
+    # collapse to one file and per-term file skipping would be
+    # vacuously exercised
+    TIX.build_text_index(docs, idx, n_files=8)
 
 
 _BM25_INDEX_PROBE_SQL = f"""
@@ -2697,7 +2678,8 @@ def q_bm25_index_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/text_index.text_index_audit``."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
-    return TIX.text_index_audit(spark, _text_index_path(spark, sf_dir))
+    idx = _staged_index(spark, sf_dir, "text_index", _build_text)
+    return TIX.text_index_audit(spark, idx)
 
 
 # RM3 pseudo-relevance feedback served from the stored index (r14): the
@@ -2821,7 +2803,7 @@ def q_bm25_index_rm3(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/text_index.bm25_index_rm3``."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
-    idx = _text_index_path(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "text_index", _build_text)
     queries = spark.createDataFrame(
         _RM3_QUERIES, "query_id string, query_text string"
     )
@@ -2849,23 +2831,12 @@ ORDER BY query_id, rank
 """
 
 
-def _text_index_del_path(spark: SparkSession, sf_dir: str) -> str:
-    """A SEPARATE staged text index with the deterministic tombstone set
-    applied once per (process, sf_dir) — deleting from the shared
-    ``_text_index_path`` index would corrupt the other gate queries."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
+def _delete_text_sevens(spark: SparkSession, sf_dir: str, idx: str) -> None:
+    """The deterministic tombstone set: every doc_id % 7 == 0."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('text_index_del', sf_dir)}/index"
-    if not table_versions(f"{idx}/tombstones"):
-        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        if not table_versions(f"{idx}/stats"):
-            TIX.build_text_index(docs, idx, n_files=8)
-        TIX.delete_from_text_index(
-            docs.filter(F.col("doc_id") % 7 == 0).select("doc_id"), idx
-        )
-    return idx
+    docs = read_table(spark, sf_dir, "documents").select("doc_id")
+    TIX.delete_from_text_index(docs.filter(F.col("doc_id") % 7 == 0), idx)
 
 
 @register("bm25_index_delete", _BM25_INDEX_DELETE_SQL)
@@ -2878,7 +2849,9 @@ def q_bm25_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/text_index.delete_from_text_index``."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
-    idx = _text_index_del_path(spark, sf_dir)
+    idx = _staged_index(
+        spark, sf_dir, "text_index_del", _build_text, _delete_text_sevens
+    )
     queries = spark.createDataFrame(
         [
             ("d_join", "shuffle join broadcast table"),
@@ -2902,7 +2875,7 @@ def q_bm25_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/text_index.bm25_index_probe``."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
-    idx = _text_index_path(spark, sf_dir)
+    idx = _staged_index(spark, sf_dir, "text_index", _build_text)
     queries = spark.createDataFrame(
         _BM25_PROBE_QUERIES, "query_id string, query_text string"
     )
@@ -2933,26 +2906,18 @@ ORDER BY query_id, rank
 """
 
 
-def _text_index_upd_path(spark: SparkSession, sf_dir: str) -> str:
-    """A SEPARATE staged text index with the deterministic update batch
-    applied once per (process, sf_dir)."""
-    from big_data_elt_pipeline_spark.lakehouse import table_versions
+def _update_text_elevens(spark: SparkSession, sf_dir: str, idx: str) -> None:
+    """The deterministic update batch: every doc_id % 11 == 0 rewritten."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
 
-    idx = f"{staging_dir('text_index_upd', sf_dir)}/index"
-    if not table_versions(f"{idx}/tombstones"):
-        docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-        if not table_versions(f"{idx}/stats"):
-            TIX.build_text_index(docs, idx, n_files=8)
-        upd = docs.filter(F.col("doc_id") % 11 == 0).select(
-            "doc_id",
-            F.concat(F.lit("refreshed shuffle corpus "), F.col("text")).alias(
-                "text"
-            ),
-        )
-        TIX.update_text_documents(upd, idx, n_files=8)
-    return idx
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    upd = docs.filter(F.col("doc_id") % 11 == 0).select(
+        "doc_id",
+        F.concat(F.lit("refreshed shuffle corpus "), F.col("text")).alias(
+            "text"
+        ),
+    )
+    TIX.update_text_documents(upd, idx, n_files=8)
 
 
 @register("bm25_index_update", _BM25_INDEX_UPDATE_SQL)
@@ -2966,7 +2931,9 @@ def q_bm25_index_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash. Contract in ``operators/text_index.update_text_documents``."""
     from big_data_elt_pipeline_spark.operators import text_index as TIX
 
-    idx = _text_index_upd_path(spark, sf_dir)
+    idx = _staged_index(
+        spark, sf_dir, "text_index_upd", _build_text, _update_text_elevens
+    )
     queries = spark.createDataFrame(
         [
             ("u_join", "shuffle join broadcast table"),
@@ -3842,8 +3809,8 @@ def q_hybrid_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.operators import text_index as TIX
     from big_data_elt_pipeline_spark.operators.retrieval import rrf_fuse
 
-    text_idx = _text_index_path(spark, sf_dir)
-    ann_idx = _ann_index_path(spark, sf_dir)
+    text_idx = _staged_index(spark, sf_dir, "text_index", _build_text)
+    ann_idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     queries = docs.filter(
         (F.col("doc_id") >= _HYB_IDX_LO) & (F.col("doc_id") < _HYB_IDX_HI)

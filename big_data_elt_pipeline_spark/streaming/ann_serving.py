@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import lakehouse as LH
 from big_data_elt_pipeline_spark.operators import ann_index as AIX
+from big_data_elt_pipeline_spark.streaming import drain, staged_slice
 
 
 def stream_index_probe(
@@ -67,15 +68,8 @@ def stream_index_probe(
     app-id-from-checkpoint pattern) and new invocations continue the
     epoch sequence instead of replaying it.
     """
-    from big_data_elt_pipeline_spark.streaming.scoring import _staged_docs_dir
-
-    stage = _staged_docs_dir(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(stage).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-        .select("vec_id", "embedding")
+    raw = staged_slice(
+        spark, sf_dir, "embeddings.parquet", "vec_id", "embedding", lo, hi
     )
     app_id = f"stream_ann_probe:{checkpoint_dir or out_path}"
 
@@ -85,14 +79,10 @@ def stream_index_probe(
         )
         LH.write_table(out, out_path, mode="append", txn=(app_id, int(epoch)))
 
-    writer = raw.writeStream.outputMode("append").foreachBatch(_probe_batch)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        raw.writeStream.outputMode("append").foreachBatch(_probe_batch),
+        checkpoint_dir,
+    )
     return LH.read_table(spark, out_path)
 
 
@@ -117,15 +107,8 @@ def stream_index_ingest(
     re-invocation replays (safely, as no-ops); with it, restarts continue
     the epoch sequence.
     """
-    from big_data_elt_pipeline_spark.streaming.scoring import _staged_docs_dir
-
-    stage = _staged_docs_dir(sf_dir, "embeddings.parquet")
-    schema = spark.read.parquet(stage).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
-        .select("vec_id", "embedding")
+    raw = staged_slice(
+        spark, sf_dir, "embeddings.parquet", "vec_id", "embedding", lo, hi
     )
     app_id = f"stream_index_ingest:{checkpoint_dir or index_path}"
 
@@ -134,14 +117,10 @@ def stream_index_ingest(
             batch, index_path, txn=(app_id, int(epoch)), n_files=n_files
         )
 
-    writer = raw.writeStream.outputMode("append").foreachBatch(_ingest)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        raw.writeStream.outputMode("append").foreachBatch(_ingest),
+        checkpoint_dir,
+    )
     return AIX.load_index_state(spark, index_path)[2]
 
 

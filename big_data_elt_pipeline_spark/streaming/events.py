@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
+from big_data_elt_pipeline_spark.streaming import drain
 
 SESSION_GAP_MIN = 30
 
@@ -215,11 +216,7 @@ def stream_attribution_join(
         )
     )
     name = "stream_attribution_sink"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -256,11 +253,7 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = read_table(spark, sf_dir, "customer")
     enriched = enrich_events(ev, customer)
     name = "stream_enrich_sink"
-    q = enriched.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(enriched.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -290,16 +283,7 @@ def stream_tumbling_revenue(
         )
     )
     name = "stream_tumbling_revenue_sink"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(agg.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 
@@ -388,17 +372,12 @@ def stream_tumbling_revenue_to_sink(
             "event_type", "n", "total_value",
         )
     )
-    q = (
+    drain(
         agg.writeStream.outputMode("append")
         .format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+        .option("path", sink_dir),
+        checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def _staged_dup_events_dir(sf_dir: str) -> str:
@@ -472,11 +451,7 @@ def stream_deduped_events(
         .dropDuplicatesWithinWatermark(["event_id"])
     )
     name = "stream_dedup_sink"
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 

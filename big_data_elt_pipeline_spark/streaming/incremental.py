@@ -23,6 +23,8 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_elt_pipeline_spark.streaming import drain
+
 _STAGING_CACHE: dict[tuple[str, str], str] = {}
 
 
@@ -113,16 +115,12 @@ def incremental_gold(
         .option("recursiveFileLookup", "true")
         .parquet(str(src / "data"))
     )
-    writer = raw.writeStream.outputMode("append").foreachBatch(
-        lambda batch, _epoch: _merge_batch(spark, batch, state_dir, key, key_name)
+    drain(
+        raw.writeStream.outputMode("append").foreachBatch(
+            lambda batch, _epoch: _merge_batch(spark, batch, state_dir, key, key_name)
+        ),
+        checkpoint_dir,
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     state = spark.read.parquet(state_dir)
     return state.select(
         key_name, F.col("ca_dec").cast("double").alias("ca"), "n"

@@ -24,6 +24,7 @@ from big_data_elt_pipeline_spark.operators.classify import (
     model_map_row,
     score_documents,
 )
+from big_data_elt_pipeline_spark.streaming import drain
 
 
 def _staged_docs_dir(sf_dir: str, name: str = "documents.parquet") -> str:
@@ -74,16 +75,7 @@ def stream_scored_documents(
         model_map_row(model) if model_row is None else model_row,
     )
     name = "stream_doc_scoring_sink"
-    q = (
-        scored.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(scored.writeStream.outputMode("append").format("memory").queryName(name))
     return spark.table(name)
 
 

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from big_data_elt_pipeline_spark.streaming import drain
 from big_data_elt_pipeline_spark.streaming.events import events_raw_schema
 
 OUTPUT_SCHEMA = T.StructType(
@@ -90,11 +91,7 @@ def user_running_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
     name = "user_running_totals_sink"
-    q = updates.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(updates.writeStream.outputMode("update").format("memory").queryName(name))
     sink = spark.table(name)
     # the memory sink accumulates every batch's updates; `n` is monotone per
     # user, so the final state is the max-n row

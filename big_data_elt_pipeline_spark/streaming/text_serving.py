@@ -24,9 +24,9 @@ RAG corpus-refresh loop as a stream, each epoch one atomic publish.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.operators import text_index as TIX
+from big_data_elt_pipeline_spark.streaming import drain, staged_slice
 
 
 def stream_text_ingest(
@@ -44,15 +44,8 @@ def stream_text_ingest(
     the txn app id keys on ``index_path`` and a re-invocation replays as
     converging no-ops; with one, restarts continue the epoch sequence.
     """
-    from big_data_elt_pipeline_spark.streaming.scoring import _staged_docs_dir
-
-    stage = _staged_docs_dir(sf_dir, "documents.parquet")
-    schema = spark.read.parquet(stage).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .parquet(stage)
-        .filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        .select("doc_id", "text")
+    raw = staged_slice(
+        spark, sf_dir, "documents.parquet", "doc_id", "text", lo, hi
     )
     app_id = f"stream_text_ingest:{checkpoint_dir or index_path}"
 
@@ -61,14 +54,10 @@ def stream_text_ingest(
             batch, index_path, txn=(app_id, int(epoch)), n_files=n_files
         )
 
-    writer = raw.writeStream.outputMode("append").foreachBatch(_ingest)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(
+        raw.writeStream.outputMode("append").foreachBatch(_ingest),
+        checkpoint_dir,
+    )
     return TIX.load_text_index_stats(spark, index_path)
 
 
@@ -100,13 +89,8 @@ def stream_text_updates(
             batch, index_path, txn=(tag, int(epoch)), n_files=n_files
         )
 
-    writer = updates.writeStream.outputMode("append").foreachBatch(_apply)
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    spark = updates.sparkSession
-    return TIX.load_text_index_stats(spark, index_path)
+    drain(
+        updates.writeStream.outputMode("append").foreachBatch(_apply),
+        checkpoint_dir,
+    )
+    return TIX.load_text_index_stats(updates.sparkSession, index_path)

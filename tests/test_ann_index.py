@@ -66,7 +66,7 @@ def test_probe_prunes_files(index_path):
     assert len(kept) < len(live)
 
 
-def test_append_ingest_and_idempotence(spark, tmp_path):
+def test_append_ingest_and_idempotence(spark, tmp_path, index_copy):
     """Index maintenance: build on half the corpus, append the rest —
     the probe over the grown stored index must equal the in-memory scan
     of the full corpus encoded with the SAME (base-built) quantizer
@@ -76,7 +76,7 @@ def test_append_ingest_and_idempotence(spark, tmp_path):
     base = emb.filter(F.col("vec_id") <= mid)
     delta = emb.filter(F.col("vec_id") > mid)
     path = str(tmp_path / "index")
-    meta = AIX.build_ivfpq_index(base, path, n_files=4)
+    meta = index_copy("ann_half", path)
     res = AIX.append_to_index(delta, path, txn=("t", 1), n_files=4)
     assert res["n_vectors"] == emb.count()
     assert AIX.index_audit(spark, path).first().n_vectors == emb.count()
@@ -122,7 +122,7 @@ def test_append_ingest_and_idempotence(spark, tmp_path):
     )
 
 
-def test_compaction_preserves_index(spark, tmp_path):
+def test_compaction_preserves_index(spark, tmp_path, index_copy):
     """OPTIMIZE on the codes table after appends (small-file compaction,
     re-clustered by cell) must not change what the index answers: the
     audit hash and a probe are identical across the rewrite, and the
@@ -130,10 +130,8 @@ def test_compaction_preserves_index(spark, tmp_path):
     from pyspark.sql import functions as F
 
     emb = _emb(spark)
-    mid = emb.agg(F.max("vec_id")).first()[0] // 2
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb.filter(F.col("vec_id") <= mid), path, n_files=4)
-    AIX.append_to_index(emb.filter(F.col("vec_id") > mid), path, n_files=4)
+    index_copy("ann_half_appended", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before_hash = AIX.index_audit(spark, path).first().codes_hash
     before = sorted(
@@ -191,7 +189,7 @@ def test_stream_probe_equals_batch_and_replays_idempotently(
     assert sorted(map(tuple, replay.select(key).collect())) == got
 
 
-def test_replay_converges_state_after_crash(spark, tmp_path):
+def test_replay_converges_state_after_crash(spark, tmp_path, index_copy):
     """Crash+replay repair (r12 ADVICE): if the original append crashed
     AFTER the codes commit but BEFORE the state re-publish, the replayed
     txn must not return early — it recounts n_vectors from the codes and
@@ -201,7 +199,7 @@ def test_replay_converges_state_after_crash(spark, tmp_path):
     base = emb.filter(F.col("vec_id") <= mid)
     delta = emb.filter(F.col("vec_id") > mid)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(base, path, n_files=4)
+    index_copy("ann_half", path)
     # simulate the crash: commit the delta's codes under the txn tag,
     # then "die" before the state overwrite (exactly append_to_index's
     # first write, nothing after)
@@ -229,15 +227,13 @@ def test_replay_converges_state_after_crash(spark, tmp_path):
     }
 
 
-def test_compact_index_moves_state_pointer(spark, tmp_path):
+def test_compact_index_moves_state_pointer(spark, tmp_path, index_copy):
     """compact_index = codes OPTIMIZE + state re-publish: default probes
     pin codes to the version state references, so compaction must move
     that pointer for readers to see the compacted layout at all."""
     emb = _emb(spark)
-    mid = emb.agg(F.max("vec_id")).first()[0] // 2
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb.filter(F.col("vec_id") <= mid), path, n_files=4)
-    AIX.append_to_index(emb.filter(F.col("vec_id") > mid), path, n_files=4)
+    index_copy("ann_half_appended", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before_hash = AIX.index_audit(spark, path).first().codes_hash
     before = sorted(
@@ -256,7 +252,9 @@ def test_compact_index_moves_state_pointer(spark, tmp_path):
     assert after == before
 
 
-def test_default_probe_consistent_across_crashed_rebuild(spark, tmp_path):
+def test_default_probe_consistent_across_crashed_rebuild(
+    spark, tmp_path, index_copy
+):
     """The r12 ADVICE race: a rebuild over a CHANGED corpus that crashes
     (or is observed) between its codes overwrite and its state overwrite
     must leave default readers on the OLD consistent pair — never new
@@ -265,7 +263,7 @@ def test_default_probe_consistent_across_crashed_rebuild(spark, tmp_path):
     mid = emb.agg(F.max("vec_id")).first()[0] // 2
     base = emb.filter(F.col("vec_id") <= mid)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(base, path, n_files=4)
+    index_copy("ann_half", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before = sorted(
         map(tuple, AIX.ivfpq_probe(spark, path, queries, k=5).collect())
@@ -307,13 +305,13 @@ def test_audit_chunked_fold_counts_stable(spark, index_path):
     assert tiny1.codes_hash != default.codes_hash
 
 
-def test_probe_empty_codes_snapshot(spark, tmp_path):
+def test_probe_empty_codes_snapshot(spark, tmp_path, index_copy):
     """kept == [] must scan an EMPTY frame (schema preserved), never the
     full snapshot: an index whose referenced codes commit holds no rows
     probes to zero rows without error."""
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     cells, books, p = AIX.load_index_state(spark, path)
     empty = LH.read_table(spark, f"{path}/codes").limit(0)
     v = LH.write_table(empty, f"{path}/codes", mode="overwrite")
@@ -327,14 +325,14 @@ def test_probe_empty_codes_snapshot(spark, tmp_path):
     assert set(out.columns) == {"query_id", "vec_id", "adc_l2sq", "rank"}
 
 
-def test_delete_probe_and_compaction_fold(spark, tmp_path):
+def test_delete_probe_and_compaction_fold(spark, tmp_path, index_copy):
     """delete_from_index: tombstoned vectors vanish from every ranking
     immediately (broadcast anti-join), the delete is idempotent under a
     txn tag, and compact_index folds the tombstones physically — same
     answers, reduced audit counts, truncated tombstone table."""
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before = AIX.ivfpq_probe(spark, path, queries, k=5, n_probe=4)
     victims = {
@@ -383,7 +381,22 @@ def test_delete_probe_and_compaction_fold(spark, tmp_path):
     assert post_compact == pre_compact
 
 
-def test_stream_ingest_equals_batch_append(spark, tmp_path):
+def test_delete_every_vector_leaves_an_empty_live_index(spark, tmp_path):
+    """An index whose every vector is tombstoned: the probe ranks
+    nothing and the audit counts 0, as the state row does (not NULL)."""
+    emb = _emb(spark).filter(F.col("vec_id") < 64)
+    path = str(tmp_path / "index")
+    AIX.build_ivfpq_index(emb, path, n_files=4)
+    res = AIX.delete_from_index(emb.select("vec_id"), path)
+    assert res["n_deleted"] == 64 and res["n_vectors"] == 0
+    queries = emb.filter(F.col("vec_id") < 8)
+    assert AIX.ivfpq_probe(spark, path, queries, k=5, n_probe=4).count() == 0
+    row = AIX.index_audit(spark, path).first()
+    assert (row.n_vectors, row.n_code_rows, row.n_cells_used) == (0, 0, 0)
+    assert row.n_tombstones == 64
+
+
+def test_stream_ingest_equals_batch_append(spark, tmp_path, index_copy):
     """stream_index_ingest must leave the index in exactly the state a
     batch append_to_index of the same delta would — audit hash equal —
     and a full stream replay must be a no-op (txn tags)."""
@@ -393,10 +406,9 @@ def test_stream_ingest_equals_batch_append(spark, tmp_path):
 
     emb = _emb(spark)
     delta_pred = (F.col("vec_id") >= 64) & (F.col("vec_id") < 80)
-    base = emb.filter(~delta_pred)
     s_path, b_path = str(tmp_path / "s"), str(tmp_path / "b")
-    AIX.build_ivfpq_index(base, s_path, n_files=4)
-    AIX.build_ivfpq_index(base, b_path, n_files=4)
+    index_copy("ann_no_64_80", s_path)
+    index_copy("ann_no_64_80", b_path)
 
     p = stream_index_ingest(spark, SF_SMOKE, s_path, 64, 80, n_files=2)
     AIX.append_to_index(emb.filter(delta_pred), b_path, n_files=2)
@@ -428,14 +440,14 @@ def test_index_recall_gate(spark, index_path):
     assert r1.min_recall <= r1.recall_at_k
 
 
-def test_rebuild_if_drifted_policy(spark, tmp_path):
+def test_rebuild_if_drifted_policy(spark, tmp_path, index_copy):
     """The closed maintenance loop: a passing gate is a no-op; a tripped
     gate (forced via floor=1.0 — measured recall is always < 1 for this
     quantizer) rebuilds with the stored quantizer shape and reports the
     post-rebuild recall; the rebuilt index keeps answering."""
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     queries = emb.filter(F.col("vec_id") < 8)
 
     ok = AIX.rebuild_if_drifted(spark, path, emb, queries, floor=0.0)
@@ -454,7 +466,9 @@ def test_rebuild_if_drifted_policy(spark, tmp_path):
     assert AIX.ivfpq_probe(spark, path, queries, k=5).count() == 8 * 5
 
 
-def test_vacuum_after_compaction_keeps_default_reads(spark, tmp_path):
+def test_vacuum_after_compaction_keeps_default_reads(
+    spark, tmp_path, index_copy
+):
     """The storage-reclaim lifecycle: build -> append -> compact_index ->
     vacuum(retain 1). Default probes/audits pin the versions the LATEST
     state row references, which survive any vacuum that retains the
@@ -465,10 +479,8 @@ def test_vacuum_after_compaction_keeps_default_reads(spark, tmp_path):
     vacuum-safe, since a bare compact_table would leave state pointing
     at reclaimed files.)"""
     emb = _emb(spark)
-    mid = emb.agg(F.max("vec_id")).first()[0] // 2
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb.filter(F.col("vec_id") <= mid), path, n_files=4)
-    AIX.append_to_index(emb.filter(F.col("vec_id") > mid), path, n_files=4)
+    index_copy("ann_half_appended", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before = sorted(
         map(tuple, AIX.ivfpq_probe(spark, path, queries, k=5).collect())

@@ -73,10 +73,12 @@ def _updated_docs(spark, docs):
     return rewritten.unionByName(fresh), fresh
 
 
-def test_update_text_documents_matches_adhoc_on_updated_corpus(spark, tmp_path):
+def test_update_text_documents_matches_adhoc_on_updated_corpus(
+    spark, tmp_path, index_copy
+):
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     batch, fresh = _updated_docs(spark, docs)
     res = TIX.update_text_documents(batch, path, txn=("u", 1), n_files=4)
     assert res["n_updated"] == docs.filter(F.col("doc_id") % 11 == 0).count()
@@ -106,14 +108,14 @@ def test_update_text_documents_matches_adhoc_on_updated_corpus(spark, tmp_path):
     }
 
 
-def test_delete_then_reappend_same_doc_survives(spark, tmp_path):
+def test_delete_then_reappend_same_doc_survives(spark, tmp_path, index_copy):
     """The r13 advisory trap: doc_id-level tombstones would hide a
     re-appended document and a later compact would destroy it. With
     generation-scoped tombstones the delete + append sequencing works,
     and compaction keeps the re-added rows."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     victim = docs.filter(F.col("doc_id") == 0)
     assert victim.count() == 1
     TIX.delete_from_text_index(victim.select("doc_id"), path)
@@ -135,16 +137,17 @@ def test_delete_then_reappend_same_doc_survives(spark, tmp_path):
     assert audit.n_df_mismatch == 0 and audit.stats_consistent is True
 
 
-def test_append_replay_after_delete_does_not_resurrect(spark, tmp_path):
+def test_append_replay_after_delete_does_not_resurrect(
+    spark, tmp_path, index_copy
+):
     """The r13 HIGH advisory: a replayed append epoch arriving AFTER a
     delete must not 'repair' stats by re-including tombstoned documents
     — the recount anti-joins the live tombstones."""
     docs = _docs(spark)
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
-    base = docs.filter(F.col("doc_id") <= mid)
     delta = docs.filter(F.col("doc_id") > mid)
     path = str(tmp_path / "index")
-    TIX.build_text_index(base, path, n_files=4)
+    index_copy("text_half", path)
     TIX.append_to_text_index(delta, path, txn=("stream", 42), n_files=4)
     victims = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
     TIX.delete_from_text_index(victims, path)
@@ -162,13 +165,13 @@ def test_append_replay_after_delete_does_not_resurrect(spark, tmp_path):
     )
 
 
-def test_delete_bogus_ids_cannot_corrupt_stats(spark, tmp_path):
+def test_delete_bogus_ids_cannot_corrupt_stats(spark, tmp_path, index_copy):
     """The r13 LOW advisory: the N decrement derives from registry
     membership evidence, so deleting never-indexed ids is a counted
     no-op, and a mixed batch decrements by its live members only."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    meta = TIX.build_text_index(docs, path, n_files=4)
+    meta = index_copy("text_full", path)
     q = _q(spark)
     before = _rows(TIX.bm25_index_probe(spark, path, q, k=10))
 
@@ -190,7 +193,7 @@ def test_delete_bogus_ids_cannot_corrupt_stats(spark, tmp_path):
 
 
 def test_update_text_documents_publishes_atomically(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, index_copy
 ):
     """The crash window the composite exists to close: every data commit
     lands but the stats publish 'crashes' — a reader still resolves the
@@ -198,7 +201,7 @@ def test_update_text_documents_publishes_atomically(
     converges to the NEW corpus."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     q = _q(spark)
     before = _rows(TIX.bm25_index_probe(spark, path, q, k=10))
     batch, _ = _updated_docs(spark, docs)
@@ -226,7 +229,7 @@ def test_update_text_documents_publishes_atomically(
     assert audit.n_df_mismatch == 0 and audit.stats_consistent is True
 
 
-def test_stream_text_updates_equals_batch_update(spark, tmp_path):
+def test_stream_text_updates_equals_batch_update(spark, tmp_path, index_copy):
     """The RAG refresh loop as a stream: streamed revisions leave the
     index bit-identical to the batch composite applied to the same
     batches (audit-hash equality) and to the ad-hoc BM25 over the
@@ -237,8 +240,8 @@ def test_stream_text_updates_equals_batch_update(spark, tmp_path):
 
     docs = _docs(spark)
     s_path, b_path = str(tmp_path / "s"), str(tmp_path / "b")
-    TIX.build_text_index(docs, s_path, n_files=4)
-    TIX.build_text_index(docs, b_path, n_files=4)
+    index_copy("text_full", s_path)
+    index_copy("text_full", b_path)
     batch, _ = _updated_docs(spark, docs)
 
     src = str(tmp_path / "revisions")
@@ -307,10 +310,12 @@ def _probe_twin(spark, path, corpus, queries):
     )
 
 
-def test_update_index_vectors_matches_twin_on_updated_corpus(spark, tmp_path):
+def test_update_index_vectors_matches_twin_on_updated_corpus(
+    spark, tmp_path, index_copy
+):
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     batch, fresh = _updated_vectors(spark, emb)
     res = AIX.update_index_vectors(batch, path, txn=("u", 1), n_files=4)
     assert res["n_updated"] == emb.filter(F.col("vec_id") % 5 == 0).count()
@@ -339,10 +344,10 @@ def test_update_index_vectors_matches_twin_on_updated_corpus(spark, tmp_path):
     }
 
 
-def test_ann_delete_bogus_ids_counted_not_applied(spark, tmp_path):
+def test_ann_delete_bogus_ids_counted_not_applied(spark, tmp_path, index_copy):
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    meta = AIX.build_ivfpq_index(emb, path, n_files=4)
+    meta = index_copy("ann_full", path)
     bogus = spark.createDataFrame([(10**9,)], "vec_id long")
     assert AIX.delete_from_index(bogus, path) == {
         "n_deleted": 0, "n_ignored": 1
@@ -355,13 +360,15 @@ def test_ann_delete_bogus_ids_counted_not_applied(spark, tmp_path):
     assert res["n_vectors"] == meta["n_vectors"] - 1
 
 
-def test_ann_delete_visible_at_state_publish(spark, tmp_path, monkeypatch):
+def test_ann_delete_visible_at_state_publish(
+    spark, tmp_path, monkeypatch, index_copy
+):
     """Tombstone visibility is state-pinned (mirrors the text index): a
     delete whose state publish 'crashes' is invisible — the probe
     answers the pre-delete corpus — and the replay converges it."""
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     queries = emb.filter(F.col("vec_id") < 8)
     before = _vrows(AIX.ivfpq_probe(spark, path, queries, k=5, n_probe=4))
 
@@ -387,14 +394,16 @@ def test_ann_delete_visible_at_state_publish(spark, tmp_path, monkeypatch):
     assert got and all(r.vec_id % 7 != 0 for r in got)
 
 
-def test_rebuild_clears_tombstones_and_recovers_deleted_ids(spark, tmp_path):
+def test_rebuild_clears_tombstones_and_recovers_deleted_ids(
+    spark, tmp_path, index_copy
+):
     """The r13 advisory convergence bug: a drift rebuild over a corpus
     containing previously-deleted ids must make them fully live again
     (tombstones cleared at build), so index_recall stops under-reporting
     and the loop converges."""
     emb = _emb(spark)
     path = str(tmp_path / "index")
-    AIX.build_ivfpq_index(emb, path, n_files=4)
+    index_copy("ann_full", path)
     victims = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
     AIX.delete_from_index(victims, path)
     queries = emb.filter(F.col("vec_id") < 8)

@@ -66,7 +66,7 @@ def test_audit_counts_hash_and_consistency(spark, index_path):
     assert len(row.postings_hash) == 32
 
 
-def test_append_converges_to_full_corpus_index(spark, tmp_path):
+def test_append_converges_to_full_corpus_index(spark, tmp_path, index_copy):
     """BM25 index stats are exact (no frozen quantizers): base build +
     delta append must equal the full-corpus index EXACTLY — the probe is
     bit-identical to the ad-hoc form over the whole corpus, and the df
@@ -74,7 +74,7 @@ def test_append_converges_to_full_corpus_index(spark, tmp_path):
     docs = _docs(spark)
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs.filter(F.col("doc_id") <= mid), path, n_files=4)
+    index_copy("text_half", path)
     res = TIX.append_to_text_index(
         docs.filter(F.col("doc_id") > mid), path, txn=("t", 1), n_files=4
     )
@@ -103,7 +103,7 @@ def test_append_converges_to_full_corpus_index(spark, tmp_path):
     assert base_meta.n_docs == mid + 1
 
 
-def test_replay_converges_stats_after_crash(spark, tmp_path):
+def test_replay_converges_stats_after_crash(spark, tmp_path, index_copy):
     """Crash+replay repair: commit the delta's postings AND df under the
     txn tag, 'die' before the stats publish — the replayed call must
     repair the stats row instead of returning early."""
@@ -112,7 +112,7 @@ def test_replay_converges_stats_after_crash(spark, tmp_path):
     base = docs.filter(F.col("doc_id") <= mid)
     delta = docs.filter(F.col("doc_id") > mid)
     path = str(tmp_path / "index")
-    TIX.build_text_index(base, path, n_files=4)
+    index_copy("text_half", path)
     p0 = TIX.load_text_index_stats(spark, path)
     post = TIX._postings(delta, "doc_id", "text", p0["postings_version"] + 1)
     LH.write_table(
@@ -148,16 +148,15 @@ def test_replay_converges_stats_after_crash(spark, tmp_path):
     )
 
 
-def test_partial_replay_commits_missing_table(spark, tmp_path):
+def test_partial_replay_commits_missing_table(spark, tmp_path, index_copy):
     """Crash BETWEEN the two appends: postings committed, df did not —
     the replay must commit the missing df increment and publish correct
     stats (each table's txn log is checked independently)."""
     docs = _docs(spark)
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
-    base = docs.filter(F.col("doc_id") <= mid)
     delta = docs.filter(F.col("doc_id") > mid)
     path = str(tmp_path / "index")
-    TIX.build_text_index(base, path, n_files=4)
+    index_copy("text_half", path)
     p0 = TIX.load_text_index_stats(spark, path)
     post = TIX._postings(delta, "doc_id", "text", p0["postings_version"] + 1)
     LH.write_table(
@@ -242,14 +241,16 @@ def test_audit_chunked_fold_counts_stable(spark, index_path):
     assert tiny1.postings_hash != default.postings_hash
 
 
-def test_delete_probe_equals_live_corpus_and_compaction_folds(spark, tmp_path):
+def test_delete_probe_equals_live_corpus_and_compaction_folds(
+    spark, tmp_path, index_copy
+):
     """delete_from_text_index must make the probe answer EXACTLY as the
     ad-hoc BM25 over the live corpus (N, avgdl, df all decremented, dead
     postings gone); re-deleting is a no-op; compact_text_index folds the
     tombstones physically with identical answers."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     victims = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
     res = TIX.delete_from_text_index(victims, path, txn=("d", 1))
     live = docs.filter(F.col("doc_id") % 7 != 0)
@@ -287,14 +288,14 @@ def test_delete_probe_equals_live_corpus_and_compaction_folds(spark, tmp_path):
     assert _rows(TIX.bm25_index_probe(spark, path, q, k=10)) == got
 
 
-def test_delete_publishes_atomically(spark, tmp_path):
+def test_delete_publishes_atomically(spark, tmp_path, index_copy):
     """A crash between the df/tombstone appends and the stats publish
     must leave default readers on the PRE-delete snapshot (the stats row
     records the tombstone version it accounts for — a latest-read of
     tombstones with stale stats would be neither corpus)."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     q = _queries(spark)
     before = _rows(TIX.bm25_index_probe(spark, path, q, k=10))
     # simulate the crash: commit the decrements and the tombstones, then
@@ -321,7 +322,7 @@ def test_delete_publishes_atomically(spark, tmp_path):
     assert audit.n_tombstones == 0 and audit.n_df_mismatch == 0
 
 
-def test_stream_text_ingest_equals_batch_build(spark, tmp_path):
+def test_stream_text_ingest_equals_batch_build(spark, tmp_path, index_copy):
     """Streamed document ingest must leave the index bit-identical to a
     batch build of the same corpus (BM25 stats are exact — no frozen
     quantizers), and a full stream replay must converge as no-ops."""
@@ -332,8 +333,8 @@ def test_stream_text_ingest_equals_batch_build(spark, tmp_path):
     docs = _docs(spark)
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
     s_path, b_path = str(tmp_path / "s"), str(tmp_path / "b")
-    TIX.build_text_index(docs.filter(F.col("doc_id") <= mid), s_path, n_files=4)
-    TIX.build_text_index(docs, b_path, n_files=4)
+    index_copy("text_half", s_path)
+    index_copy("text_full", b_path)
 
     p = stream_text_ingest(spark, SF_SMOKE, s_path, mid + 1, 10**9, n_files=2)
     assert p["n_docs"] == docs.count()
@@ -356,7 +357,9 @@ def test_stream_text_ingest_equals_batch_build(spark, tmp_path):
     assert TIX.load_text_index_stats(spark, s_path)["n_docs"] == docs.count()
 
 
-def test_vacuum_after_compaction_keeps_default_reads(spark, tmp_path):
+def test_vacuum_after_compaction_keeps_default_reads(
+    spark, tmp_path, index_copy
+):
     """Storage-reclaim lifecycle for the text index: delete ->
     compact_text_index -> vacuum(retain 1) on postings and df. Default
     probes/audits pin the versions the latest stats row references,
@@ -365,7 +368,7 @@ def test_vacuum_after_compaction_keeps_default_reads(spark, tmp_path):
     reclaimed."""
     docs = _docs(spark)
     path = str(tmp_path / "index")
-    TIX.build_text_index(docs, path, n_files=4)
+    index_copy("text_full", path)
     victims = docs.filter(F.col("doc_id") % 7 == 0).select("doc_id")
     TIX.delete_from_text_index(victims, path)
     q = _queries(spark)
@@ -382,6 +385,26 @@ def test_vacuum_after_compaction_keeps_default_reads(spark, tmp_path):
     after = TIX.text_index_audit(spark, path).first()
     assert after.postings_hash == before_hash
     assert after.n_df_mismatch == 0 and after.stats_consistent is True
+
+
+def test_delete_every_doc_leaves_an_empty_live_index(spark, tmp_path):
+    """An index whose every document is tombstoned: both stored-index
+    probes rank nothing (as the ad-hoc form does on an empty corpus)
+    and the audit counts 0, consistent with the stats row."""
+    docs = _docs(spark).filter(F.col("doc_id") < 2)
+    path = str(tmp_path / "index")
+    TIX.build_text_index(docs, path, n_files=2)
+    res = TIX.delete_from_text_index(docs.select("doc_id"), path)
+    assert res["n_deleted"] == 2 and res["n_docs_tokenized"] == 0
+    q = _queries(spark)
+    assert TIX.bm25_index_probe(spark, path, q, k=10).count() == 0
+    assert TIX.bm25_index_rm3(spark, path, q, k=10).count() == 0
+    assert RETR.bm25_topk(docs.limit(0), q, k=10).count() == 0
+    row = TIX.text_index_audit(spark, path).first()
+    assert (row.n_docs, row.n_docs_tokenized, row.n_postings, row.total_dl) == (
+        0, 0, 0, 0
+    )
+    assert row.stats_consistent is True
 
 
 def test_tokenless_docs_split_n_from_avgdl(spark, tmp_path):
@@ -433,7 +456,9 @@ def test_tokenless_docs_split_n_from_avgdl(spark, tmp_path):
     )
 
 
-def test_default_probe_consistent_across_crashed_rebuild(spark, tmp_path):
+def test_default_probe_consistent_across_crashed_rebuild(
+    spark, tmp_path, index_copy
+):
     """A rebuild over a CHANGED corpus crashing between its postings
     overwrite and its stats overwrite leaves default readers on the OLD
     consistent triple (stats records the versions it references)."""
@@ -441,7 +466,7 @@ def test_default_probe_consistent_across_crashed_rebuild(spark, tmp_path):
     mid = docs.agg(F.max("doc_id")).first()[0] // 2
     base = docs.filter(F.col("doc_id") <= mid)
     path = str(tmp_path / "index")
-    TIX.build_text_index(base, path, n_files=4)
+    index_copy("text_half", path)
     q = _queries(spark)
     before = _rows(TIX.bm25_index_probe(spark, path, q, k=10))
     # half-rebuild: overwrite postings + df from the FULL corpus, then
