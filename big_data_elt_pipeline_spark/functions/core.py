@@ -117,12 +117,6 @@ def bucketize(col: Column, mn: float, mx: float, n_bins: int) -> Column:
     return F.when(null_in, F.lit(None)).otherwise(out).cast("int")
 
 
-def round2(col: Column | str, alias: str | None = None) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.round(c, 2)
-    return out.alias(alias) if alias else out
-
-
 def ordered_md5(*fields: str) -> Column:
     """Aggregate: md5 over a group's rows in sorted ``fields`` order, each
     row spelled as its fields joined by ``:`` and the rows joined by

@@ -9,8 +9,6 @@ primary/fallback helper ports ``flows_spark/config_spark.py:69-101``.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -85,14 +83,6 @@ def write_parquet(
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
     return path
-
-
-def with_fallback(primary: Callable[[], DataFrame], fallback: Callable[[], DataFrame]) -> DataFrame:
-    """S6: primary/fallback path resolution (s3a → local in the reference)."""
-    try:
-        return primary()
-    except Exception:
-        return fallback()
 
 
 def write_bucketed(

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.text import shingle_buckets
+from big_data_elt_pipeline_spark.session import pinned_rdds, unpersist_rdds
 
 NB_BUCKETS = 4096
 NB_ALPHA = 0.01
@@ -354,19 +355,8 @@ def logreg_train_fixed_point(
         # the observed bucket set comes from the first gradient round, and
         # the returned plan must not read ``docfe`` after it is freed
         raise ValueError(f"iters must be >= 1, got {iters}")
-    sc = labeled.sparkSession.sparkContext
-
-    def _pinned_ids() -> set:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    def _free(ids: set) -> None:
-        reg = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = reg.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    before = _pinned_ids()
+    spark = labeled.sparkSession
+    before = pinned_rdds(spark)
     # the doc's distinct bucket set as a PURE MAP expression: an explode +
     # groupBy(pid) would shuffle every feature occurrence to rebuild a set
     # the row already determines. No array_sort: every consumer of ``bs``
@@ -381,7 +371,7 @@ def logreg_train_fixed_point(
     # row here carries a real per-row decimal fold (|bs| adds), so
     # serializing the rounds onto one task was measured 3x SLOWER than the
     # per-task overhead it saved (parts=1 round 5.1 s vs parts=32 1.5 s)
-    docfe_ids = _pinned_ids() - before
+    docfe_ids = pinned_rdds(spark) - before
 
     zero_se = F.lit(0).cast("decimal(25,9)")
     empty_bs = F.array().cast("array<bigint>")
@@ -398,7 +388,7 @@ def logreg_train_fixed_point(
         )
         .localCheckpoint(eager=True)
     )
-    state_ids = _pinned_ids() - before - docfe_ids
+    state_ids = pinned_rdds(spark) - before - docfe_ids
     for _ in range(iters):
         warr = F.col("warr")
         sw = F.aggregate(
@@ -465,10 +455,10 @@ def logreg_train_fixed_point(
             )
             .localCheckpoint(eager=True)
         )
-        _free(state_ids)
-        state_ids = _pinned_ids() - before - docfe_ids
+        unpersist_rdds(spark, state_ids)
+        state_ids = pinned_rdds(spark) - before - docfe_ids
         state = new_state
-    _free(docfe_ids)
+    unpersist_rdds(spark, docfe_ids)
     return state.select(
         F.explode(
             F.concat(

@@ -28,6 +28,7 @@ from big_data_elt_pipeline_spark.functions.text import (
     tokens,
     word_shingles,
 )
+from big_data_elt_pipeline_spark.session import pinned_rdds, unpersist_rdds
 
 MERSENNE_P = (1 << 61) - 1
 N_PERMS = 16
@@ -288,8 +289,7 @@ def minhash_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
 
 
 def ngram_jaccard_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        n: int = 3, threshold: float = 0.5,
-                        candidate_passes: int = 1) -> DataFrame:
+                        n: int = 3, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard near-dup via PREFIX FILTERING (ppjoin-style).
 
     MinHash trades recall for speed; this operator is LOSSLESS: order each
@@ -304,11 +304,7 @@ def ngram_jaccard_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     At 100 TB: one groupBy(shingle) for document frequencies, one windowed
     rank per doc, one equi-join on prefix shingles (candidates only), then
     the candidate-only Jaccard verify — same shuffle discipline as the
-    MinHash path, but with an exactness guarantee. When the prefix-shingle
-    relation outgrows memory (the x64 single-JVM exhibit), set
-    ``candidate_passes=R`` to run the join as R sequential hash-range
-    sub-joins with identical output (pytest-pinned) and 1/R the peak
-    shuffle footprint.
+    MinHash path, but with an exactness guarantee.
 
     Shingles are reduced to a portable 60-bit hash at the source: every
     downstream join/groupBy/sort then moves longs instead of ~20-byte
@@ -355,78 +351,16 @@ def ngram_jaccard_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str =
     # with at 100 TB.
     eps = 1e-9
     alpha = (F.lit(threshold / (1.0 + threshold)) * (F.col("n1") + F.col("n2"))) - F.lit(eps)
-
-    def _cand(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.join(b, "shingle")
-            .filter(
-                (F.col("id1") < F.col("id2"))
-                & (F.least(F.col("n1") - F.col("i1"), F.col("n2") - F.col("i2")) + 1
-                   >= F.ceil(alpha))
-            )
-            .select("id1", "id2")
+    cand = (
+        p1.join(p2, "shingle")
+        .filter(
+            (F.col("id1") < F.col("id2"))
+            & (F.least(F.col("n1") - F.col("i1"), F.col("n2") - F.col("i2")) + 1
+               >= F.ceil(alpha))
         )
-
-    if candidate_passes <= 1:
-        cand = _cand(p1, p2).distinct()
-    else:
-        # RANGE-PARTITIONED CANDIDATE PASSES: split the prefix-shingle
-        # self-join into R disjoint hash ranges of the join key and run
-        # them as R SEQUENTIAL sub-joins (eager localCheckpoint per pass
-        # materializes each pass's candidate pairs — result-sized, small —
-        # before the next pass starts). The union over ranges is exactly
-        # the full join (the key decides the range, so no cross-range pair
-        # exists); output is identical, but peak executor memory is ONE
-        # pass's shuffle instead of the whole 27M-row-at-x64 relation —
-        # the single-JVM allocator ceiling the x64 exhibit hits without
-        # it. On a real cluster the same knob caps per-wave shuffle
-        # footprint when the shingle relation outgrows aggregate memory.
-        #
-        # Each pass DELIBERATELY recomputes the prefix relation (scan ->
-        # freq -> rank windows, filtered to its hash range) instead of
-        # checkpointing it once: both alternatives were measured at x64
-        # (320k docs, 27M shingles, single 48 GB JVM) and lost —
-        #   unsplit               205 s   (memory-bound, GC pressure)
-        #   R=4, recompute        155 s   <- this form
-        #   R=8, recompute        473 s   (8x upstream recompute dominates)
-        #   R=4, prefix-ckpt      411 s   (13M-row MEMORY_AND_DISK write +
-        #                                  AQE-opaque checkpoint scan cost
-        #                                  far more than 4 recomputes —
-        #                                  the shingle_table lesson again)
-        # R=4 is the sweet spot: enough ranges to duck the allocator
-        # ceiling, few enough that the recompute tax stays under the win.
-        # The merged distinct candidate set is itself eagerly checkpointed
-        # (result-sized — the only frame class the caching lesson allows)
-        # and the R per-pass checkpoints are freed HERE, immediately: the
-        # r7 form left all R pinned for the session lifetime unless the
-        # caller swept the persistent-RDD registry. Only the one
-        # candidate-set checkpoint (consumed by the returned plan)
-        # survives — same contract as neardup_clusters' final labels.
-        sc = docs.sparkSession.sparkContext
-
-        def _pinned_ids() -> set:
-            return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-        before = _pinned_ids()
-        rng = F.pmod(F.col("shingle"), F.lit(candidate_passes))
-        parts = [
-            _cand(p1.filter(rng == r), p2.filter(rng == r))
-            .localCheckpoint(eager=True)
-            for r in range(candidate_passes)
-        ]
-        pass_ids = _pinned_ids() - before
-        from functools import reduce
-
-        cand = (
-            reduce(lambda x, y: x.union(y), parts)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        reg = sc._jsc.getPersistentRDDs()
-        for rid in pass_ids:
-            rdd = reg.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
+        .select("id1", "id2")
+        .distinct()
+    )
     return jaccard_verify(cand, sh, id_col, threshold,
                           sizes=shingle_sizes(docs, id_col, text_col, n))
 
@@ -572,26 +506,15 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # correctness is unaffected either way, but a sibling job's cache
     # would be silently evicted. Run this operator from a single driver
     # thread (the engine's callers all do).
-    sc = pairs.sparkSession.sparkContext
-
-    def _pinned_ids() -> set:
-        return set(sc._jsc.getPersistentRDDs().keySet().toArray())
-
-    def _free(ids: set) -> None:
-        reg = sc._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = reg.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
-    seen = _pinned_ids()
+    spark = pairs.sparkSession
+    seen = pinned_rdds(spark)
     edges = (
         pairs.select(F.col("id1").alias("u"), F.col("id2").alias("v"))
         .union(pairs.select(F.col("id2").alias("u"), F.col("id1").alias("v")))
         .distinct()
         .localCheckpoint(eager=True)
     )
-    edges_ids = _pinned_ids() - seen
+    edges_ids = pinned_rdds(spark) - seen
     seen |= edges_ids
     # seed labels with min(node, min(neighbors)) instead of node: same
     # shuffle as the plain distinct() (groupBy on u), but near-clique
@@ -605,7 +528,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .select("node", F.least("node", "_min_nbr").alias("label"))
         .localCheckpoint(eager=True)
     )
-    label_ids = _pinned_ids() - seen
+    label_ids = pinned_rdds(spark) - seen
     seen |= label_ids
     exact_sum = F.sum(F.col("label").cast("decimal(38,0)"))
     prev_sum = labels.agg(exact_sum).first()[0]
@@ -623,9 +546,9 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
             .groupBy("node").agg(F.min("label").alias("label"))
             .localCheckpoint(eager=True)
         )
-        new_ids = _pinned_ids() - seen
+        new_ids = pinned_rdds(spark) - seen
         seen |= new_ids
-        _free(label_ids)  # superseded round: blocks no longer reachable
+        unpersist_rdds(spark, label_ids)  # superseded round: blocks no longer reachable
         label_ids = new_ids
         new_sum = labels.agg(exact_sum).first()[0]
         if new_sum == prev_sum:
@@ -633,7 +556,7 @@ def neardup_clusters(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         prev_sum = new_sum
     else:
         raise RuntimeError(f"neardup_clusters did not converge in {max_iter} rounds")
-    _free(edges_ids)  # the returned plan reads only the final labels
+    unpersist_rdds(spark, edges_ids)  # the returned plan reads only the final labels
     out = labels.select(
         F.col("node").alias("doc_id"), F.col("label").alias("cluster_id")
     )

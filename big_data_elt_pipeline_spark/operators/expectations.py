@@ -48,10 +48,6 @@ def matches(col: str, pattern: str, name: str | None = None) -> tuple[str, Colum
     return name or f"matches_{col}", F.col(col).rlike(pattern)
 
 
-def one_of(col: str, values: list) -> tuple[str, Column]:
-    return f"one_of_{col}", F.col(col).isin(values)
-
-
 def refers_to(
     df: DataFrame, col: str, dim: DataFrame, key: str
 ) -> tuple[DataFrame, tuple[str, Column]]:

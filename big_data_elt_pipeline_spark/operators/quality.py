@@ -83,18 +83,6 @@ def decorated_lines(doc_id: F.Column, text: F.Column) -> F.Column:
     return F.transform(F.sequence(F.lit(0), (n_lines - 1).cast("int")), _line)
 
 
-def c4_keep_line(line: F.Column) -> F.Column:
-    """The C4 per-line keep predicate: terminal '.', >= MIN_LINE_WORDS
-    words, none of the blocklist markers."""
-    return (
-        (F.substring(line, -1, 1) == ".")
-        & (F.size(F.split(line, " ")) >= MIN_LINE_WORDS)
-        & (F.instr(line, BLOCK_BRACE) == 0)
-        & (F.instr(line, BLOCK_LOREM) == 0)
-        & (F.instr(line, BLOCK_JS) == 0)
-    )
-
-
 def c4_line_stats(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:

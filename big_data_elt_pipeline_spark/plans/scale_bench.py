@@ -2,12 +2,12 @@
 
 The correctness gate runs these operators on the base ``documents`` /
 ``embeddings`` tables; this module provides the SCALING evidence — the
-same operators on deterministic x4 / x16 corpora min-of-2 plus a
-single-shot x64 extrapolation pin (exactly the factors ``bench.py``
-executes and records, so the artifact and this doc agree), built so the
-true-result size grows ~linearly with the factor. The sf0.1 base corpus
-is itself 10x the sf0.01 one (5,000 docs in the round-5 testdata drop),
-so the x16 point spans 80,000 docs and the x64 pin 320,000:
+same operators on deterministic x4 / x16 corpora min-of-2 (``bench.py``
+records x1/x4/x16 through ``run_scaled``; the pins below run at the
+factors ``tools/scalepin.py`` passes), built so the true-result size
+grows ~linearly with the factor. The sf0.1 base corpus is itself 10x the
+sf0.01 one (5,000 docs in the round-5 testdata drop), so the x16 point
+spans 80,000 docs and an x64 pin 320,000:
 
 - Text copies get a per-copy SALT suffixed onto every word
   (``a b c`` -> ``ac7 bc7 cc7``). Word n-gram shingles keep exactly the
@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.operators import dedup as D
 from big_data_elt_pipeline_spark.operators import similarity as S
+from big_data_elt_pipeline_spark.session import pinned_rdds, unpersist_rdds
 from big_data_elt_pipeline_spark.sources.tpch import read_table
 
 _ID_STRIDE = 10_000_000
@@ -123,19 +124,6 @@ def scaled_embeddings(spark: SparkSession, sf_dir: str, factor: int, dim: int = 
     )
 
 
-def _pinned(spark: SparkSession) -> set:
-    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-
-
-def _free_since(spark: SparkSession, before: set) -> None:
-    """Unpersist every RDD pinned since ``before`` was taken."""
-    reg = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in set(reg.keySet().toArray()) - before:
-        rdd = reg.get(rid)
-        if rdd is not None:
-            rdd.unpersist(False)
-
-
 @contextmanager
 def _staged(spark: SparkSession, sf_dir: str, factor: int, *kinds: str):
     """Stage the xK corpora named in ``kinds`` (``"docs"``, ``"emb"``) as
@@ -153,7 +141,7 @@ def _staged(spark: SparkSession, sf_dir: str, factor: int, *kinds: str):
     single-core."""
     build = {"docs": scaled_docs, "emb": scaled_embeddings}
     root = tempfile.mkdtemp(prefix=f"scale_x{factor}_")
-    before = _pinned(spark)
+    before = pinned_rdds(spark)
     try:
         frames = []
         for kind in kinds:
@@ -162,7 +150,7 @@ def _staged(spark: SparkSession, sf_dir: str, factor: int, *kinds: str):
             frames.append(spark.read.parquet(f"{root}/{kind}"))
         yield (root, *frames)
     finally:
-        _free_since(spark, before)
+        unpersist_rdds(spark, pinned_rdds(spark) - before)
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -178,7 +166,7 @@ def _timed(spark: SparkSession, out: dict, key: str, fn, rows: str | None = None
     runs keep their labels checkpoint alive otherwise — across the ~40
     runs of ``run_scaled`` the accumulation measurably slowed later
     factors). Returns the recorded seconds."""
-    before = _pinned(spark)
+    before = pinned_rdds(spark)
     if warm:
         fn()
     best = None
@@ -187,7 +175,7 @@ def _timed(spark: SparkSession, out: dict, key: str, fn, rows: str | None = None
         n = fn()
         dt = time.perf_counter() - t0
         best = dt if best is None else min(best, dt)
-    _free_since(spark, before)
+    unpersist_rdds(spark, pinned_rdds(spark) - before)
     out[key] = round(best, 4)
     if rows is not None:
         out[rows] = float(n)
@@ -670,81 +658,40 @@ def loader_scale_pin(
 
 def run_scaled(
     spark: SparkSession, sf_dir: str, factors: tuple[int, ...] = (1, 4, 16),
-    single_shot: tuple[int, ...] = (),
     progress=None,
-    session_factory=None,
     should_run=None,
-) -> tuple[dict[str, float], SparkSession]:
+) -> dict[str, float]:
     """Time dedup_minhash / dedup_ngram_jaccard / dedup_winnow /
-    dedup_clusters / ann_lsh_topk / training_mixture at each
-    corpus factor, min-of-2 per point — single shots on this host showed
-    2x swings (the same phantom the round-3 pipeline bench shipped), and
-    a noisy point would distort the linearity trend this exhibit exists
-    to demonstrate. Also records result rows so linear OUTPUT growth is
-    auditable next to wall-time.
+    dedup_substrings / dedup_clusters / ann_lsh_topk / training_mixture at
+    each corpus factor, min-of-2 per point — single shots on this host
+    showed 2x swings, and a noisy point would distort the linearity trend
+    this exhibit exists to demonstrate. Also records result rows so linear
+    OUTPUT growth is auditable next to wall-time.
 
     Before the first timed factor, every operator runs ONCE untimed at
-    that factor: the r05 artifact charged whole-stage codegen compilation
-    and parquet-footer reads to the x1 points, inverting the trend
+    that factor: without it whole-stage codegen compilation and
+    parquet-footer reads land on the x1 points and invert the trend
     (x1=18.9 s vs x4=6.7 s for minhash). Warm-up makes the x1 column a
     steady-state measurement like the others.
 
-    ``single_shot`` factors (the x64 extrapolation pin) run once, no
-    min-of-2 — they exist to bound the curve, not to be quotable to 2
-    decimals, and a second ~3-minute pass would double the bench tail for
-    no trend information.
-
-    ``session_factory`` (no-arg -> SparkSession): when provided, each
-    single-shot factor gets a FRESH session. Measured necessity: by x64
-    the scale session has executed ~28 prior runs and its accumulated
-    JVM/block-manager state swings the single-shot 2-4x run-to-run —
-    identical ngram-x64 code measured 293 / 374 / 669 s across three
-    in-suite bench runs vs 155 s reproducible on a dedicated session.
-    The x1-x16 min-of-2 points stay on the shared session (they damp
-    noise by repetition and their state burden is small). Each swapped-in
-    session gets an untimed corpus-count warm-up before its timed shot
-    (codegen + parquet footers off the clock — the same cold-session
-    artifact the first-factor warm-up removes from the x1 column).
-
-    OWNERSHIP: when ``session_factory`` fires, the caller's session is
-    STOPPED and replaced; the active session is therefore RETURNED
-    alongside the timings — callers must rebind
-    (``out, spark = run_scaled(spark, ...)``), never keep using the
-    session they passed in.
-
     ``should_run`` (factor -> bool, optional): consulted immediately
     before each factor's corpus materialization — the bench deadline
-    budget's shed hook (r8 verdict #1: expensive trailing factors drop
-    first when wall-clock runs short; a skipped factor simply has no
-    ``scale_*_x{f}`` keys in the result)."""
+    budget's shed hook; a skipped factor simply has no ``scale_*_x{f}``
+    keys in the result."""
     from big_data_elt_pipeline_spark.plans.curation_queries import (
         governance_mixture,
     )
 
     out: dict[str, float] = {}
     warmed = False
-    for factor in tuple(factors) + tuple(single_shot):
+    for factor in factors:
         if should_run is not None and not should_run(factor):
             continue
-        one_shot = factor in single_shot
-        fresh_session = one_shot and session_factory is not None
-        if fresh_session:
-            spark.stop()
-            spark = session_factory()
         with _staged(spark, sf_dir, factor, "docs", "emb") as (_, docs, emb):
             queries = emb.filter(F.col("vec_id") < 64)  # base copy only: fixed probes
-            if fresh_session:
-                docs.count()
-                emb.count()
             runs = {
                 "dedup_minhash": lambda: D.minhash_dedup(docs),
-                # x64 runs the range-partitioned candidate passes (R=4): the
-                # unsplit join is allocator-bound at 27M shingles in one JVM
-                # (measured 205 s -> 155 s; R=8 and a checkpointed prefix
-                # both measured WORSE — numbers in the operator's comment)
-                "dedup_ngram_jaccard": lambda: D.ngram_jaccard_dedup(
-                    docs, candidate_passes=4 if factor >= 64 else 1
-                ),
+                "dedup_ngram_jaccard": lambda: D.ngram_jaccard_dedup(docs),
                 "dedup_winnow": lambda: D.winnow_neardup(docs, threshold=0.4),
                 # per-copy word salt => no window ever matches across copies:
                 # repeated spans (and the window shuffle) grow exactly xK
@@ -760,7 +707,6 @@ def run_scaled(
             for name, fn in runs.items():
                 key = f"scale_{name}_x{factor}"
                 _timed(spark, out, key, lambda: fn().count(), rows=f"{key}_rows",
-                       warm=not warmed, runs=1 if one_shot else _RUNS,
-                       progress=progress)
+                       warm=not warmed, progress=progress)
         warmed = True
-    return out, spark
+    return out

@@ -23,6 +23,13 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def default_driver_memory(phys_bytes: int) -> str:
+    """Driver heap for a host with ``phys_bytes`` of physical memory: half
+    of it in whole GB (at least 1g), capped at 48g. A heap sized past the
+    host lets G1 grow instead of collect until the JVM is OOM-killed."""
+    return f"{max(1, min(48, phys_bytes // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
     """Create (or return) the shared SparkSession.
 
@@ -33,6 +40,8 @@ def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
     - ``parquet.aggregatePushdown`` lets MIN/MAX/COUNT run on footer stats.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS)
+    heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
@@ -51,7 +60,7 @@ def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
         .config("spark.default.parallelism", cpus)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.warehouse.dir", "/tmp/spark_graft_warehouse")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
     )
     if not os.environ.get("SPARK_MASTER_URL"):
         builder = builder.master(f"local[{cpus}]")
@@ -60,3 +69,21 @@ def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def pinned_rdds(spark: SparkSession) -> set:
+    """Ids of the RDDs the session's persistent-RDD registry holds now —
+    the snapshot to diff against when freeing what a span pinned
+    (``localCheckpoint`` blocks are reachable only through this registry;
+    ``DataFrame.unpersist`` does not free them)."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def unpersist_rdds(spark: SparkSession, ids: set) -> None:
+    """Unpersist, without blocking, every RDD in ``ids`` that the registry
+    still holds."""
+    reg = spark.sparkContext._jsc.getPersistentRDDs()
+    for rid in ids:
+        rdd = reg.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)

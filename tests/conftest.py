@@ -6,10 +6,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# Cap the suite's JVM heap. Its live set is small, but under the 48g
-# session default G1 keeps growing the heap instead of collecting: on a
-# 15 GB, 4-vCPU VM the Spark JVM reached 15 GB RSS and was OOM-killed
-# two thirds of the way through the suite. An explicit setting wins.
+# Cap the suite's JVM heap. Its live set is small, but under a 48g heap
+# G1 keeps growing the heap instead of collecting: on a 15 GB, 4-vCPU VM
+# the Spark JVM reached 15 GB RSS and was OOM-killed two thirds of the
+# way through the suite. An explicit setting wins over the session's
+# host-derived default.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "8g")
 
 SF_SMOKE = "/root/testdata/sf0.001"

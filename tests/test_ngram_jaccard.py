@@ -55,18 +55,3 @@ def test_prefix_filter_is_lossless(spark):
         )
         assert expected, f"seed {seed}: degenerate corpus — no true pairs"
 
-
-def test_range_partitioned_passes_identical(spark):
-    # candidate_passes splits the prefix join into sequential hash-range
-    # sub-joins — a memory knob, never a semantics knob
-    docs = _corpus(3)
-    sdf = spark.createDataFrame(docs, "doc_id long, text string")
-    base = {
-        (int(r.id1), int(r.id2), round(float(r.jaccard), 12))
-        for r in ngram_jaccard_dedup(sdf, threshold=0.5).collect()
-    }
-    split = {
-        (int(r.id1), int(r.id2), round(float(r.jaccard), 12))
-        for r in ngram_jaccard_dedup(sdf, threshold=0.5, candidate_passes=4).collect()
-    }
-    assert split == base and base

@@ -12,6 +12,7 @@ import time
 import pytest
 
 from big_data_elt_pipeline_spark.plans import scale_bench as SB
+from big_data_elt_pipeline_spark.session import pinned_rdds
 from tests.conftest import SF_SMOKE
 
 FACTORS = (1, 2)
@@ -125,7 +126,7 @@ def test_timed_warm_min_and_free(spark):
         calls.append(spark.range(3).localCheckpoint(eager=True))
         return len(calls)
 
-    before = SB._pinned(spark)
+    before = pinned_rdds(spark)
     out: dict = {}
     best = SB._timed(spark, out, "k", fn, rows="k_rows", warm=True,
                      progress=lambda k, v: seen.append((k, v)))
@@ -133,7 +134,7 @@ def test_timed_warm_min_and_free(spark):
     assert 0.05 <= best < 0.3  # the min of the timed runs
     assert out == {"k": best, "k_rows": float(len(calls))}
     assert seen == [("k", best)]
-    assert SB._pinned(spark) <= before  # every checkpoint the calls made
+    assert pinned_rdds(spark) <= before  # every checkpoint the calls made
 
 
 @pytest.mark.parametrize("name", sorted(scalepin.PINS))
@@ -153,11 +154,11 @@ def test_scale_pin_points(spark, name, monkeypatch):
             monkeypatch.setattr(mod, fn_name, counted)
 
     pin = scalepin.PINS[name]
-    before = SB._pinned(spark)
+    before = pinned_rdds(spark)
     seen = []
     pts = pin.fn(spark, SF_SMOKE, factors=FACTORS,
                  progress=lambda k, v: seen.append(k))
-    assert SB._pinned(spark) <= before  # the harness frees what it pinned
+    assert pinned_rdds(spark) <= before  # the harness frees what it pinned
 
     assert set(pts) == _keys(KEYS[name])
     assert all(isinstance(v, float) and v >= 0 for v in pts.values())
@@ -187,10 +188,9 @@ def test_knn_bucket_audit(spark):
 
 
 def test_run_scaled_points(spark):
-    before = SB._pinned(spark)
-    out, same = SB.run_scaled(spark, SF_SMOKE, factors=FACTORS)
-    assert same is spark
-    assert SB._pinned(spark) <= before
+    before = pinned_rdds(spark)
+    out = SB.run_scaled(spark, SF_SMOKE, factors=FACTORS)
+    assert pinned_rdds(spark) <= before
     assert set(out) == _keys(
         [f"scale_{op}_x{{f}}{s}" for op in SCALE_OPS for s in ("", "_rows")]
     )
