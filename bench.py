@@ -220,6 +220,7 @@ _STATE: dict = {
     "shed": [],       # ordered record of everything dropped
     "sf": 0.0,
     "host0": (-1.0, -1.0),  # _host_snapshot() when main() started
+    "cpus": None,  # the session's local[N] width, set by main()
     "write_local": True,
     "emitted": False,
 }
@@ -274,7 +275,7 @@ def _extras(iow_end: float) -> dict:
         "scale": {short: [point(op, f) for f in SCALE_FACTORS]
                   for op, short in SCALE_ALIAS.items()},
         "shed": list(_STATE["shed"]),
-        "host": {"cpus": os.cpu_count(),
+        "host": {"cpus": _STATE["cpus"],
                  "iowait_s": round(iow_end - _STATE["host0"][1], 1)},
     }
 
@@ -531,6 +532,10 @@ def main(args: argparse.Namespace) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _STATE["sf"] = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     _STATE["write_local"] = not args.only
+    # one task slot per usable CPU: the session default (32) oversubscribes
+    # a smaller host and its load swamps the timings
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
+    _STATE["cpus"] = int(os.environ["SPARK_GRAFT_CPUS"])
     from big_data_elt_pipeline_spark.plans import queries as Q
     from big_data_elt_pipeline_spark.session import get_spark
 

@@ -20,8 +20,14 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.csv(path, header=True, schema=schema, mode="PERMISSIVE")
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+def read_parquet(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Parquet scan. Without ``schema`` Spark infers it from a footer,
+    which costs one job per read; lake tables this program wrote itself
+    pass their ``schemas.py`` StructType instead."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

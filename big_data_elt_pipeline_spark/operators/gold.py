@@ -6,10 +6,13 @@ fact enrichment (J1), dim/feature aggregation (A1-A2, J2-J3), scoring
 (A8, F6-F10), summaries (A3, A5-A6), cohort (J5/W2).
 
 Scale design:
-- ``reference_date`` and every quantile/min-max threshold used by scoring is
-  collected in ONE ``agg`` action and injected as literals — the reference
-  fires 4+ separate driver actions (``flows_spark/gold_transformation_spark.py:125-142``);
+- The fact scalars (``fact_scalars``: reference date + histogram bounds)
+  and every quantile/min-max threshold used by scoring are each collected
+  in ONE ``agg`` action and injected as literals — the reference fires 4+
+  separate driver actions (``flows_spark/gold_transformation_spark.py:125-142``);
   at 100 TB each extra action is a full scan.
+- Outputs bounded by a dimension key sort in one partition
+  (``serving.bounded_sort``), not through a range exchange.
 - The fact table feeds many sinks; callers should ``persist()`` it once
   (the reference recomputes the scan+join lineage 9× — SURVEY §3.3).
 - Day-difference semantics follow pandas (``(ref - d).days`` = floor of the
@@ -35,6 +38,7 @@ from big_data_elt_pipeline_spark.functions.core import (
     money_sum,
     safe_div,
 )
+from big_data_elt_pipeline_spark.operators.serving import bounded_sort
 
 HORIZON_DAYS = 365
 
@@ -68,13 +72,25 @@ def build_fact(achats: DataFrame, clients: DataFrame) -> DataFrame:
     )
 
 
-def reference_date(fact: DataFrame) -> dt.datetime:
-    """Dataset max purchase timestamp (``flows/gold_transformation.py:183``).
-    One action; parquet footer stats can answer it without a full scan."""
-    ref = fact.agg(F.max("date_achat")).first()[0]
+def _checked_ref(ref: dt.datetime | None) -> dt.datetime:
     if ref is None:
         raise ValueError("no valid purchase dates — cannot derive reference date")
     return ref
+
+
+def reference_date(fact: DataFrame) -> dt.datetime:
+    """Dataset max purchase timestamp (``flows/gold_transformation.py:183``).
+    One action; parquet footer stats can answer it without a full scan."""
+    return _checked_ref(fact.agg(F.max("date_achat")).first()[0])
+
+
+def fact_scalars(fact: DataFrame) -> tuple[dt.datetime, tuple[float, float]]:
+    """``reference_date`` and the ``montant`` histogram bounds
+    (``serving.distribution_bounds``) in ONE action over the fact."""
+    ref, mn, mx = fact.agg(
+        F.max("date_achat"), F.min("montant"), F.max("montant")
+    ).first()
+    return _checked_ref(ref), (float(mn), float(mx))
 
 
 def build_dim_clients(clients: DataFrame, fact: DataFrame, ref: dt.datetime) -> DataFrame:
@@ -257,7 +273,7 @@ def score_clients(
 
 def summarize_segments(scored: DataFrame) -> DataFrame:
     """A5: per-segment rollup with exact medians (F.median, Spark ≥3.4)."""
-    return (
+    return bounded_sort(
         scored.groupBy("segment_label")
         .agg(
             F.count("id_client").alias("clients"),
@@ -266,18 +282,18 @@ def summarize_segments(scored: DataFrame) -> DataFrame:
             fixed_sum("value_at_risk_12m", "value_at_risk_12m"),
             F.median(F.col("freq_12m").cast("double")).alias("freq_med"),
             F.median(F.col("recency_days").cast("double")).alias("recency_med"),
-        )
-        .orderBy(F.desc("expected_value_12m"))
+        ),
+        F.desc("expected_value_12m"),
     )
 
 
 def aggregate_sales(fact: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """A3: revenue by month / country / product — partial-aggregated
     (map-side combine) hash aggregations, one shuffle each on a small key."""
-    ca_monthly = fact.groupBy("mois").agg(money_sum("montant", "ca")).orderBy("mois")
-    ca_country = fact.groupBy("pays").agg(money_sum("montant", "ca")).orderBy(F.desc("ca"))
-    ca_product = fact.groupBy("produit").agg(money_sum("montant", "ca")).orderBy(F.desc("ca"))
-    return ca_monthly, ca_country, ca_product
+    def by(key: str, order: Column | str) -> DataFrame:
+        return bounded_sort(fact.groupBy(key).agg(money_sum("montant", "ca")), order)
+
+    return by("mois", "mois"), by("pays", F.desc("ca")), by("produit", F.desc("ca"))
 
 
 def build_cohort_first_purchase(fact: DataFrame) -> DataFrame:
@@ -286,7 +302,7 @@ def build_cohort_first_purchase(fact: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     w = Window.partitionBy("id_client")
-    return (
+    return bounded_sort(
         fact.withColumn(
             "first_purchase_month",
             F.date_format(F.min("date_achat").over(w), "yyyy-MM"),
@@ -295,6 +311,6 @@ def build_cohort_first_purchase(fact: DataFrame) -> DataFrame:
         .agg(
             F.countDistinct("id_client").alias("clients"),
             money_sum("montant", "ca"),
-        )
-        .orderBy("first_purchase_month")
+        ),
+        "first_purchase_month",
     )

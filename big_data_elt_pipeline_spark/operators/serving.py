@@ -19,24 +19,38 @@ from big_data_elt_pipeline_spark.functions.core import (
 )
 
 
+def bounded_sort(df: DataFrame, *cols: Column | str) -> DataFrame:
+    """Total order for a result that is bounded by a dimension key.
+
+    Only for outputs with at most one row per calendar day/week/month,
+    country, product, segment or histogram bucket: rows that few fit one
+    task, so ``coalesce(1)`` + ``sortWithinPartitions`` orders them with
+    no range-sampling job and no range exchange, and leaves a single
+    sorted partition that an unpartitioned window can consume as is. A
+    result that grows with the fact table (one row per client or
+    purchase) must keep a global ``orderBy``.
+    """
+    return df.coalesce(1).sortWithinPartitions(*cols)
+
+
 def build_daily(fact: DataFrame) -> DataFrame:
     """A4 daily: revenue + order count per calendar day."""
-    return (
+    return bounded_sort(
         fact.filter(F.col("date_achat").isNotNull())
         .groupBy(F.date_format("date_achat", "yyyy-MM-dd").alias("jour"))
-        .agg(money_sum("montant", "ca"), F.count("id_achat").alias("achats"))
-        .orderBy("jour")
+        .agg(money_sum("montant", "ca"), F.count("id_achat").alias("achats")),
+        "jour",
     )
 
 
 def build_weekly(fact: DataFrame) -> DataFrame:
     """A4 weekly: pandas ``to_period("W").start_time`` weeks start Monday;
     ``date_trunc('week', ...)`` is also Monday-anchored — compatible."""
-    return (
+    return bounded_sort(
         fact.filter(F.col("date_achat").isNotNull())
         .groupBy(F.date_format(F.date_trunc("week", F.col("date_achat")), "yyyy-MM-dd").alias("semaine"))
-        .agg(money_sum("montant", "ca"), F.count("id_achat").alias("achats"))
-        .orderBy("semaine")
+        .agg(money_sum("montant", "ca"), F.count("id_achat").alias("achats")),
+        "semaine",
     )
 
 
@@ -120,7 +134,7 @@ def build_distribution(
     if labels:
         arr = F.array(*[F.lit(s) for s in interval_labels(mn, mx, bins)])
         out = out.withColumn("bucket_label", F.element_at(arr, F.col("bucket") + 1))
-    return out.orderBy("bucket")
+    return bounded_sort(out, "bucket")
 
 
 def build_monthly_growth(ca_monthly: DataFrame) -> DataFrame:
@@ -128,11 +142,12 @@ def build_monthly_growth(ca_monthly: DataFrame) -> DataFrame:
 
     The window is unpartitioned but the input is one row per month —
     dimension-sized by construction, so a single-task sort is correct even
-    at 100 TB of fact data.
+    at 100 TB of fact data. On ``aggregate_sales``' single sorted
+    partition the window needs no exchange and no sort of its own.
     """
     w = Window.orderBy("mois")
     prev = F.lag("ca", 1).over(w)
-    return (
+    return bounded_sort(
         ca_monthly.select("mois", "ca")
         .withColumn("prev_ca", prev)
         .withColumn("growth_abs", F.col("ca") - F.col("prev_ca"))
@@ -142,8 +157,8 @@ def build_monthly_growth(ca_monthly: DataFrame) -> DataFrame:
                 F.col("prev_ca").isNotNull() & (F.col("prev_ca") != 0),
                 F.col("growth_abs") / F.col("prev_ca"),
             ),
-        )
-        .orderBy("mois")
+        ),
+        "mois",
     )
 
 

@@ -12,14 +12,24 @@ flow is ONE SparkSession and one lazy plan graph per stage:
   recomputes the scan+join lineage for each of its 9 sinks (SURVEY §3.3).
 - serving: daily/weekly/distribution/monthly-growth views (A4/A9/W1).
 
+At benchmark size a pass is bound by the number of jobs that run one
+after another, not by data, so every stage keeps its serial prefix short:
+lake tables this module wrote are read back with their ``schemas.py``
+StructTypes (no footer-inference job per read), gold collects its fact
+scalars in one action and computes the score thresholds inside the sink
+pool, and the bounded sinks sort in one partition (no range-sampling
+job).
+
 ``golden_check`` ports the reference's ``scripts/check_gold.py`` schema +
-invariant gate.
+invariant gate; it reads with inferred schemas on purpose, since its job
+is to check what is on disk.
 """
 
 from __future__ import annotations
 
 import datetime as dt
 import time
+from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -27,7 +37,13 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import io as eio
 from big_data_elt_pipeline_spark.operators import gold, serving, silver
-from big_data_elt_pipeline_spark.schemas import ACHATS_RAW, CLIENTS_RAW, GOLD_EXPECTED_COLUMNS
+from big_data_elt_pipeline_spark.schemas import (
+    ACHATS_RAW,
+    ACHATS_SILVER,
+    CLIENTS_RAW,
+    CLIENTS_SILVER,
+    GOLD_EXPECTED_COLUMNS,
+)
 
 GOLD_TABLES = [
     "fact_achats", "dim_clients", "client_features", "client_scores",
@@ -50,7 +66,7 @@ def bronze_ingest(spark: SparkSession, source_dir: str, lake_dir: str) -> dict[s
         spark.sparkContext.setJobDescription(f"bronze ingest: {name}")
         df = eio.read_csv(spark, f"{source_dir}/{name}.csv", schema)
         eio.write_parquet(df, f"{lake_dir}/bronze/{name}")
-        return name, spark.read.parquet(f"{lake_dir}/bronze/{name}").count()
+        return name, eio.read_parquet(spark, f"{lake_dir}/bronze/{name}", schema).count()
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         return dict(
@@ -73,8 +89,8 @@ def silver_transform(
     upper bound that tracks the data max cannot drop future-dated rows, so
     runs that need that rule must pin ``max_date`` explicitly (the driver
     oracle queries all do)."""
-    clients_raw = eio.read_parquet(spark, f"{lake_dir}/bronze/clients")
-    achats_raw = eio.read_parquet(spark, f"{lake_dir}/bronze/achats")
+    clients_raw = eio.read_parquet(spark, f"{lake_dir}/bronze/clients", CLIENTS_RAW)
+    achats_raw = eio.read_parquet(spark, f"{lake_dir}/bronze/achats", ACHATS_RAW)
 
     if max_date is None:
         with ThreadPoolExecutor(max_workers=2) as pool:
@@ -122,37 +138,18 @@ def silver_transform(
     return {"clients": results[2], "achats": results[3]}
 
 
-def gold_transform(
-    spark: SparkSession, lake_dir: str,
-    max_amount: float = silver.MAX_PURCHASE_AMOUNT,
-    count_rows: bool = False,
-) -> dict[str, int]:
-    """Star schema + scoring, one persisted fact/features shared by all sinks."""
-    clients = eio.read_parquet(spark, f"{lake_dir}/silver/clients")
-    achats = eio.read_parquet(spark, f"{lake_dir}/silver/achats")
-    # defensive idempotence: re-apply the amount bound at gold entry
-    # (reference does the same, flows/gold_transformation.py:100)
-    achats = achats.filter(
-        (F.col("montant") > 0) & (F.col("montant") <= max_amount)
-    )
-
-    fact = gold.build_fact(achats, clients).persist()
-    ref = gold.reference_date(fact)
-    features = gold.build_client_features(fact, clients, ref).persist()
-
-    scored = gold.score_clients(features)
+def gold_sinks(
+    clients: DataFrame, fact: DataFrame, features: DataFrame,
+    ref: dt.datetime, bounds: tuple[float, float],
+) -> tuple[dict[str, DataFrame], dict[str, Callable[[gold.ScoreThresholds], DataFrame]]]:
+    """The 13 gold and serving sink plans, split by what they wait on:
+    the ten that need only ``fact`` and its collected scalars, as frames,
+    and the three that read ``features``, as builders that take the score
+    thresholds. Building them fires no job."""
     ca_monthly, ca_country, ca_product = gold.aggregate_sales(fact)
-
-    tables: dict[str, DataFrame] = {
+    fact_sinks = {
         "fact_achats": fact,
         "dim_clients": gold.build_dim_clients(clients, fact, ref),
-        "client_features": features,
-        "client_scores": scored.select(
-            "id_client", "prob_reachat_12m", "expected_value_12m",
-            "value_at_risk_12m", "segment_label", "recency_days", "freq_12m",
-            "monetary_12m",
-        ),
-        "segment_summary": gold.summarize_segments(scored),
         "ca_monthly": ca_monthly,
         "ca_country": ca_country,
         "ca_product": ca_product,
@@ -160,42 +157,92 @@ def gold_transform(
         # serving views (the reference computes these in its Mongo publisher)
         "daily": serving.build_daily(fact),
         "weekly": serving.build_weekly(fact),
-        "distribution": serving.build_distribution(fact, bins=12, labels=True),
+        "distribution": serving.build_distribution(fact, bins=12, bounds=bounds, labels=True),
         "monthly_growth": serving.build_monthly_growth(ca_monthly),
     }
-    # one action per table: the write IS the job; counting again would
-    # re-execute every unpersisted plan (the reference's 9-sink mistake)
-    def _write(name: str) -> int | None:
-        # fact is the only table that stays huge at scale: partition by year
-        # so date-bounded reads prune whole directories (the engine-side
-        # replacement for the reference's Mongo secondary indexes)
-        part = ["annee"] if name == "fact_achats" else None
-        # job descriptions are thread-local, so concurrent sinks label
-        # their own jobs in the UI (guide §2.6)
-        spark.sparkContext.setJobDescription(f"gold sink: {name}")
-        eio.write_parquet(tables[name], f"{lake_dir}/gold/{name}", partition_by=part)
-        if count_rows:
-            return spark.read.parquet(f"{lake_dir}/gold/{name}").count()
-        return None  # footer-stats count, no recompute
 
-    # ALL 13 sinks run overlapped (guide §2.6): both persisted frames are
-    # already materialized before any write — ``reference_date`` fills the
-    # fact cache and ``score_clients``'s thresholds collect fills the
-    # features cache at plan-build time above — so no sink can race a
-    # cache computation, and the former sequential fact/features-first
-    # ordering only serialized the two largest writes (r15; it predated
-    # the thresholds collect doubling as the materializing action). 3 in
-    # flight fills each job's task tail without resource thrash; results
-    # keyed by name, so output is order-free.
-    ordered = list(tables)
-    results: dict[str, int | None] = {}
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        for name, cnt in zip(ordered, pool.map(_write, ordered)):
-            results[name] = cnt
-    counts = {n: results[n] for n in ordered if results[n] is not None}
-    fact.unpersist()
-    features.unpersist()
-    return counts
+    def scored(t: gold.ScoreThresholds) -> DataFrame:
+        return gold.score_clients(features, thresholds=t)
+
+    score_sinks = {
+        # waits too: the thresholds action is what fills the features cache
+        "client_features": lambda t: features,
+        "client_scores": lambda t: scored(t).select(
+            "id_client", "prob_reachat_12m", "expected_value_12m",
+            "value_at_risk_12m", "segment_label", "recency_days", "freq_12m",
+            "monetary_12m",
+        ),
+        "segment_summary": lambda t: gold.summarize_segments(scored(t)),
+    }
+    return fact_sinks, score_sinks
+
+
+def gold_transform(
+    spark: SparkSession, lake_dir: str,
+    max_amount: float = silver.MAX_PURCHASE_AMOUNT,
+    count_rows: bool = False,
+) -> dict[str, int]:
+    """Star schema + scoring, one persisted fact/features shared by all sinks.
+
+    One driver action runs before the sinks: ``fact_scalars`` collects the
+    reference date and the histogram bounds and fills the fact cache. The
+    score thresholds are the first task of the 3-wide sink pool, so the ten
+    fact-only sinks start writing at once; only the three that read
+    ``features`` wait on them, and they are submitted last. Both caches
+    are freed however the stage ends.
+    """
+    clients = eio.read_parquet(spark, f"{lake_dir}/silver/clients", CLIENTS_SILVER)
+    achats = eio.read_parquet(spark, f"{lake_dir}/silver/achats", ACHATS_SILVER)
+    # defensive idempotence: re-apply the amount bound at gold entry
+    # (reference does the same, flows/gold_transformation.py:100)
+    achats = achats.filter(
+        (F.col("montant") > 0) & (F.col("montant") <= max_amount)
+    )
+
+    fact = gold.build_fact(achats, clients).persist()
+    features: DataFrame | None = None
+    try:
+        ref, bounds = gold.fact_scalars(fact)
+        features = gold.build_client_features(fact, clients, ref).persist()
+        fact_sinks, score_sinks = gold_sinks(clients, fact, features, ref, bounds)
+
+        # one action per table: the write IS the job; counting again would
+        # re-execute every unpersisted plan (the reference's 9-sink mistake)
+        def _write(name: str, df: DataFrame) -> int | None:
+            # fact is the only table that stays huge at scale: partition by
+            # year so date-bounded reads prune whole directories (the
+            # engine-side replacement for the reference's Mongo indexes)
+            part = ["annee"] if name == "fact_achats" else None
+            # job descriptions are thread-local, so concurrent sinks label
+            # their own jobs in the UI (guide §2.6)
+            spark.sparkContext.setJobDescription(f"gold sink: {name}")
+            eio.write_parquet(df, f"{lake_dir}/gold/{name}", partition_by=part)
+            if count_rows:
+                return spark.read.parquet(f"{lake_dir}/gold/{name}").count()
+            return None  # footer-stats count, no recompute
+
+        def _thresholds() -> gold.ScoreThresholds:
+            spark.sparkContext.setJobDescription("gold: score thresholds")
+            return gold.compute_score_thresholds(features)
+
+        # The fact cache is filled above, so no fact-only sink races a
+        # cache computation; the features cache fills inside the
+        # thresholds task, which is why every features reader waits on it.
+        # The pool queue is FIFO and the thresholds task is first, so a
+        # waiting sink never holds a worker the thresholds still need.
+        # 3 in flight fills each job's task tail without resource thrash.
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            thresholds = pool.submit(_thresholds)
+            futures = {n: pool.submit(_write, n, df) for n, df in fact_sinks.items()}
+            for n, build in score_sinks.items():
+                futures[n] = pool.submit(
+                    lambda n, build: _write(n, build(thresholds.result())), n, build)
+            results = {n: f.result() for n, f in futures.items()}
+    finally:
+        fact.unpersist()
+        if features is not None:
+            features.unpersist()
+    return {n: results[n] for n in GOLD_TABLES + SERVING_TABLES if results[n] is not None}
 
 
 def run_medallion(
@@ -248,7 +295,10 @@ def golden_check(spark: SparkSession, lake_dir: str) -> list[str]:
     ).limit(1).count()
     if bad_prob:
         problems.append("client_scores: prob_reachat_12m outside [0,1]")
-    n_ids = scores.select("id_client").distinct().count()
-    if n_ids != scores.count():
+    # struct(): a NULL id counts as one value, as it would under distinct()
+    n_rows, n_ids = scores.agg(
+        F.count(F.lit(1)), F.countDistinct(F.struct("id_client"))
+    ).first()
+    if n_ids != n_rows:
         problems.append("client_scores: duplicate id_client")
     return problems
