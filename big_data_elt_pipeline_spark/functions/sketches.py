@@ -41,7 +41,7 @@ def build_sketch_table(
 
     This is the relation a lakehouse gold table would persist alongside
     its additive measures — the row count merges by SUM, the distinct
-    count by ``merge_sketches``.
+    count by ``union_sketch``.
     """
     return df.groupBy(*group_cols).agg(
         distinct_sketch(value_col, lg_k).alias("sketch"),
@@ -54,16 +54,12 @@ def estimate(sketch_col: str | Column = "sketch") -> Column:
     return F.hll_sketch_estimate(sketch_col)
 
 
-def merge_sketches(
-    sketches: DataFrame, group_cols: list[str] | None = None, sketch_col: str = "sketch"
-) -> DataFrame:
-    """Union stored sketches — to one row (group_cols=None) or a coarser
-    grouping. ``allowDifferentLgConfigK`` stays False: silently unioning
-    sketches built at different precisions is a data bug, not a merge."""
-    agg = F.hll_union_agg(sketch_col, F.lit(False)).alias(sketch_col)
-    if group_cols:
-        return sketches.groupBy(*group_cols).agg(agg)
-    return sketches.agg(agg)
+def union_sketch(sketch_col: str | Column = "sketch") -> Column:
+    """Aggregate expression: the union of stored sketches, to one row or
+    per coarser group. ``allowDifferentLgConfigK`` stays False: silently
+    unioning sketches built at different precisions is a data bug, not a
+    merge."""
+    return F.hll_union_agg(sketch_col, F.lit(False))
 
 
 # --------------------------------------------------------------------------

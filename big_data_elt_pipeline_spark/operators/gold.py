@@ -287,13 +287,11 @@ def summarize_segments(scored: DataFrame) -> DataFrame:
     )
 
 
-def aggregate_sales(fact: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """A3: revenue by month / country / product — partial-aggregated
-    (map-side combine) hash aggregations, one shuffle each on a small key."""
-    def by(key: str, order: Column | str) -> DataFrame:
-        return bounded_sort(fact.groupBy(key).agg(money_sum("montant", "ca")), order)
-
-    return by("mois", "mois"), by("pays", F.desc("ca")), by("produit", F.desc("ca"))
+def sales_by(fact: DataFrame, key: str, order: Column | str) -> DataFrame:
+    """A3: revenue by one small key (month, country or product) — a
+    partial-aggregated (map-side combine) hash aggregation, one shuffle,
+    sorted by ``order`` in one partition."""
+    return bounded_sort(fact.groupBy(key).agg(money_sum("montant", "ca")), order)
 
 
 def build_cohort_first_purchase(fact: DataFrame) -> DataFrame:

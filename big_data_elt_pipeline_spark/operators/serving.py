@@ -142,7 +142,7 @@ def build_monthly_growth(ca_monthly: DataFrame) -> DataFrame:
 
     The window is unpartitioned but the input is one row per month —
     dimension-sized by construction, so a single-task sort is correct even
-    at 100 TB of fact data. On ``aggregate_sales``' single sorted
+    at 100 TB of fact data. On ``sales_by``' single sorted
     partition the window needs no exchange and no sort of its own.
     """
     w = Window.orderBy("mois")

@@ -1575,14 +1575,14 @@ def pca_power_iteration(
     ``cov_upper``: (i, j, cov) upper triangle (from
     ``embedding_covariance``); mirrored to the full symmetric matrix here.
     Start vector = uniform 1/8 at d=64 (exactly representable). The
-    matrix relation is d^2 rows — dimension-sized, persisted, every
-    per-round join is broadcast-scale. ``eigval`` is the final ||Mv||
+    matrix relation is d^2 rows — dimension-sized, collected into one
+    row that a single task folds. ``eigval`` is the final ||Mv||
     (the Rayleigh estimate under an already-normalized v).
     """
     # r14 optimization (guide §1.2): the matrix is dimension-sized (d^2
     # rows) BY CONTRACT, so the whole iteration fits one task — collect
-    # the dense symmetric matrix into a ONE-ROW broadcast relation
-    # (sorted two-level collect, never .collect() to the driver) and run
+    # the dense symmetric matrix into a ONE-ROW relation (sorted
+    # two-level collect, never .collect() to the driver) and run
     # all ``iters`` rounds as a single fold expression. The former form
     # ran one join + two aggregations + an eager checkpoint PER ROUND
     # (10 barrier jobs, ~40 stages); this is one job whose only
@@ -1598,7 +1598,7 @@ def pca_power_iteration(
             F.col("j").alias("i"), F.col("i").alias("j"), "cov"
         )
     )
-    matrix = F.broadcast(
+    matrix = (
         mat.groupBy("i")
         .agg(
             F.transform(

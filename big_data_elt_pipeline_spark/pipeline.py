@@ -146,13 +146,13 @@ def gold_sinks(
     the ten that need only ``fact`` and its collected scalars, as frames,
     and the three that read ``features``, as builders that take the score
     thresholds. Building them fires no job."""
-    ca_monthly, ca_country, ca_product = gold.aggregate_sales(fact)
+    ca_monthly = gold.sales_by(fact, "mois", "mois")
     fact_sinks = {
         "fact_achats": fact,
         "dim_clients": gold.build_dim_clients(clients, fact, ref),
         "ca_monthly": ca_monthly,
-        "ca_country": ca_country,
-        "ca_product": ca_product,
+        "ca_country": gold.sales_by(fact, "pays", F.desc("ca")),
+        "ca_product": gold.sales_by(fact, "produit", F.desc("ca")),
         "cohort_first_purchase": gold.build_cohort_first_purchase(fact),
         # serving views (the reference computes these in its Mongo publisher)
         "daily": serving.build_daily(fact),
@@ -216,10 +216,15 @@ def gold_transform(
             # job descriptions are thread-local, so concurrent sinks label
             # their own jobs in the UI (guide §2.6)
             spark.sparkContext.setJobDescription(f"gold sink: {name}")
-            eio.write_parquet(df, f"{lake_dir}/gold/{name}", partition_by=part)
-            if count_rows:
-                return spark.read.parquet(f"{lake_dir}/gold/{name}").count()
-            return None  # footer-stats count, no recompute
+            path = eio.write_parquet(df, f"{lake_dir}/gold/{name}", partition_by=part)
+            if not count_rows:
+                return None
+            # count back with the written frame's schema: no footer-
+            # inference job. (A ``pyspark.sql.Observation`` would count
+            # inside the write, but once one is used the session's
+            # ObservationManager makes every closure that captures the
+            # session unserializable, e.g. LogisticRegression summaries.)
+            return eio.read_parquet(spark, path, df.schema).count()
 
         def _thresholds() -> gold.ScoreThresholds:
             spark.sparkContext.setJobDescription("gold: score thresholds")

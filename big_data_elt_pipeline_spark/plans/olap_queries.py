@@ -144,49 +144,45 @@ def q_hll_monthly_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     without a rescan. Raw estimates + merge==direct bit-equality stay
     pinned by tests/test_sketches.py."""
     from big_data_elt_pipeline_spark.functions import sketches as SK
+    from big_data_elt_pipeline_spark.operators.serving import bounded_sort
     from big_data_elt_pipeline_spark.plans.queries import _fact
 
-    fact = _fact(spark, sf_dir)
-    monthly = SK.build_sketch_table(fact, ["mois"], "id_client")
-    exact = fact.groupBy("mois").agg(
-        F.countDistinct("id_client").alias("exact_clients")
+    # ONE pass over the fact: its distinct (month, buyer) pairs with their
+    # row counts. Per month, the pair count is the exact distinct, the
+    # summed counts are n_orders, and the sketch of the pair buyers is
+    # the sketch of the month's buyers (HLL state depends on the set only)
+    pairs = _fact(spark, sf_dir).groupBy("mois", "id_client").agg(
+        F.count(F.lit(1)).alias("n")
     )
-    per_month = (
-        monthly.select("mois", SK.estimate("sketch").alias("est"), "n_rows")
-        .join(exact, "mois")
-        .select(
-            "mois",
-            F.col("n_rows").alias("n_orders"),
-            "exact_clients",
+    monthly = pairs.groupBy("mois").agg(
+        SK.distinct_sketch("id_client").alias("sketch"),
+        F.sum("n").cast("long").alias("n_orders"),
+        F.count("id_client").alias("exact_clients"),
+    )
+
+    def judged(df: DataFrame) -> DataFrame:
+        return df.select(
+            "mois", "n_orders", "exact_clients",
             (
-                F.abs(F.col("est") - F.col("exact_clients"))
+                F.abs(SK.estimate("sketch") - F.col("exact_clients"))
                 <= 0.1 * F.col("exact_clients")
             ).alias("hll_within_bound"),
         )
-    )
+
     # the ALL row merges STORED state only: distincts via sketch union,
     # the additive count via SUM of per-month counts — no fact rescan for
     # the ESTIMATE (the exact twin it is judged against is one
-    # countDistinct, the assertion's price of admission)
-    total = (
-        SK.merge_sketches(monthly)
-        .select(F.lit("ALL").alias("mois"), SK.estimate("sketch").alias("est"))
-        .join(monthly.agg(F.sum("n_rows").cast("long").alias("n_orders")), how="cross")
-        .join(
-            fact.agg(F.countDistinct("id_client").alias("exact_clients")),
-            how="cross",
-        )
-        .select(
-            "mois",
-            "n_orders",
-            "exact_clients",
-            (
-                F.abs(F.col("est") - F.col("exact_clients"))
-                <= 0.1 * F.col("exact_clients")
-            ).alias("hll_within_bound"),
-        )
+    # countDistinct over the pairs, the assertion's price of admission)
+    total = monthly.agg(
+        SK.union_sketch().alias("sketch"),
+        F.sum("n_orders").cast("long").alias("n_orders"),
+    ).crossJoin(pairs.agg(F.countDistinct("id_client").alias("exact_clients")))
+    return bounded_sort(
+        judged(monthly).unionByName(
+            judged(total.withColumn("mois", F.lit("ALL")))
+        ),
+        "mois",
     )
-    return per_month.unionByName(total).orderBy("mois")
 
 
 # --- as-of join: each event gets the user's latest purchase at/before ts ---
@@ -340,13 +336,11 @@ _PIVOT_COLS = ",\n       ".join(
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.operators import gold
-    from big_data_elt_pipeline_spark.plans.queries import _fact
+    from big_data_elt_pipeline_spark.plans.queries import _fact, _ref_date
 
-    clients, _ = _silver_frames(spark, sf_dir)
     fact = _fact(spark, sf_dir)
-    from big_data_elt_pipeline_spark.plans.queries import _ref_date
     ref = _ref_date(spark, sf_dir)
-    features = gold.build_client_features(fact, clients, ref)
+    features = gold.build_client_features(fact, tpch.clients_df(spark, sf_dir), ref)
     return gold.score_clients(features)
 
 

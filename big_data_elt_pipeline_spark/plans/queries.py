@@ -177,14 +177,24 @@ def _silver_frames(spark: SparkSession, sf_dir: str):
     return clients, achats
 
 
+# the last ``build_fact`` plan with the memoized (achats, clients) frames
+# it was built from; ``tpch`` revalidates those, so identity suffices
+_FACT_MEMO: tuple[DataFrame, DataFrame, DataFrame] | None = None
+
+
 def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    global _FACT_MEMO
     clients, achats = _silver_frames(spark, sf_dir)
-    return gold.build_fact(achats, clients)
+    memo = _FACT_MEMO
+    if memo is None or memo[0] is not achats or memo[1] is not clients:
+        memo = _FACT_MEMO = (achats, clients, gold.build_fact(achats, clients))
+    return memo[2]
 
 
 def _ref_date(spark: SparkSession, sf_dir: str):
     """Max ``date_achat`` over achats — the same as over fact, whose LEFT
-    client join keeps the achats rows one-to-one."""
+    client join keeps the achats rows one-to-one. One action on the
+    memoized ``achats`` plan."""
     return gold.reference_date(tpch.achats_df(spark, sf_dir))
 
 
@@ -197,7 +207,7 @@ SELECT mois, CAST(sum(CAST(montant AS DECIMAL(18,4))) AS DOUBLE) AS ca
 FROM fact GROUP BY mois ORDER BY mois
 """)
 def q_ca_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gold.aggregate_sales(_fact(spark, sf_dir))[0]
+    return gold.sales_by(_fact(spark, sf_dir), "mois", "mois")
 
 
 @register("ca_country", _D + """
@@ -205,7 +215,7 @@ SELECT pays, CAST(sum(CAST(montant AS DECIMAL(18,4))) AS DOUBLE) AS ca
 FROM fact GROUP BY pays ORDER BY ca DESC
 """)
 def q_ca_country(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gold.aggregate_sales(_fact(spark, sf_dir))[1]
+    return gold.sales_by(_fact(spark, sf_dir), "pays", F.desc("ca"))
 
 
 @register("ca_product", _D + """
@@ -213,7 +223,7 @@ SELECT produit, CAST(sum(CAST(montant AS DECIMAL(18,4))) AS DOUBLE) AS ca
 FROM fact GROUP BY produit ORDER BY ca DESC
 """)
 def q_ca_product(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return gold.aggregate_sales(_fact(spark, sf_dir))[2]
+    return gold.sales_by(_fact(spark, sf_dir), "produit", F.desc("ca"))
 
 
 @register("fact_achats", _D + """
@@ -247,16 +257,16 @@ SELECT c.id_client, nom, email, pays, date_inscription,
 FROM clients c LEFT JOIN agg ON c.id_client = agg.id_client
 """)
 def q_dim_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     return gold.build_dim_clients(clients, fact, ref)
 
 
 @register("client_features", _D + f",\n{_FEAT_SQL}\nSELECT * FROM feat")
 def q_client_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     return gold.build_client_features(fact, clients, ref)
 
@@ -265,8 +275,8 @@ def q_client_features(spark: SparkSession, sf_dir: str) -> DataFrame:
           "SELECT id_client, prob_reachat_12m, expected_value_12m, value_at_risk_12m,\n"
           "       segment_label, recency_days, freq_12m, monetary_12m\nFROM scores")
 def q_client_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     # eager checkpoint (r15, guide §5 / the rfm idiom): the features frame
     # is DIMENSION-sized but its lineage is the full fact build, and it
@@ -296,8 +306,8 @@ SELECT segment_label,
 FROM scores GROUP BY segment_label
 """)
 def q_segment_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     # same two-consumer shape as q_client_scores: checkpoint the
     # dimension-sized features frame once (guide §5)
@@ -375,7 +385,7 @@ SELECT mois, ca,
 FROM cam ORDER BY mois
 """)
 def q_monthly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ca_monthly = gold.aggregate_sales(_fact(spark, sf_dir))[0]
+    ca_monthly = gold.sales_by(_fact(spark, sf_dir), "mois", "mois")
     return serving.build_monthly_growth(ca_monthly)
 
 
@@ -409,8 +419,8 @@ FROM k
 def q_kpis_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 KPIs + portfolio expected 12-month value (the scored branch of
     ``build_kpis``, previously pytest-only)."""
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     features = gold.build_client_features(fact, clients, ref)
     return serving.build_kpis(fact, gold.score_clients(features))
@@ -432,8 +442,8 @@ ORDER BY total_spend DESC, c.id_client ASC
 LIMIT 20
 """)
 def q_top_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
-    fact = gold.build_fact(achats, clients)
+    clients = tpch.clients_df(spark, sf_dir)
+    fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     dim = gold.build_dim_clients(clients, fact, ref).select(
         "id_client", "nom", "pays", "total_orders", "total_spend"

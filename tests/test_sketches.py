@@ -28,7 +28,9 @@ def fact(spark):
 
 def test_merge_of_stored_sketches_equals_direct_build(spark, fact):
     monthly = SK.build_sketch_table(fact, ["mois"], "id_client")
-    merged_est = SK.merge_sketches(monthly).select(SK.estimate().alias("e")).first().e
+    merged_est = monthly.agg(SK.union_sketch().alias("sketch")).select(
+        SK.estimate().alias("e")
+    ).first().e
     direct_est = fact.agg(SK.distinct_sketch("id_client").alias("sketch")).select(
         SK.estimate().alias("e")
     ).first().e

@@ -1,11 +1,16 @@
-"""``sources.tpch.read_table``: the schema catalog and the spread policy.
+"""``sources.tpch``: the schema catalog, the spread policy and the
+domain plan memo.
 
 A repeat read of a corpus file must fire no schema-inference job, a
 rewritten file must be re-inferred, and only the map-heavy corpora
 (``documents``, ``embeddings``) get the single-split round-robin spread.
+``clients_df`` / ``achats_df`` / ``_fact`` hand a repeat caller the same
+plan object, and a fresh one after a member file is rewritten, to another
+session, or when ``SPARK_GRAFT_SPREAD_INPUT`` changes.
 """
 
 import contextlib
+import shutil
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -94,3 +99,75 @@ def test_events_ts_is_micros_under_bare_session(spark):
         ).first()
 
     assert micros(bare) == micros(spark)
+
+
+_DOMAIN_TABLES = ("customer", "nation", "lineitem", "orders", "part")
+
+
+def _domain_plans(spark, sf):
+    return tpch.clients_df(spark, sf), tpch.achats_df(spark, sf), Q._fact(spark, sf)
+
+
+def test_domain_plans_memoized_on_unchanged_corpus(spark):
+    first = _domain_plans(spark, SF_SMOKE)
+    with _job_ids(spark, "memo-repeat") as ids:
+        again = _domain_plans(spark, SF_SMOKE)
+    assert all(a is b for a, b in zip(first, again))
+    assert ids == []  # a hit validates stamps only: no job
+
+
+def test_rewritten_member_gives_fresh_plan(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    for t in _DOMAIN_TABLES:
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{sf}/{t}.parquet")
+    clients, achats, fact = _domain_plans(spark, sf)
+    n_clients = clients.count()
+
+    customer = pq.read_table(f"{sf}/customer.parquet")
+    pq.write_table(customer.slice(0, 10), f"{sf}/customer.parquet")
+    clients2, achats2, fact2 = _domain_plans(spark, sf)
+    assert clients2 is not clients and fact2 is not fact
+    assert achats2 is achats  # its members are untouched
+    assert n_clients > 10 and clients2.count() == 10
+    assert fact2.filter(F.col("pays") != "Inconnu").select("id_client").distinct().count() <= 10
+
+
+def test_new_session_never_gets_the_first_sessions_plan(spark):
+    first = _domain_plans(spark, SF_SMOKE)
+    other = spark.newSession()
+    theirs = _domain_plans(other, SF_SMOKE)
+    for mine, their in zip(first, theirs):
+        assert their is not mine
+        assert their.sparkSession is other
+    assert all(p.sparkSession is spark for p in _domain_plans(spark, SF_SMOKE))
+
+
+def test_spread_env_flip_gives_fresh_plan(spark, monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_SPREAD_INPUT", raising=False)
+    first = _domain_plans(spark, SF_SMOKE)
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_INPUT", "0")
+    flipped = _domain_plans(spark, SF_SMOKE)
+    assert all(a is not b for a, b in zip(first, flipped))
+    assert all(a is b for a, b in zip(flipped, _domain_plans(spark, SF_SMOKE)))
+
+
+def test_time_zone_change_gives_fresh_plan(spark):
+    """``date_achat`` is a date cast to a timestamp: its instant depends on
+    the session time zone that analysis resolved."""
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+
+    def first_purchase():
+        achats = tpch.achats_df(spark, SF_SMOKE)
+        return achats.agg(F.min(F.unix_seconds("date_achat"))).first()[0]
+
+    base = first_purchase()
+    spark.conf.set(key, "Etc/GMT+5")  # five hours behind UTC
+    try:
+        shifted = first_purchase()
+    finally:
+        spark.conf.set(key, old)
+    assert shifted - base == 5 * 3600
+    assert first_purchase() == base
