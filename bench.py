@@ -480,6 +480,7 @@ def _stream(spark, sf_dir: str) -> None:
     from big_data_elt_pipeline_spark.sources.tpch import achats_df, events_df
     from big_data_elt_pipeline_spark.streaming import events as SE
     from big_data_elt_pipeline_spark.streaming import incremental as SI
+    from big_data_elt_pipeline_spark.streaming import staging_dir
 
     secs: dict[str, float] = {}
     stream: dict[str, float] = {}
@@ -496,7 +497,7 @@ def _stream(spark, sf_dir: str) -> None:
     def _incremental() -> int:
         # staging_dir caches the shard staging across runs and wipes the
         # fold state, so run 2 times the pure stream-fold path
-        root = SI.staging_dir("bench_incremental", sf_dir)
+        root = staging_dir("bench_incremental", sf_dir)
         return SI.incremental_ca_monthly(
             spark, achats, f"{root}/src", f"{root}/state"
         ).count()

@@ -436,35 +436,8 @@ def index_recall(
     bf = SIM.brute_force_l2_topk(
         corpus, queries, k, id_col, vec_col, query_id_col
     )
-    hits = probe.select(query_id_col, id_col).join(
-        F.broadcast(bf.select(query_id_col, id_col)), [query_id_col, id_col]
-    )
-    per = (
-        queries.select(F.col(id_col).alias(query_id_col))
-        .join(
-            F.broadcast(
-                hits.groupBy(query_id_col).agg(F.count(F.lit(1)).alias("h"))
-            ),
-            query_id_col,
-            "left",
-        )
-        .na.fill({"h": 0})
-    )
-    return per.agg(
-        F.count(F.lit(1)).alias("n_queries"),
-        F.sum("h").cast("long").alias("__hits"),
-        F.min("h").cast("long").alias("__minh"),
-    ).select(
-        "n_queries",
-        F.lit(k).cast("int").alias("k"),
-        (
-            F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k))
-        ).alias("recall_at_k"),
-        (F.col("__minh").cast("double") / F.lit(k)).alias("min_recall"),
-        (
-            (F.col("__hits").cast("double") / (F.col("n_queries") * F.lit(k)))
-            >= F.lit(floor)
-        ).alias("floor_ok"),
+    return SIM._recall_rollup(probe, bf, queries, k, id_col, query_id_col).withColumn(
+        "floor_ok", F.col("recall_at_k") >= F.lit(floor)
     )
 
 

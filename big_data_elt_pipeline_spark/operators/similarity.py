@@ -686,10 +686,20 @@ def ivf_recall(
     """
     bf = brute_force_topk(corpus, queries, k, id_col, vec_col, query_id_col)
     ivf = ivf_fixed_topk(corpus, queries, k, n_cells, n_probe, id_col, vec_col, query_id_col)
+    return _recall_rollup(ivf, bf, queries, k, id_col, query_id_col)
+
+
+def _recall_rollup(
+    found: DataFrame, truth: DataFrame, queries: DataFrame, k: int,
+    id_col: str, query_id_col: str,
+) -> DataFrame:
+    """(n_queries, k, recall_at_k, min_recall) of the top-k relation
+    ``found`` against the exact top-k ``truth``, one row: integer hit
+    counts until two final divisions (``ivf_recall``'s exactness note)."""
     # both top-k relations are <= n_queries x k rows by construction —
     # broadcast them so the recall rollup never sort-merge-joins
-    hits = ivf.select(query_id_col, id_col).join(
-        F.broadcast(bf.select(query_id_col, id_col)), [query_id_col, id_col]
+    hits = found.select(query_id_col, id_col).join(
+        F.broadcast(truth.select(query_id_col, id_col)), [query_id_col, id_col]
     )
     per = (
         queries.select(F.col(id_col).alias(query_id_col))

@@ -175,10 +175,8 @@ def q_incremental_ca_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batches, yet oracle-checkable because exact decimal merges make
     the final state equal a full recompute bit-for-bit."""
     from big_data_elt_pipeline_spark.plans.queries import _silver_frames
-    from big_data_elt_pipeline_spark.streaming.incremental import (
-        incremental_ca_monthly,
-        staging_dir,
-    )
+    from big_data_elt_pipeline_spark.streaming import staging_dir
+    from big_data_elt_pipeline_spark.streaming.incremental import incremental_ca_monthly
 
     _, achats = _silver_frames(spark, sf_dir)
     tmp = staging_dir("incr_gate", sf_dir)

@@ -154,7 +154,7 @@ def q_lakehouse_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark import lakehouse as LH
     from big_data_elt_pipeline_spark.functions.core import money_sum
     from big_data_elt_pipeline_spark.sources.tpch import achats_df
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
+    from big_data_elt_pipeline_spark.streaming import staging_dir
     from pyspark.sql import functions as F
 
     root = staging_dir("lakehouse_prune_gate", sf_dir)
@@ -186,10 +186,8 @@ FROM fact GROUP BY pays ORDER BY pays
 def q_incremental_ca_country(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Country gold maintained INCREMENTALLY over micro-batches; exact
     decimal merges make the final state equal a full recompute bit-for-bit."""
-    from big_data_elt_pipeline_spark.streaming.incremental import (
-        incremental_ca_country,
-        staging_dir,
-    )
+    from big_data_elt_pipeline_spark.streaming import staging_dir
+    from big_data_elt_pipeline_spark.streaming.incremental import incremental_ca_country
 
     fact = _fact(spark, sf_dir)
     tmp = staging_dir("incr_country_gate", sf_dir)
@@ -212,14 +210,11 @@ def q_docstore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     custom format preserves every value bit-for-bit (JSON float repr
     round-trips IEEE doubles exactly), i.e. the Mongo-parity serving edge
     is engine-grade, not a lossy export."""
-    import atexit
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from big_data_elt_pipeline_spark.functions.core import money_sum
     from big_data_elt_pipeline_spark.sources import docstore
+    from big_data_elt_pipeline_spark.streaming import staging_dir
 
     docstore.register(spark)
     gold = (
@@ -228,8 +223,7 @@ def q_docstore_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(money_sum("montant", "ca"), F.count(F.lit(1)).alias("n"))
         .orderBy("mois")
     )
-    path = tempfile.mkdtemp(prefix="docstore_gate_")
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = f"{staging_dir('docstore_gate', sf_dir)}/state/gold"
     gold.write.format(docstore.FORMAT_NAME).option("key", "mois").mode(
         "overwrite"
     ).save(path)

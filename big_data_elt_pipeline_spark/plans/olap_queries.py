@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
 from big_data_elt_pipeline_spark.operators.asof import asof_join
-from big_data_elt_pipeline_spark.plans.queries import register, _silver_frames
+from big_data_elt_pipeline_spark.plans.queries import _SCORES_SQL, _scored, _silver_frames, register
 from big_data_elt_pipeline_spark.sources import tpch
 from big_data_elt_pipeline_spark.sources.tpch import EVENTS_SQL, events_df
 
@@ -333,18 +333,6 @@ _PIVOT_COLS = ",\n       ".join(
 
 
 # --- opportunity lists (reference scripts/train_predictor.py:184-190) -----
-
-def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from big_data_elt_pipeline_spark.operators import gold
-    from big_data_elt_pipeline_spark.plans.queries import _fact, _ref_date
-
-    fact = _fact(spark, sf_dir)
-    ref = _ref_date(spark, sf_dir)
-    features = gold.build_client_features(fact, tpch.clients_df(spark, sf_dir), ref)
-    return gold.score_clients(features)
-
-
-from big_data_elt_pipeline_spark.plans.queries import _SCORES_SQL  # noqa: E402
 
 _SEL = "SELECT id_client, expected_value_12m, value_at_risk_12m, recency_days\nFROM scores"
 

@@ -177,18 +177,10 @@ def _silver_frames(spark: SparkSession, sf_dir: str):
     return clients, achats
 
 
-# the last ``build_fact`` plan with the memoized (achats, clients) frames
-# it was built from; ``tpch`` revalidates those, so identity suffices
-_FACT_MEMO: tuple[DataFrame, DataFrame, DataFrame] | None = None
-
-
+@tpch.memoized("customer", "nation", "lineitem", "orders", "part")
 def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    global _FACT_MEMO
     clients, achats = _silver_frames(spark, sf_dir)
-    memo = _FACT_MEMO
-    if memo is None or memo[0] is not achats or memo[1] is not clients:
-        memo = _FACT_MEMO = (achats, clients, gold.build_fact(achats, clients))
-    return memo[2]
+    return gold.build_fact(achats, clients)
 
 
 def _ref_date(spark: SparkSession, sf_dir: str):
@@ -196,6 +188,20 @@ def _ref_date(spark: SparkSession, sf_dir: str):
     client join keeps the achats rows one-to-one. One action on the
     memoized ``achats`` plan."""
     return gold.reference_date(tpch.achats_df(spark, sf_dir))
+
+
+def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``score_clients`` over the client features, checkpointed eagerly:
+    the features frame is dimension-sized but its lineage is the full
+    fact build, and it feeds two consumers (the thresholds collect inside
+    ``score_clients`` and the returned plan), each of which would
+    otherwise replay the fact scan, joins and groupBy. (The bench harness
+    unpersists query-pinned blocks after each timing, so the checkpoint
+    cannot accumulate across queries.)"""
+    features = gold.build_client_features(
+        _fact(spark, sf_dir), tpch.clients_df(spark, sf_dir), _ref_date(spark, sf_dir)
+    ).localCheckpoint(eager=True)
+    return gold.score_clients(features)
 
 
 # --------------------------------------------------------------------------
@@ -275,21 +281,7 @@ def q_client_features(spark: SparkSession, sf_dir: str) -> DataFrame:
           "SELECT id_client, prob_reachat_12m, expected_value_12m, value_at_risk_12m,\n"
           "       segment_label, recency_days, freq_12m, monetary_12m\nFROM scores")
 def q_client_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients = tpch.clients_df(spark, sf_dir)
-    fact = _fact(spark, sf_dir)
-    ref = _ref_date(spark, sf_dir)
-    # eager checkpoint (r15, guide §5 / the rfm idiom): the features frame
-    # is DIMENSION-sized but its lineage is the full fact build, and it
-    # feeds TWO consumers — the thresholds collect inside score_clients
-    # and the returned scored plan. Without the checkpoint each consumer
-    # replays the fact scan+joins+groupBy. (The bench harness unpersists
-    # query-pinned blocks after each timing, so the checkpoint cannot
-    # accumulate across queries.)
-    features = gold.build_client_features(fact, clients, ref).localCheckpoint(
-        eager=True
-    )
-    scored = gold.score_clients(features)
-    return scored.select(
+    return _scored(spark, sf_dir).select(
         "id_client", "prob_reachat_12m", "expected_value_12m", "value_at_risk_12m",
         "segment_label", "recency_days", "freq_12m", "monetary_12m",
     )
@@ -306,15 +298,7 @@ SELECT segment_label,
 FROM scores GROUP BY segment_label
 """)
 def q_segment_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients = tpch.clients_df(spark, sf_dir)
-    fact = _fact(spark, sf_dir)
-    ref = _ref_date(spark, sf_dir)
-    # same two-consumer shape as q_client_scores: checkpoint the
-    # dimension-sized features frame once (guide §5)
-    features = gold.build_client_features(fact, clients, ref).localCheckpoint(
-        eager=True
-    )
-    return gold.summarize_segments(gold.score_clients(features))
+    return gold.summarize_segments(_scored(spark, sf_dir))
 
 
 @register("cohort_first_purchase", _D + """
@@ -419,11 +403,7 @@ FROM k
 def q_kpis_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 KPIs + portfolio expected 12-month value (the scored branch of
     ``build_kpis``, previously pytest-only)."""
-    clients = tpch.clients_df(spark, sf_dir)
-    fact = _fact(spark, sf_dir)
-    ref = _ref_date(spark, sf_dir)
-    features = gold.build_client_features(fact, clients, ref)
-    return serving.build_kpis(fact, gold.score_clients(features))
+    return serving.build_kpis(_fact(spark, sf_dir), _scored(spark, sf_dir))
 
 
 @register("top_clients", _D + f""",

@@ -1491,15 +1491,15 @@ def _staged_index(
     build: Callable[[SparkSession, str, str], None],
     mutate: Callable[[SparkSession, str, str], None] | None = None,
 ) -> str:
-    """Lakehouse root of a gate query's index, staged once per (process,
-    sf_dir) under ``name`` — the ``shard_pruned_read`` staged-source
-    discipline. ``build(spark, sf_dir, idx)`` runs when the index has no
+    """Lakehouse root of a gate query's index, staged once per
+    ``staging_dir(name, sf_dir)`` root (process and corpus version).
+    ``build(spark, sf_dir, idx)`` runs when the index has no
     publish row (ANN ``state`` / text ``stats``); ``mutate(spark, sf_dir,
     idx)`` then runs once, while it has no tombstones. A mutated index
     stages under its own name: mutating a shared one would corrupt the
     other gate queries."""
     from big_data_elt_pipeline_spark.lakehouse import table_versions
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
+    from big_data_elt_pipeline_spark.streaming import staging_dir
 
     idx = f"{staging_dir(name, sf_dir)}/index"
     if not (table_versions(f"{idx}/state") or table_versions(f"{idx}/stats")):
@@ -1759,7 +1759,7 @@ def q_stream_ann_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.streaming.ann_serving import (
         stream_index_probe_evidence,
     )
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
+    from big_data_elt_pipeline_spark.streaming import staging_dir
 
     idx = _staged_index(spark, sf_dir, "ann_index", _build_ann)
     out = f"{staging_dir('stream_ann', sf_dir)}/state/out"
@@ -2458,7 +2458,7 @@ def q_shard_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from big_data_elt_pipeline_spark.operators import sharding as SH
-    from big_data_elt_pipeline_spark.streaming.incremental import staging_dir
+    from big_data_elt_pipeline_spark.streaming import staging_dir
 
     root = staging_dir("shard_export", sf_dir)
     if not os.path.exists(f"{root}/shards/_SUCCESS"):

@@ -15,7 +15,6 @@ from __future__ import annotations
 import argparse
 import json
 import sys
-import tempfile
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -35,8 +34,9 @@ def main(argv: list[str] | None = None) -> int:
     source_dir = args.source_dir
     if args.from_testdata:
         from big_data_elt_pipeline_spark.sources import tpch
+        from big_data_elt_pipeline_spark.streaming import staging_dir
 
-        source_dir = tempfile.mkdtemp(prefix="sources_")
+        source_dir = staging_dir("sources", args.from_testdata)
         tpch.clients_df(spark, args.from_testdata).write.mode("overwrite").option(
             "header", True
         ).csv(f"{source_dir}/clients.csv")

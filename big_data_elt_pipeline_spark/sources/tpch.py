@@ -13,9 +13,10 @@ Cross-engine exactness note: ``montant`` is the double product
 4 true decimal digits, so the snap is unambiguous (never near a rounding
 midpoint) and both engines land on the bit-identical double.
 
-Plan memo: ``clients_df`` and ``achats_df`` each return one stored
-DataFrame per corpus dir instead of rebuilding and re-analyzing the
-joined plan over py4j on every call. An entry holds an analyzed
+Plan memo: ``memoized`` makes ``clients_df``, ``achats_df`` and
+``plans.queries._fact`` each return one stored DataFrame per corpus dir
+instead of rebuilding and re-analyzing the joined plan over py4j on
+every call. An entry holds an analyzed
 plan and never query data: the memo runs no action and persists nothing.
 It is returned only to the session that built it (identity), and only
 while every member table's stamp (file listing plus schema confs, the
@@ -149,7 +150,7 @@ class _PlanEntry:
     df: DataFrame
 
 
-def _memoized(*tables: str):
+def memoized(*tables: str):
     """Memoize a ``(spark, sf_dir)`` plan builder over corpus ``tables``:
     one entry per corpus dir, an analyzed plan and no query data, handed
     out while it is still valid for the session and corpus version."""
@@ -175,7 +176,7 @@ def _memoized(*tables: str):
     return deco
 
 
-@_memoized("customer", "nation")
+@memoized("customer", "nation")
 def clients_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``clients`` from customer ⋈ nation (broadcast — nation has 25 rows),
     memoized per corpus version (module docstring)."""
@@ -196,7 +197,7 @@ def clients_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memoized("lineitem", "orders", "part")
+@memoized("lineitem", "orders", "part")
 def achats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``achats`` from lineitem ⋈ orders ⋈ part, memoized per corpus
     version (module docstring).

@@ -69,7 +69,7 @@ def stream_index_probe(
     epoch sequence instead of replaying it.
     """
     raw = staged_slice(
-        spark, sf_dir, "embeddings.parquet", "vec_id", "embedding", lo, hi
+        spark, sf_dir, "embeddings", "vec_id", "embedding", lo, hi
     )
     app_id = f"stream_ann_probe:{checkpoint_dir or out_path}"
 
@@ -108,7 +108,7 @@ def stream_index_ingest(
     the epoch sequence.
     """
     raw = staged_slice(
-        spark, sf_dir, "embeddings.parquet", "vec_id", "embedding", lo, hi
+        spark, sf_dir, "embeddings", "vec_id", "embedding", lo, hi
     )
     app_id = f"stream_index_ingest:{checkpoint_dir or index_path}"
 

@@ -18,19 +18,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
-from big_data_elt_pipeline_spark.streaming import drain
+from big_data_elt_pipeline_spark.streaming import drain, staged_stream
 
 SESSION_GAP_MIN = 30
-
-def events_raw_schema(spark: SparkSession, path: str) -> T.StructType:
-    """Schema for the streaming file source, derived from the staged files
-    themselves (a one-time footer read). The corpus has shipped ``ts`` as
-    both nanos-long and TIMESTAMP(MICROS); deriving instead of hardcoding
-    keeps the stream readers working across testdata regenerations."""
-    return spark.read.parquet(path).schema
 
 
 def tumbling_revenue(events: DataFrame, width: str = "1 hour") -> DataFrame:
@@ -129,30 +121,15 @@ def daily_type_share(events: DataFrame) -> DataFrame:
     )
 
 
-def _staged_events_dir(sf_dir: str) -> str:
-    """File-source landing zone for the events fixture (streaming sources
-    require a directory)."""
-    import pathlib
-    import shutil
-
-    stage = pathlib.Path("/tmp/spark_graft_stream") / pathlib.Path(sf_dir).name
-    stage.mkdir(parents=True, exist_ok=True)
-    target = stage / "events.parquet"
-    if not target.exists():
-        shutil.copyfile(f"{sf_dir}/events.parquet", target)
-    return str(stage)
-
-
-def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
+    """``staged_stream`` of the events fixture with microsecond ``ts``."""
     from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, events_ts_col
 
     ensure_nanos_conf(spark)
-    stage = _staged_events_dir(sf_dir)
-    schema = events_raw_schema(spark, stage)
-    raw = spark.readStream.schema(schema).parquet(stage)
+    raw = staged_stream(spark, sf_dir, "events", copies)
     return raw.select(
         "event_id",
-        events_ts_col(schema["ts"].dataType).alias("ts"),
+        events_ts_col(raw.schema["ts"].dataType).alias("ts"),
         "user_id", "event_type", "value",
     )
 
@@ -322,7 +299,6 @@ def stream_tumbling_evidence(
         .filter(F.col("window_start") + F.expr(f"INTERVAL {width}") <= F.col("__wm"))
         .drop("__wm")
     )
-    mism = s.exceptAll(fin).unionByName(fin.exceptAll(s))
     checks = fin.agg(
         F.count(F.lit(1)).cast("long").alias("n_finalized"),
         F.sum("n").cast("long").alias("sum_n"),
@@ -330,14 +306,9 @@ def stream_tumbling_evidence(
         F.min("window_start").alias("first_window"),
         F.max("window_start").alias("last_window"),
     )
-    return (
-        s.agg(F.count(F.lit(1)).cast("long").alias("n_stream"))
-        .crossJoin(checks)
-        .crossJoin(mism.agg(F.count(F.lit(1)).cast("long").alias("n_mismatch")))
-        .select(
-            "n_stream", "n_finalized", "n_mismatch",
-            "sum_n", "sum_value", "first_window", "last_window",
-        )
+    return _evidence_relation(s, fin, checks).select(
+        "n_stream", "n_finalized", "n_mismatch",
+        "sum_n", "sum_value", "first_window", "last_window",
     )
 
 
@@ -380,41 +351,6 @@ def stream_tumbling_revenue_to_sink(
     )
 
 
-def _staged_dup_events_dir(sf_dir: str) -> str:
-    """Landing zone holding the events fixture TWICE (two files) — the
-    at-least-once-delivery corpus for the streaming dedup operator.
-
-    Staleness guard: the cached copies are reused only while their
-    size+mtime still match the source — a regenerated testdata drop
-    (which has historically changed even the ``ts`` physical type)
-    invalidates the stage instead of silently serving old events. The
-    staging root is removed at interpreter exit, same policy as
-    ``streaming.incremental.staging_dir``.
-    """
-    import atexit
-    import os
-    import pathlib
-    import shutil
-
-    root = pathlib.Path("/tmp/spark_graft_stream_dup")
-    stage = root / pathlib.Path(sf_dir).name
-    stage.mkdir(parents=True, exist_ok=True)
-    if not getattr(_staged_dup_events_dir, "_atexit", False):
-        atexit.register(shutil.rmtree, str(root), ignore_errors=True)
-        _staged_dup_events_dir._atexit = True
-    src = f"{sf_dir}/events.parquet"
-    st = os.stat(src)
-    for name in ("events_a.parquet", "events_b.parquet"):
-        target = stage / name
-        if target.exists():
-            ts = target.stat()
-            if ts.st_size == st.st_size and ts.st_mtime == st.st_mtime:
-                continue
-        shutil.copyfile(src, target)
-        os.utime(target, (st.st_atime, st.st_mtime))
-    return str(stage)
-
-
 def stream_deduped_events(
     spark: SparkSession, sf_dir: str, watermark: str = "2 hours"
 ) -> DataFrame:
@@ -431,22 +367,8 @@ def stream_deduped_events(
     bounded state under unbounded input, with the dedup guarantee scoped
     to the redelivery window (real redelivery happens within seconds).
     """
-    from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, events_ts_col
-
-    ensure_nanos_conf(spark)
-    stage = _staged_dup_events_dir(sf_dir)
-    schema = events_raw_schema(spark, stage)
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
     deduped = (
-        raw.select(
-            "event_id",
-            events_ts_col(schema["ts"].dataType).alias("ts"),
-            "user_id", "event_type", "value",
-        )
+        _stream_events(spark, sf_dir, copies=2)
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
     )

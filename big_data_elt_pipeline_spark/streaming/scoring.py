@@ -24,33 +24,7 @@ from big_data_elt_pipeline_spark.operators.classify import (
     model_map_row,
     score_documents,
 )
-from big_data_elt_pipeline_spark.streaming import drain
-
-
-def _staged_docs_dir(sf_dir: str, name: str = "documents.parquet") -> str:
-    """Stage the ``name`` fixture file for a file-source stream. Keyed by
-    a hash of the ABSOLUTE source path (two sf dirs sharing a basename
-    get distinct stages) and refreshed whenever the source's size or
-    mtime differs (a regenerated fixture at the same path is re-copied,
-    never silently streamed stale) — copy2 preserves the source mtime so
-    the staleness check is a pure stat comparison."""
-    import hashlib
-    import pathlib
-    import shutil
-
-    src = pathlib.Path(sf_dir).resolve() / name
-    key = hashlib.sha256(str(src).encode("utf-8")).hexdigest()[:16]
-    stage = pathlib.Path("/tmp/spark_graft_stream_docs") / key
-    stage.mkdir(parents=True, exist_ok=True)
-    target = stage / name
-    st = src.stat()
-    if (
-        not target.exists()
-        or target.stat().st_size != st.st_size
-        or target.stat().st_mtime != st.st_mtime
-    ):
-        shutil.copy2(src, target)
-    return str(stage)
+from big_data_elt_pipeline_spark.streaming import drain, staged_stream
 
 
 def stream_scored_documents(
@@ -67,9 +41,7 @@ def stream_scored_documents(
     form (``model_map_row``) share it instead of re-deriving it — the
     evidence relation passes its eagerly checkpointed row so the stream
     and the batch twin consume the SAME computed state."""
-    stage = _staged_docs_dir(sf_dir)
-    schema = spark.read.parquet(stage).schema
-    raw = spark.readStream.schema(schema).parquet(stage)
+    raw = staged_stream(spark, sf_dir, "documents")
     scored = score_documents(
         raw.select("doc_id", "text"),
         model_map_row(model) if model_row is None else model_row,

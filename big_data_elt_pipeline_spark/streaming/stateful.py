@@ -21,8 +21,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from big_data_elt_pipeline_spark.streaming import drain
-from big_data_elt_pipeline_spark.streaming.events import events_raw_schema
+from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, read_table
+from big_data_elt_pipeline_spark.streaming import drain, staging_dir
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -53,34 +53,26 @@ def _update(
     yield pd.DataFrame({"user_id": [key[0]], "n": [n], "total_cents": [total_cents]})
 
 
-def _stage_two_chunks(spark: SparkSession, sf_dir: str) -> str:
+def _stage_two_chunks(events: DataFrame, sf_dir: str) -> str:
     """Split the events fixture into two files so the stream runs >1 batch."""
-    from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, read_table
-
-    ensure_nanos_conf(spark)
-    stage = pathlib.Path("/tmp/spark_graft_stateful") / pathlib.Path(sf_dir).name
-    if not (stage / "_SUCCESS").exists():
-        df = read_table(spark, sf_dir, "events")
-        mid = df.agg(F.expr("percentile(event_id, 0.5)")).first()[0]
-        df.filter(F.col("event_id") <= mid).coalesce(1).write.mode("overwrite").parquet(str(stage / "a"))
-        df.filter(F.col("event_id") > mid).coalesce(1).write.mode("overwrite").parquet(str(stage / "b"))
-        # flatten part files into one source dir, one file per chunk
-        final = stage
-        for sub in ("a", "b"):
-            for f in (stage / sub).glob("part-*.parquet"):
-                f.rename(final / f"{sub}.parquet")
-        (stage / "_SUCCESS").touch()
+    stage = pathlib.Path(staging_dir("stream_user_totals", sf_dir), "src")
+    if not (stage / "b" / "_SUCCESS").exists():
+        mid = events.agg(F.expr("percentile(event_id, 0.5)")).first()[0]
+        for sub, half in (("a", F.col("event_id") <= mid), ("b", F.col("event_id") > mid)):
+            events.filter(half).coalesce(1).write.mode("overwrite").parquet(str(stage / sub))
     return str(stage)
 
 
 def user_running_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run the stateful query to completion; return the FINAL totals per
     user (the last update each key emitted)."""
-    stage = _stage_two_chunks(spark, sf_dir)
+    ensure_nanos_conf(spark)
+    batch = read_table(spark, sf_dir, "events")
     raw = (
-        spark.readStream.schema(events_raw_schema(spark, stage))
+        spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
+        .option("recursiveFileLookup", "true")
+        .parquet(_stage_two_chunks(batch, sf_dir))
     )
     events = raw.select("user_id", "value")
     updates = events.groupBy("user_id").applyInPandasWithState(

@@ -45,7 +45,7 @@ def stream_text_ingest(
     converging no-ops; with one, restarts continue the epoch sequence.
     """
     raw = staged_slice(
-        spark, sf_dir, "documents.parquet", "doc_id", "text", lo, hi
+        spark, sf_dir, "documents", "doc_id", "text", lo, hi
     )
     app_id = f"stream_text_ingest:{checkpoint_dir or index_path}"
 
