@@ -533,14 +533,11 @@ def main(args: argparse.Namespace) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     _STATE["sf"] = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     _STATE["write_local"] = not args.only
-    # one task slot per usable CPU: the session default (32) oversubscribes
-    # a smaller host and its load swamps the timings
-    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
-    _STATE["cpus"] = int(os.environ["SPARK_GRAFT_CPUS"])
     from big_data_elt_pipeline_spark.plans import queries as Q
     from big_data_elt_pipeline_spark.session import get_spark
 
     spark = get_spark("bench")
+    _STATE["cpus"] = spark.sparkContext.defaultParallelism
     registry = Q.spark_queries()
     # warm the JVM + parquet footers once with the cheapest query
     registry["kpis"](spark, sf_dir).collect()

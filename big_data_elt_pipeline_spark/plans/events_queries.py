@@ -30,7 +30,9 @@ SELECT date_trunc('hour', ts) AS window_start, event_type,
 FROM ev GROUP BY 1, 2 ORDER BY 1, 2
 """)
 def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return EV.tumbling_revenue(events_df(spark, sf_dir), width="1 hour")
+    return EV.tumbling_revenue(events_df(spark, sf_dir), width="1 hour").orderBy(
+        "window_start", "event_type"
+    )
 
 
 @register("events_sessionize", _E + """,

@@ -16,18 +16,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Local test parallelism. On a real cluster these come from spark-submit /
-# cluster conf; shuffle.partitions is deliberately *not* hardcoded to a
-# cluster-scale value because AQE coalesces post-shuffle partitions down
-# from the initial number at runtime.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-
 def default_driver_memory(phys_bytes: int) -> str:
     """Driver heap for a host with ``phys_bytes`` of physical memory: half
     of it in whole GB (at least 1g), capped at 48g. A heap sized past the
     host lets G1 grow instead of collect until the JVM is OOM-killed."""
     return f"{max(1, min(48, phys_bytes // 2 // 2**30))}g"
+
+
+def default_cpus() -> str:
+    """Local parallelism: ``SPARK_GRAFT_CPUS``, else the CPUs this process
+    may run on. One task slot per usable CPU; a wider ``local[N]``
+    oversubscribes the host. On a real cluster these come from
+    spark-submit / cluster conf; shuffle.partitions is deliberately *not*
+    hardcoded to a cluster-scale value because AQE coalesces post-shuffle
+    partitions down from the initial number at runtime."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
 
 def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
@@ -39,7 +42,7 @@ def get_spark(app_name: str = "big_data_elt_pipeline_spark") -> SparkSession:
     - Arrow for any pandas-UDF exchange (vectorized, not per-row pickle).
     - ``parquet.aggregatePushdown`` lets MIN/MAX/COUNT run on footer stats.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", _DEFAULT_CPUS)
+    cpus = default_cpus()
     heap = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(
         os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES"))
     builder = (

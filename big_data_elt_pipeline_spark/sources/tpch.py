@@ -20,16 +20,15 @@ every call. An entry holds an analyzed
 plan and never query data: the memo runs no action and persists nothing.
 It is returned only to the session that built it (identity), and only
 while every member table's stamp (file listing plus schema confs, the
-``read_table`` catalog stamp), ``SPARK_GRAFT_SPREAD_INPUT`` and the
-session time zone and ANSI mode, which analysis bakes into the plan, are
-unchanged; otherwise the plan is rebuilt and replaces the entry.
-DataFrames are immutable, so a hit hands out the stored object itself.
+``read_table`` catalog stamp) and the session time zone and ANSI mode,
+which analysis bakes into the plan, are unchanged; otherwise the plan is
+rebuilt and replaces the entry. DataFrames are immutable, so a hit hands
+out the stored object itself.
 """
 
 from __future__ import annotations
 
 import functools
-import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -109,11 +108,11 @@ def read_table(
     and ``embeddings`` (``SPREAD_TABLES``) that would run all map-side
     work on one core, so when the scan's split count is below
     ``defaultParallelism`` a round-robin repartition is inserted. On a
-    production layout the condition is false and the plan is untouched. Deterministic: round-
-    robin repartition local-sorts its input first, and every downstream
-    operator is partitioning-independent by the repo's determinism
-    contract. Other tables are read unspread. ``spread=`` overrides the
-    per-table default; ``SPARK_GRAFT_SPREAD_INPUT=0`` disables the spread.
+    production layout the condition is false and the plan is untouched.
+    Deterministic: round-robin repartition local-sorts its input first,
+    and every downstream operator is partitioning-independent by the
+    repo's determinism contract. Other tables are read unspread.
+    ``spread=`` overrides the per-table default.
     """
     path = f"{sf_dir}/{name}.parquet"
     try:
@@ -128,7 +127,7 @@ def read_table(
         df = spark.read.schema(entry.schema).parquet(path)
     if spread is None:
         spread = name in SPREAD_TABLES
-    if not spread or os.environ.get("SPARK_GRAFT_SPREAD_INPUT", "1") == "0":
+    if not spread:
         return df
     if entry.splits is None:
         entry.splits = df.rdd.getNumPartitions()
@@ -146,7 +145,7 @@ _PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
 @dataclass
 class _PlanEntry:
     spark: SparkSession
-    stamp: tuple  # members' ``_stamp``, SPARK_GRAFT_SPREAD_INPUT, _PLAN_CONFS
+    stamp: tuple  # members' ``_stamp`` and _PLAN_CONFS
     df: DataFrame
 
 
@@ -163,10 +162,7 @@ def memoized(*tables: str):
                 stamp = _stamp(spark, *(f"{sf_dir}/{t}.parquet" for t in tables))
             except Py4JJavaError:
                 return build(spark, sf_dir)  # missing member: Spark's own error
-            stamp += (
-                os.environ.get("SPARK_GRAFT_SPREAD_INPUT"),
-                *(spark.conf.get(c, None) for c in _PLAN_CONFS),
-            )
+            stamp += tuple(spark.conf.get(c, None) for c in _PLAN_CONFS)
             entry = plans.get(sf_dir)
             if entry is None or entry.spark is not spark or entry.stamp != stamp:
                 entry = plans[sf_dir] = _PlanEntry(spark, stamp, build(spark, sf_dir))

@@ -1,4 +1,14 @@
-"""Structured Streaming surface (beyond-reference — SURVEY.md §2.10/§7)."""
+"""Structured Streaming surface (beyond-reference — SURVEY.md §2.10/§7).
+
+Each stream runs the batch function it is checked against: a stream
+module hands a watermarked (or stateless) file stream to that function,
+or calls it per micro-batch inside ``foreachBatch``, so stream and batch
+twin share one plan body and differ only in source and sink. The
+exceptions are the folds that carry state across micro-batches
+(``stateful``, ``incremental``): each is checked against a plain batch
+``groupBy``. This module holds what every stream shares:
+the fixture stager, the drivers (``drain``, ``drain_to_memory``) and the
+stream-vs-twin ``evidence_relation``."""
 
 from __future__ import annotations
 
@@ -52,6 +62,28 @@ def drain(writer: DataStreamWriter, checkpoint_dir: str | None = None) -> None:
         q.processAllAvailable()
     finally:
         q.stop()
+
+
+def drain_to_memory(df: DataFrame, name: str, mode: str = "append") -> DataFrame:
+    """``drain`` streaming ``df`` into the in-memory table ``name`` (output
+    mode ``mode``) and return that table."""
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    return df.sparkSession.table(name)
+
+
+def evidence_relation(
+    stream: DataFrame, twin: DataFrame, checks: DataFrame
+) -> DataFrame:
+    """(n_stream, the twin's ``checks``..., n_mismatch) as one row: the
+    symmetric ``exceptAll`` count is 0 iff stream == twin including
+    duplicates. Every stream query checked against its batch twin under
+    the oracle gate reports through this relation."""
+    mism = stream.exceptAll(twin).unionByName(twin.exceptAll(stream))
+    return (
+        stream.agg(F.count(F.lit(1)).cast("long").alias("n_stream"))
+        .crossJoin(checks)
+        .crossJoin(mism.agg(F.count(F.lit(1)).cast("long").alias("n_mismatch")))
+    )
 
 
 def staged_stream(

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import lakehouse as LH
 from big_data_elt_pipeline_spark.operators import ann_index as AIX
-from big_data_elt_pipeline_spark.streaming import drain, staged_slice
+from big_data_elt_pipeline_spark.streaming import drain, evidence_relation, staged_slice
 
 
 def stream_index_probe(
@@ -141,8 +141,6 @@ def stream_index_probe_evidence(
     discipline — both engines compute the same IEEE product from the
     same decimal-snapped sum, so the rounded integer is bit-portable).
     """
-    from big_data_elt_pipeline_spark.streaming.events import _evidence_relation
-
     s = stream_index_probe(
         spark, sf_dir, index_path, out_path, lo, hi, k, n_probe
     )
@@ -165,7 +163,7 @@ def stream_index_probe_evidence(
         .alias("sum_adc_nanos"),
         F.count_distinct(F.col("query_id")).cast("long").alias("n_queries"),
     )
-    return _evidence_relation(s, twin, checks).select(
+    return evidence_relation(s, twin, checks).select(
         "n_stream", "n_batch", "n_mismatch",
         "sum_rank", "sum_adc_nanos", "n_queries",
     )

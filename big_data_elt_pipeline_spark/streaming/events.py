@@ -7,11 +7,13 @@ This module adds the streaming surface a Spark-native engine should have:
 
 - Batch forms (tumbling/session windows, JSON prop extraction) are plain
   DataFrame plans with DuckDB oracles — the correctness anchor.
-- ``stream_tumbling_revenue`` runs the SAME aggregation as an incremental
-  Structured Streaming query (file source → watermark → window agg →
-  memory sink), proving the operator works under incremental execution.
+- Each stream runs the batch function it is checked against on a file
+  stream: ``stream_tumbling_revenue`` is ``tumbling_revenue`` over the
+  watermarked stream (file source → watermark → window agg → memory
+  sink), ``stream_attribution_join`` is ``attribution_join`` over two
+  watermarked sides, ``stream_enriched_events`` is ``enrich_events``.
   On a cluster the source becomes Kafka and the sink a Delta/parquet
-  table via ``foreachBatch`` — the plan shape is identical.
+  table via ``foreachBatch`` — the plan is the same function.
 """
 
 from __future__ import annotations
@@ -20,20 +22,30 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
-from big_data_elt_pipeline_spark.streaming import drain, staged_stream
+from big_data_elt_pipeline_spark.streaming import (
+    drain,
+    drain_to_memory,
+    evidence_relation,
+    staged_stream,
+)
 
 SESSION_GAP_MIN = 30
 
 
 def tumbling_revenue(events: DataFrame, width: str = "1 hour") -> DataFrame:
-    """Tumbling-window count + exact value sum per event type."""
+    """Tumbling-window count + exact value sum per event type, unordered.
+
+    Groups by the ``window`` STRUCT and projects its start afterwards:
+    on a watermarked stream the watermark tracks the window column, and
+    projecting ``.start`` before the aggregate would sever it. So the
+    same body serves the batch query and both tumbling streams."""
     return (
-        events.groupBy(
-            F.window("ts", width).start.alias("window_start"),
-            "event_type",
-        )
+        events.groupBy(F.window("ts", width), "event_type")
         .agg(F.count(F.lit(1)).alias("n"), money_sum("value", "total_value"))
-        .orderBy("window_start", "event_type")
+        .select(
+            F.col("window.start").alias("window_start"),
+            "event_type", "n", "total_value",
+        )
     )
 
 
@@ -158,43 +170,24 @@ def attribution_join(purchases: DataFrame, views: DataFrame, window_min: int = 3
 def stream_attribution_join(
     spark: SparkSession, sf_dir: str, window_min: int = 30, watermark: str = "1 hour"
 ) -> DataFrame:
-    """STREAM-STREAM inner join with an event-time range predicate —
-    marketing-style attribution under incremental execution.
+    """``attribution_join`` as a STREAM-STREAM inner join — marketing-style
+    attribution under incremental execution.
 
-    Both sides carry watermarks; the range condition (view within
-    ``window_min`` before the purchase) bounds the join state Spark must
-    retain, so state is evicted as the watermark advances — the
-    cluster-correct unbounded-stream pattern. Inner join + complete arrival
-    means the result equals the batch ``attribution_join`` exactly
-    (asserted in tests).
+    Both sides carry watermarks, and the batch function's range filter
+    (view within ``window_min`` before the purchase) is pushed into the
+    streaming join's condition, where it bounds the join state Spark must
+    retain: state is evicted as the watermark advances — the
+    cluster-correct unbounded-stream pattern. Inner join + complete
+    arrival means the result equals the batch twin exactly (asserted in
+    tests).
     """
     ev = _stream_events(spark, sf_dir)
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts"), "user_id")
-        .withWatermark("p_ts", watermark)
-    )
-    v = (
-        ev.filter(F.col("event_type") == "view")
-        .select(F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts"), "user_id")
-        .withWatermark("v_ts", watermark)
-    )
-    joined = (
-        p.join(
-            v,
-            (p["user_id"] == v["user_id"])
-            & (v["v_ts"] <= p["p_ts"])
-            & (v["v_ts"] >= p["p_ts"] - F.expr(f"INTERVAL {window_min} MINUTES")),
-            "inner",
-        )
-        .select(
-            "purchase_id", "view_id", p["user_id"].alias("user_id"),
-            ((F.unix_micros("p_ts") - F.unix_micros("v_ts")) / F.lit(1_000_000.0)).alias("gap_sec"),
-        )
-    )
-    name = "stream_attribution_sink"
-    drain(joined.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+
+    def side(kind: str) -> DataFrame:
+        return ev.filter(F.col("event_type") == kind).withWatermark("ts", watermark)
+
+    joined = attribution_join(side("purchase"), side("view"), window_min)
+    return drain_to_memory(joined, "stream_attribution_sink")
 
 
 def enrich_events(events: DataFrame, customer: DataFrame) -> DataFrame:
@@ -228,40 +221,24 @@ def stream_enriched_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _stream_events(spark, sf_dir)
     customer = read_table(spark, sf_dir, "customer")
-    enriched = enrich_events(ev, customer)
-    name = "stream_enrich_sink"
-    drain(enriched.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+    return drain_to_memory(enrich_events(ev, customer), "stream_enrich_sink")
 
 
 def stream_tumbling_revenue(
     spark: SparkSession, sf_dir: str, width: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """Incremental form of ``tumbling_revenue`` as a real streaming query.
+    """``tumbling_revenue`` as a real streaming query.
 
     File source (one-shot over the fixture file) → event-time watermark →
-    tumbling window aggregate → memory sink, driven to completion
-    synchronously. Late data beyond the watermark would be dropped, and
-    the 'append' mode only emits finalized windows — the cluster-correct
-    semantics, observable locally.
+    the batch tumbling window aggregate → memory sink, driven to
+    completion synchronously. Late data beyond the watermark would be
+    dropped, and the 'append' mode only emits finalized windows — the
+    cluster-correct semantics, observable locally.
     """
-    events = _stream_events(spark, sf_dir).select("ts", "event_type", "value")
-    # group by the window STRUCT (not .start) — watermark tracking attaches
-    # to the window column; projecting .start pre-aggregation severs it
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), money_sum("value", "total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n",
-            "total_value",
-        )
+    events = _stream_events(spark, sf_dir).withWatermark("ts", watermark)
+    return drain_to_memory(
+        tumbling_revenue(events, width), "stream_tumbling_revenue_sink"
     )
-    name = "stream_tumbling_revenue_sink"
-    drain(agg.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
 
 
 def stream_tumbling_evidence(
@@ -306,7 +283,7 @@ def stream_tumbling_evidence(
         F.min("window_start").alias("first_window"),
         F.max("window_start").alias("last_window"),
     )
-    return _evidence_relation(s, fin, checks).select(
+    return evidence_relation(s, fin, checks).select(
         "n_stream", "n_finalized", "n_mismatch",
         "sum_n", "sum_value", "first_window", "last_window",
     )
@@ -322,7 +299,8 @@ def stream_tumbling_revenue_to_sink(
     watermark: str = "2 hours",
 ) -> None:
     """Durable, RESUMABLE form of ``stream_tumbling_revenue``: file source →
-    watermarked tumbling aggregate → append parquet sink, with a checkpoint.
+    watermark → ``tumbling_revenue`` → append parquet sink, with a
+    checkpoint.
 
     Source offsets, window state, and the event-time watermark all live in
     ``checkpoint_dir``, so a stopped query restarted against the same
@@ -334,17 +312,9 @@ def stream_tumbling_revenue_to_sink(
     output is bit-identical to the batch twin on every finalized window.
     """
     events = spark.readStream.schema(schema).parquet(source_dir)
-    agg = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), money_sum("value", "total_value"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type", "n", "total_value",
-        )
-    )
     drain(
-        agg.writeStream.outputMode("append")
+        tumbling_revenue(events.withWatermark("ts", watermark), width)
+        .writeStream.outputMode("append")
         .format("parquet")
         .option("path", sink_dir),
         checkpoint_dir,
@@ -372,24 +342,7 @@ def stream_deduped_events(
         .withWatermark("ts", watermark)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    name = "stream_dedup_sink"
-    drain(deduped.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
-
-
-def _evidence_relation(
-    stream: DataFrame, twin: DataFrame, checks: DataFrame
-) -> DataFrame:
-    """(n_stream, n_batch-side checks..., n_mismatch) as one row: the
-    symmetric ``exceptAll`` count is 0 iff stream == twin including
-    duplicates — the ``stream_tumbling_evidence`` discipline shared by
-    every promoted streaming query."""
-    mism = stream.exceptAll(twin).unionByName(twin.exceptAll(stream))
-    return (
-        stream.agg(F.count(F.lit(1)).cast("long").alias("n_stream"))
-        .crossJoin(checks)
-        .crossJoin(mism.agg(F.count(F.lit(1)).cast("long").alias("n_mismatch")))
-    )
+    return drain_to_memory(deduped, "stream_dedup_sink")
 
 
 def stream_dedup_evidence(
@@ -426,7 +379,7 @@ def stream_dedup_evidence(
         F.min("ts").alias("first_ts"),
         F.max("ts").alias("last_ts"),
     )
-    return _evidence_relation(s, twin, checks).select(
+    return evidence_relation(s, twin, checks).select(
         "n_stream", "n_batch", "n_mismatch",
         "sum_event_id", "sum_value_cents", "first_ts", "last_ts",
     )
@@ -453,7 +406,7 @@ def stream_enrich_evidence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_unknown"),
     )
-    return _evidence_relation(s, twin, checks).select(
+    return evidence_relation(s, twin, checks).select(
         "n_stream", "n_batch", "n_mismatch",
         "sum_event_id", "sum_value_cents", "n_segments", "n_unknown",
     )
@@ -485,7 +438,7 @@ def stream_attribution_evidence(
         .alias("sum_gap_us"),
         F.count_distinct("user_id").cast("long").alias("n_users"),
     )
-    return _evidence_relation(s, twin, checks).select(
+    return evidence_relation(s, twin, checks).select(
         "n_stream", "n_batch", "n_mismatch",
         "sum_purchase_id", "sum_view_id", "sum_gap_us", "n_users",
     )

@@ -24,7 +24,11 @@ from big_data_elt_pipeline_spark.operators.classify import (
     model_map_row,
     score_documents,
 )
-from big_data_elt_pipeline_spark.streaming import drain, staged_stream
+from big_data_elt_pipeline_spark.streaming import (
+    drain_to_memory,
+    evidence_relation,
+    staged_stream,
+)
 
 
 def stream_scored_documents(
@@ -46,9 +50,7 @@ def stream_scored_documents(
         raw.select("doc_id", "text"),
         model_map_row(model) if model_row is None else model_row,
     )
-    name = "stream_doc_scoring_sink"
-    drain(scored.writeStream.outputMode("append").format("memory").queryName(name))
-    return spark.table(name)
+    return drain_to_memory(scored, "stream_doc_scoring_sink")
 
 
 def stream_doc_scoring_evidence(
@@ -64,7 +66,6 @@ def stream_doc_scoring_evidence(
     so the driver hash certifies stream == batch == cross-engine model
     end to end."""
     from big_data_elt_pipeline_spark.sources.tpch import read_table
-    from big_data_elt_pipeline_spark.streaming.events import _evidence_relation
 
     # read_table, not a bare read: the batch twin re-scores the WHOLE
     # corpus with per-doc text features, exactly the map-heavy shape the
@@ -81,6 +82,6 @@ def stream_doc_scoring_evidence(
         .alias("sum_score_nanos"),
         F.sum("predicted").cast("long").alias("n_predicted"),
     )
-    return _evidence_relation(s, twin, checks).select(
+    return evidence_relation(s, twin, checks).select(
         "n_stream", "n_batch", "n_mismatch", "sum_score_nanos", "n_predicted"
     )

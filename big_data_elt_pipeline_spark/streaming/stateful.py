@@ -22,7 +22,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from big_data_elt_pipeline_spark.sources.tpch import ensure_nanos_conf, read_table
-from big_data_elt_pipeline_spark.streaming import drain, staging_dir
+from big_data_elt_pipeline_spark.streaming import drain_to_memory, staging_dir
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -82,9 +82,7 @@ def user_running_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "user_running_totals_sink"
-    drain(updates.writeStream.outputMode("update").format("memory").queryName(name))
-    sink = spark.table(name)
+    sink = drain_to_memory(updates, "user_running_totals_sink", mode="update")
     # the memory sink accumulates every batch's updates; `n` is monotone per
     # user, so the final state is the max-n row
     from pyspark.sql import Window

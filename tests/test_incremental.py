@@ -1,7 +1,5 @@
 """Incremental gold refresh == full batch recompute, bit for bit."""
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
@@ -10,9 +8,9 @@ from big_data_elt_pipeline_spark.streaming.incremental import incremental_ca_mon
 from tests.conftest import SF_SMOKE
 
 
-def test_incremental_matches_batch(spark):
+def test_incremental_matches_batch(spark, tmp_path):
     achats = tpch.achats_df(spark, SF_SMOKE)
-    tmp = tempfile.mkdtemp(prefix="incr_")
+    tmp = str(tmp_path)
     incr = incremental_ca_monthly(
         spark, achats, f"{tmp}/src", f"{tmp}/state", chunks=3
     ).toPandas()
@@ -28,14 +26,13 @@ def test_incremental_matches_batch(spark):
     assert (m.n_b == m.n_i).all()
 
 
-def test_incremental_ran_multiple_batches(spark):
+def test_incremental_ran_multiple_batches(spark, tmp_path):
     """The staging really produced multiple micro-batches (not one big
     fold) — otherwise the merge path is untested."""
     import pathlib
-    import tempfile
 
     achats = tpch.achats_df(spark, SF_SMOKE)
-    tmp = tempfile.mkdtemp(prefix="incr2_")
+    tmp = str(tmp_path)
     incremental_ca_monthly(spark, achats, f"{tmp}/src", f"{tmp}/state", chunks=4)
     chunks = list(pathlib.Path(f"{tmp}/src/data").glob("__chunk=*"))
     assert len(chunks) == 4

@@ -1,7 +1,5 @@
 """Source/sink format coverage: ORC and JSON round-trips, lakehouse stubs."""
 
-import tempfile
-
 import pytest
 from pyspark.sql import types as T
 
@@ -10,18 +8,18 @@ from big_data_elt_pipeline_spark.sources import tpch
 from tests.conftest import SF_SMOKE
 
 
-def test_orc_roundtrip(spark):
+def test_orc_roundtrip(spark, tmp_path):
     clients = tpch.clients_df(spark, SF_SMOKE)
-    tmp = tempfile.mkdtemp(prefix="orc_")
+    tmp = str(tmp_path)
     eio.write_orc(clients, f"{tmp}/clients")
     back = eio.read_orc(spark, f"{tmp}/clients")
     assert back.count() == clients.count()
     assert back.schema == clients.schema
 
 
-def test_json_roundtrip_with_schema(spark):
+def test_json_roundtrip_with_schema(spark, tmp_path):
     clients = tpch.clients_df(spark, SF_SMOKE).select("id_client", "nom", "pays")
-    tmp = tempfile.mkdtemp(prefix="json_")
+    tmp = str(tmp_path)
     clients.write.mode("overwrite").json(f"{tmp}/clients")
     schema = T.StructType(
         [

@@ -2,7 +2,6 @@
 gold stage's plan shape, job budget and error path."""
 
 import datetime as dt
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,8 +27,8 @@ def _job_count(spark) -> int:
 
 
 @pytest.fixture(scope="module")
-def lake(spark):
-    tmp = tempfile.mkdtemp(prefix="lake_")
+def lake(spark, tmp_path_factory):
+    tmp = str(tmp_path_factory.mktemp("lake"))
     src = f"{tmp}/sources"
     clients = tpch.clients_df(spark, SF_SMOKE)
     achats = tpch.achats_df(spark, SF_SMOKE)

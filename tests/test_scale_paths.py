@@ -1,8 +1,6 @@
 """Scale-path proofs: partition pruning and bucketed co-located joins —
 asserted on the physical plan, not just on results."""
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark import io as eio
@@ -14,13 +12,13 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_partitioned_fact_prunes(spark):
+def test_partitioned_fact_prunes(spark, tmp_path):
     from big_data_elt_pipeline_spark.operators import gold
 
     clients = tpch.clients_df(spark, SF_SMOKE)
     achats = tpch.achats_df(spark, SF_SMOKE)
     fact = gold.build_fact(achats, clients)
-    tmp = tempfile.mkdtemp(prefix="prune_")
+    tmp = str(tmp_path)
     eio.write_parquet(fact, f"{tmp}/fact", partition_by=["annee"])
 
     pruned = eio.read_parquet(spark, f"{tmp}/fact").filter(F.col("annee") == 1997)
@@ -248,16 +246,13 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark):
             conf.set(k, v)
 
 
-def test_tpch_q6_pure_scan_pushdown(spark, monkeypatch):
+def test_tpch_q6_pure_scan_pushdown(spark):
     """Q6's contract: no join, every predicate pushed to the parquet scan,
-    and no shuffle beyond the single-row final aggregate. Pinned on the
-    PRODUCTION layout (spread disabled): the r14 input-spread repartition
-    deliberately adds one round-robin exchange when the local corpus
-    ships as a single unsplittable file, which is exactly the degenerate
-    case this plan-shape contract is not about."""
+    and no shuffle beyond the single-row final aggregate. ``lineitem`` is
+    never spread (only the map-heavy corpora are), so this is the plan a
+    production layout gets too."""
     from big_data_elt_pipeline_spark.plans import queries as Q
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_INPUT", "0")
     df = Q.spark_queries()["tpch_q6"](spark, SF_SMOKE)
     # executedPlan().toString() truncates long pushed-filter lists; the
     # formatted explain prints the full PushedFilters block

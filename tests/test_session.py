@@ -1,11 +1,14 @@
-"""Session factory helpers: the driver-heap default and the persistent-RDD
-registry span helpers."""
+"""Session factory helpers: the CPU and driver-heap defaults and the
+persistent-RDD registry span helpers."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from big_data_elt_pipeline_spark.session import (
+    default_cpus,
     default_driver_memory,
     pinned_rdds,
     unpersist_rdds,
@@ -22,6 +25,14 @@ GIB = 2**30
 ])
 def test_default_driver_memory(phys, heap):
     assert default_driver_memory(phys) == heap
+
+
+def test_default_cpus_is_the_affinity_count(spark, monkeypatch):
+    assert spark.sparkContext.defaultParallelism == int(default_cpus())
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cpus() == str(len(os.sched_getaffinity(0)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_cpus() == "3"
 
 
 def test_unpersist_frees_only_the_span(spark):

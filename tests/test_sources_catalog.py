@@ -6,7 +6,7 @@ rewritten file must be re-inferred, and only the map-heavy corpora
 (``documents``, ``embeddings``) get the single-split round-robin spread.
 ``clients_df`` / ``achats_df`` / ``_fact`` hand a repeat caller the same
 plan object, and a fresh one after a member file is rewritten, to another
-session, or when ``SPARK_GRAFT_SPREAD_INPUT`` changes.
+session, or when the session time zone changes.
 """
 
 import contextlib
@@ -142,15 +142,6 @@ def test_new_session_never_gets_the_first_sessions_plan(spark):
         assert their is not mine
         assert their.sparkSession is other
     assert all(p.sparkSession is spark for p in _domain_plans(spark, SF_SMOKE))
-
-
-def test_spread_env_flip_gives_fresh_plan(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_INPUT", raising=False)
-    first = _domain_plans(spark, SF_SMOKE)
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_INPUT", "0")
-    flipped = _domain_plans(spark, SF_SMOKE)
-    assert all(a is not b for a, b in zip(first, flipped))
-    assert all(a is b for a, b in zip(flipped, _domain_plans(spark, SF_SMOKE)))
 
 
 def test_time_zone_change_gives_fresh_plan(spark):

@@ -94,6 +94,28 @@ def test_stream_drops_only_trailing_watermark_windows(spark):
         assert (missing.window_start >= horizon - pd.Timedelta(hours=2)).all()
 
 
+def _ca_recompute(df, key, key_name):
+    """The full batch recompute an incremental gold state must equal."""
+    from pyspark.sql import functions as F
+
+    return (
+        df.groupBy(key.alias(key_name))
+        .agg(
+            F.sum(F.col("montant").cast("decimal(18,4)")).alias("ca_dec"),
+            F.count(F.lit(1)).alias("n"),
+        )
+        .select(key_name, F.col("ca_dec").cast("double").alias("ca"), "n")
+        .orderBy(key_name)
+        .toPandas()
+    )
+
+
+def _assert_same_state(got, want, key_name):
+    assert got[key_name].tolist() == want[key_name].tolist()
+    assert got.ca.tolist() == want.ca.tolist()  # bit-identical doubles
+    assert got.n.tolist() == want.n.tolist()
+
+
 def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
     """Kill-mid-stream restart: run ``incremental_gold`` with a checkpoint,
     crash the query inside the SECOND micro-batch (fault injection via the
@@ -115,11 +137,11 @@ def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
     real_merge = inc._merge_batch
     calls = []
 
-    def crashing_merge(spark_, batch, state_dir, key_, key_name_):
+    def crashing_merge(*args, **kwargs):
         calls.append("crash-run")
         if len(calls) >= 2:
             raise RuntimeError("injected crash in micro-batch 2")
-        real_merge(spark_, batch, state_dir, key_, key_name_)
+        real_merge(*args, **kwargs)
 
     monkeypatch.setattr(inc, "_merge_batch", crashing_merge)
     with pytest.raises(Exception, match="injected crash"):
@@ -131,9 +153,9 @@ def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
 
     recovered_batches = []
 
-    def counting_merge(spark_, batch, state_dir, key_, key_name_):
+    def counting_merge(spark_, batch, *args, **kwargs):
         recovered_batches.append(batch.count())
-        real_merge(spark_, batch, state_dir, key_, key_name_)
+        real_merge(spark_, batch, *args, **kwargs)
 
     monkeypatch.setattr(inc, "_merge_batch", counting_merge)
     recovered = inc.incremental_gold(
@@ -146,20 +168,37 @@ def test_incremental_gold_checkpoint_recovery(spark, tmp_path, monkeypatch):
     n_total = achats.count()
     assert sum(recovered_batches) < n_total
     assert len(recovered_batches) >= 1
+    _assert_same_state(recovered, _ca_recompute(achats, key, key_name), key_name)
 
-    full = (
-        achats.groupBy(key.alias(key_name))
-        .agg(
-            F.sum(F.col("montant").cast("decimal(18,4)")).alias("ca_dec"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(key_name, F.col("ca_dec").cast("double").alias("ca"), "n")
-        .orderBy(key_name)
-        .toPandas()
-    )
-    assert recovered[key_name].tolist() == full[key_name].tolist()
-    assert recovered.ca.tolist() == full.ca.tolist()  # bit-identical doubles
-    assert recovered.n.tolist() == full.n.tolist()
+
+def test_incremental_gold_replayed_epoch_folds_once(spark, tmp_path):
+    """At-least-once delivery: finish a checkpointed run, drop the last
+    entry of the checkpoint's ``commits/`` log and restart, so the engine
+    re-delivers the last epoch. The state commit for that epoch is
+    already in the state's log, so the replay is skipped and the state
+    still equals the batch recompute in ``ca`` and ``n``."""
+    from pyspark.sql import functions as F
+
+    from big_data_elt_pipeline_spark.sources.tpch import achats_df
+    from big_data_elt_pipeline_spark.streaming import incremental as inc
+
+    achats = achats_df(spark, SF_SMOKE).select("id_achat", "montant", "date_achat")
+    src, state, ckpt = (str(tmp_path / d) for d in ("src", "state", "ckpt"))
+    key, key_name = F.date_format("date_achat", "yyyy-MM"), "mois"
+
+    def run():
+        return inc.incremental_gold(
+            spark, achats, src, state, key, key_name, chunks=3, checkpoint_dir=ckpt,
+        ).toPandas()
+
+    want = _ca_recompute(achats, key, key_name)
+    _assert_same_state(run(), want, key_name)
+    commits = tmp_path / "ckpt" / "commits"
+    last = max(int(p.name) for p in commits.iterdir() if p.name.isdigit())
+    assert last == 2  # three shards, three epochs
+    for name in (str(last), f".{last}.crc"):  # the entry and its checksum
+        (commits / name).unlink(missing_ok=True)
+    _assert_same_state(run(), want, key_name)
 
 
 def test_tumbling_sink_checkpoint_recovery(spark, tmp_path):
