@@ -183,24 +183,23 @@ def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gold.build_fact(achats, clients)
 
 
+@tpch.memoized("lineitem", "orders", "part")
 def _ref_date(spark: SparkSession, sf_dir: str):
     """Max ``date_achat`` over achats — the same as over fact, whose LEFT
-    client join keeps the achats rows one-to-one. One action on the
-    memoized ``achats`` plan."""
+    client join keeps the achats rows one-to-one. One action on a miss;
+    memoized per corpus version."""
     return gold.reference_date(tpch.achats_df(spark, sf_dir))
 
 
+@tpch.memoized("customer", "nation", "lineitem", "orders", "part")
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``score_clients`` over the client features, checkpointed eagerly:
-    the features frame is dimension-sized but its lineage is the full
-    fact build, and it feeds two consumers (the thresholds collect inside
-    ``score_clients`` and the returned plan), each of which would
-    otherwise replay the fact scan, joins and groupBy. (The bench harness
-    unpersists query-pinned blocks after each timing, so the checkpoint
-    cannot accumulate across queries.)"""
+    """``score_clients`` over the lazy client features, memoized per corpus
+    version: a miss collects the ``ScoreThresholds`` once (inside
+    ``score_clients``), and the stored plan carries them as literals, so
+    a hit runs no job."""
     features = gold.build_client_features(
         _fact(spark, sf_dir), tpch.clients_df(spark, sf_dir), _ref_date(spark, sf_dir)
-    ).localCheckpoint(eager=True)
+    )
     return gold.score_clients(features)
 
 

@@ -13,17 +13,22 @@ Cross-engine exactness note: ``montant`` is the double product
 4 true decimal digits, so the snap is unambiguous (never near a rounding
 midpoint) and both engines land on the bit-identical double.
 
-Plan memo: ``memoized`` makes ``clients_df``, ``achats_df`` and
-``plans.queries._fact`` each return one stored DataFrame per corpus dir
-instead of rebuilding and re-analyzing the joined plan over py4j on
-every call. An entry holds an analyzed
-plan and never query data: the memo runs no action and persists nothing.
-It is returned only to the session that built it (identity), and only
-while every member table's stamp (file listing plus schema confs, the
-``read_table`` catalog stamp) and the session time zone and ANSI mode,
-which analysis bakes into the plan, are unchanged; otherwise the plan is
-rebuilt and replaces the entry. DataFrames are immutable, so a hit hands
-out the stored object itself.
+Per-version memo: ``memoized`` makes a ``(spark, sf_dir)`` builder
+return one stored value per corpus dir instead of recomputing it on every
+call. ``clients_df``, ``achats_df`` and ``plans.queries._fact`` store an
+analyzed plan, so a hit skips rebuilding and re-analyzing the joined plan
+over py4j. ``plans.queries._ref_date`` stores the reference date and
+``plans.queries._scored`` the scored-clients plan, whose score thresholds
+are literals: a hit skips the actions that computed them. An entry holds
+an analyzed plan or a few scalars derived from that corpus version. It
+never holds a row set and never holds pinned blocks, so no caller can
+free what a later hit hands out. An entry is returned only to the session
+that built it (identity), and only while every member table's stamp (file
+listing plus schema confs, the ``read_table`` catalog stamp) and the
+session time zone and ANSI mode, which analysis bakes into the plan, are
+unchanged; otherwise the builder runs again and replaces the entry.
+DataFrames and scalars are immutable, so a hit hands out the stored
+object itself.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from __future__ import annotations
 import functools
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
@@ -141,23 +147,27 @@ def read_table(
 # date functions (resolved time zone, ANSI eval mode)
 _PLAN_CONFS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
 
+_V = TypeVar("_V")
+
 
 @dataclass
 class _PlanEntry:
     spark: SparkSession
     stamp: tuple  # members' ``_stamp`` and _PLAN_CONFS
-    df: DataFrame
+    value: object  # an analyzed plan or scalars, never rows or pinned blocks
 
 
 def memoized(*tables: str):
-    """Memoize a ``(spark, sf_dir)`` plan builder over corpus ``tables``:
-    one entry per corpus dir, an analyzed plan and no query data, handed
-    out while it is still valid for the session and corpus version."""
-    def deco(build: Callable[[SparkSession, str], DataFrame]):
+    """Memoize a ``(spark, sf_dir)`` builder over corpus ``tables``: one
+    entry per corpus dir, handed out while it is still valid for the
+    session and corpus version. The builder may return an analyzed plan
+    or scalars derived from the corpus version, never a row set or a
+    plan over pinned blocks (module docstring)."""
+    def deco(build: Callable[[SparkSession, str], _V]) -> Callable[[SparkSession, str], _V]:
         plans: dict[str, _PlanEntry] = {}
 
         @functools.wraps(build)
-        def memo(spark: SparkSession, sf_dir: str) -> DataFrame:
+        def memo(spark: SparkSession, sf_dir: str) -> _V:
             try:
                 stamp = _stamp(spark, *(f"{sf_dir}/{t}.parquet" for t in tables))
             except Py4JJavaError:
@@ -166,7 +176,7 @@ def memoized(*tables: str):
             entry = plans.get(sf_dir)
             if entry is None or entry.spark is not spark or entry.stamp != stamp:
                 entry = plans[sf_dir] = _PlanEntry(spark, stamp, build(spark, sf_dir))
-            return entry.df
+            return entry.value
 
         return memo
     return deco

@@ -6,7 +6,9 @@ rewritten file must be re-inferred, and only the map-heavy corpora
 (``documents``, ``embeddings``) get the single-split round-robin spread.
 ``clients_df`` / ``achats_df`` / ``_fact`` hand a repeat caller the same
 plan object, and a fresh one after a member file is rewritten, to another
-session, or when the session time zone changes.
+session, or when the session time zone changes. ``_ref_date`` and
+``_scored`` follow the same key, and the scored plan references no
+checkpoint a caller can free.
 """
 
 import contextlib
@@ -15,7 +17,10 @@ import shutil
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from big_data_elt_pipeline_spark.operators import gold
 from big_data_elt_pipeline_spark.plans import queries as Q
+from big_data_elt_pipeline_spark.plans.compare import diff_frames, duckdb_connection
+from big_data_elt_pipeline_spark.session import pinned_rdds, unpersist_rdds
 from big_data_elt_pipeline_spark.sources import tpch
 from tests.conftest import SF_SMOKE
 
@@ -108,6 +113,12 @@ def _domain_plans(spark, sf):
     return tpch.clients_df(spark, sf), tpch.achats_df(spark, sf), Q._fact(spark, sf)
 
 
+def _copy_corpus(tmp_path, tables=_DOMAIN_TABLES):
+    for t in tables:
+        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{tmp_path}/{t}.parquet")
+    return str(tmp_path)
+
+
 def test_domain_plans_memoized_on_unchanged_corpus(spark):
     first = _domain_plans(spark, SF_SMOKE)
     with _job_ids(spark, "memo-repeat") as ids:
@@ -119,9 +130,7 @@ def test_domain_plans_memoized_on_unchanged_corpus(spark):
 def test_rewritten_member_gives_fresh_plan(spark, tmp_path):
     import pyarrow.parquet as pq
 
-    sf = str(tmp_path)
-    for t in _DOMAIN_TABLES:
-        shutil.copyfile(f"{SF_SMOKE}/{t}.parquet", f"{sf}/{t}.parquet")
+    sf = _copy_corpus(tmp_path)
     clients, achats, fact = _domain_plans(spark, sf)
     n_clients = clients.count()
 
@@ -162,3 +171,88 @@ def test_time_zone_change_gives_fresh_plan(spark):
         spark.conf.set(key, old)
     assert shifted - base == 5 * 3600
     assert first_purchase() == base
+
+
+def _version_state(spark, sf):
+    return Q._ref_date(spark, sf), Q._scored(spark, sf)
+
+
+def test_ref_date_and_scored_memoized_on_unchanged_corpus(spark, tmp_path):
+    sf = _copy_corpus(tmp_path)
+    with _job_ids(spark, "scored-miss") as miss:
+        first = _version_state(spark, sf)
+    with _job_ids(spark, "scored-hit") as hit:
+        again = _version_state(spark, sf)
+    assert miss  # the ref-date max and the thresholds collect
+    assert hit == []
+    assert all(a is b for a, b in zip(first, again))
+
+
+def test_rewritten_lineitem_gives_fresh_ref_date_and_scores(spark, tmp_path):
+    import pyarrow.parquet as pq
+
+    sf = _copy_corpus(tmp_path)
+    ref, scored = _version_state(spark, sf)
+    old_t = gold.compute_score_thresholds(
+        gold.build_client_features(Q._fact(spark, sf), tpch.clients_df(spark, sf), ref)
+    )
+
+    lineitem = pq.read_table(f"{sf}/lineitem.parquet")
+    pq.write_table(lineitem.slice(0, 1000), f"{sf}/lineitem.parquet")
+    ref2, scored2 = _version_state(spark, sf)
+    assert ref2 < ref and scored2 is not scored
+
+    # from scratch on the rewritten corpus: no memoized scalar involved
+    clients = tpch.clients_df(spark, sf)
+    fact = gold.build_fact(tpch.achats_df(spark, sf), clients)
+    features = gold.build_client_features(fact, clients, gold.reference_date(fact))
+    t = gold.compute_score_thresholds(features)
+    assert t != old_t
+    want = gold.score_clients(features, thresholds=t)
+    assert sorted(scored2.collect()) == sorted(want.collect())
+
+
+def test_time_zone_change_gives_fresh_scores(spark):
+    key = "spark.sql.session.timeZone"
+    old = spark.conf.get(key)
+    ref, scored = _version_state(spark, SF_SMOKE)
+    spark.conf.set(key, "Etc/GMT+5")
+    try:
+        ref2, scored2 = _version_state(spark, SF_SMOKE)
+    finally:
+        spark.conf.set(key, old)
+    assert (ref2 - ref).total_seconds() == 5 * 3600
+    assert scored2 is not scored
+    assert _version_state(spark, SF_SMOKE)[0] == ref
+
+
+def test_new_session_never_gets_the_first_sessions_scores(spark):
+    _, mine = _version_state(spark, SF_SMOKE)
+    other = spark.newSession()
+    with _job_ids(spark, "scored-other") as ids:
+        _, theirs = _version_state(other, SF_SMOKE)
+    assert ids  # its own ref-date and thresholds actions
+    assert theirs is not mine and theirs.sparkSession is other
+    assert Q._scored(spark, SF_SMOKE).sparkSession is spark
+
+
+def test_scored_plan_pins_nothing_and_survives_freed_checkpoints(spark, tmp_path):
+    """A memoized plan must never reference a checkpoint a caller can
+    free: client scoring pins no RDD, and after every pinned RDD is
+    freed the memo-hit plans still run and match the oracle."""
+    sf = _copy_corpus(tmp_path, tpch.TABLES)
+    names = ("client_scores", "segment_summary")
+    before = pinned_rdds(spark)
+    for name in names:
+        Q.spark_queries()[name](spark, sf).write.format("noop").mode("overwrite").save()
+    assert pinned_rdds(spark) == before
+
+    unpersist_rdds(spark, pinned_rdds(spark))
+    con = duckdb_connection(sf)
+    try:
+        for name in names:
+            got = Q.spark_queries()[name](spark, sf).toPandas()
+            want = con.execute(Q.oracle_queries()[name]).fetchdf()
+            assert diff_frames(got, want) == [], name
+    finally:
+        con.close()
