@@ -223,7 +223,7 @@ def test_time_zone_change_gives_fresh_scores(spark):
         spark.conf.set(key, old)
     assert (ref2 - ref).total_seconds() == 5 * 3600
     assert scored2 is not scored
-    assert _version_state(spark, SF_SMOKE)[0] == ref
+    assert Q._ref_date(spark, SF_SMOKE) == ref
 
 
 def test_new_session_never_gets_the_first_sessions_scores(spark):
