@@ -18,7 +18,7 @@ bit-identical to the unsalted plan because decimal addition is associative.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.core import MONEY_DECIMAL

@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import pathlib
+import shutil
 import tempfile
 import uuid
 
@@ -124,12 +125,15 @@ def _enforce_schema(path: str, df: DataFrame) -> None:
 
 def _txn_committed(path: str, txn: tuple[str, int]) -> bool:
     """True iff a commit carrying this ``(app_id, epoch)`` transaction tag
-    is already in the log — the Delta txnAppId/txnVersion idempotence
+    is already in the log, or a vacuum checkpoint records an epoch at or
+    above it for the app id — the Delta txnAppId/txnVersion idempotence
     check, folded over manifests (KB-sized; no data read)."""
     app_id, epoch = txn
     for v in table_versions(path):
         c = _read_commit(path, v)
         if c.get("txn_app_id") == app_id and c.get("txn_epoch") == epoch:
+            return True
+        if epoch <= c.get("txns", {}).get(app_id, -1):
             return True
     return False
 
@@ -478,7 +482,10 @@ def vacuum(path: str, retain_versions: int = 1) -> dict:
     RETAINED version's manifest is rewritten as a CONSOLIDATED checkpoint
     (mode=overwrite, full live file list + folded stats at that version) —
     Delta's log-checkpoint mechanism, which is what makes dropping the log
-    prefix safe. Returns {"deleted_files": n, "deleted_manifests": n}.
+    prefix safe. The checkpoint also keeps, per txn app id of the dropped
+    commits, the highest epoch (``txns``), so an epoch the engine
+    re-delivers after a vacuum is still skipped. Returns
+    {"deleted_files": n, "deleted_manifests": n}.
     """
     if retain_versions < 1:
         raise ValueError("retain_versions must be >= 1")
@@ -494,6 +501,16 @@ def vacuum(path: str, retain_versions: int = 1) -> dict:
     cut_live = live_files(path, cutoff)
     cut_stats = live_file_stats(path, cutoff)
     commit = _read_commit(path, cutoff)
+    txns: dict[str, int] = {}
+    for v in versions[:-retain_versions]:
+        c = _read_commit(path, v)
+        tags = dict(c.get("txns", {}))
+        if "txn_app_id" in c:
+            tags[c["txn_app_id"]] = c["txn_epoch"]
+        for app_id, epoch in tags.items():
+            txns[app_id] = max(epoch, txns.get(app_id, -1))
+    if txns:
+        commit["txns"] = txns
     commit.update(
         mode="overwrite",
         files=[os.path.relpath(f, path) for f in cut_live],
@@ -512,8 +529,8 @@ def vacuum(path: str, retain_versions: int = 1) -> dict:
             if str(p) not in keep_files:
                 p.unlink()
                 deleted_files += 1
-        if not any(data_dir.iterdir()):
-            data_dir.rmdir()
+        if not any(data_dir.glob("*.parquet")):
+            shutil.rmtree(data_dir)  # with the writer's _SUCCESS and .crc files
     deleted_manifests = 0
     for v in versions:
         if v < cutoff:

@@ -19,7 +19,7 @@ statistical.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.text import (

@@ -3,9 +3,10 @@
 Canonical semantics = the reference's pandas variant
 (``flows/silver_transformation.py``, re-applied at ``flows/gold_transformation.py:74-111``):
 coerce→null→drop on keys/dates/amounts, string normalization, email predicate,
-date bounds (BOTH bounds — the reference's Spark variant drops the upper bound,
-a divergence we don't copy), deterministic keep-first / keep-last dedup, and a
-semi-join purge of orphan purchases.
+date bounds (a lower bound always, an upper bound when the caller pins one —
+never the reference's wall-clock ``utcnow``, which makes a clean depend on the
+day it runs), deterministic keep-first / keep-last dedup, and a semi-join
+purge of orphan purchases.
 
 Scale notes:
 - Everything is a single declarative plan — Catalyst pushes the null/range
@@ -55,21 +56,6 @@ def _dedup_by_key(df: DataFrame, key: str, keep: str) -> DataFrame:
     )
 
 
-def _require_max_date(max_date: dt.date | str | None) -> dt.date | str:
-    """Reject wall-clock-dependent defaults: the r5 verdict flagged the old
-    ``dt.date.today()`` fallback as non-deterministic (same input, different
-    output across days). Callers must pin the bound explicitly; the pipeline
-    derives a data-max bound once when its caller doesn't care
-    (``pipeline.silver_transform``)."""
-    if max_date is None:
-        raise ValueError(
-            "max_date is required: an unpinned upper date bound makes the "
-            "clean non-reproducible (pass an explicit date, or let "
-            "pipeline.silver_transform derive the data max)"
-        )
-    return max_date
-
-
 def clean_clients(
     raw: DataFrame,
     min_date: dt.date | str = MIN_VALID_DATE,
@@ -77,12 +63,12 @@ def clean_clients(
 ) -> DataFrame:
     """P1-P6 + W4 on the clients table.
 
-    ``min_date``/``max_date``: validity bounds for ``date_inscription`` (the
-    pandas reference hardcodes 2000-01-01..utcnow; explicit parameters keep
-    runs reproducible and let other corpora use their own epoch).
+    ``min_date``/``max_date``: inclusive validity bounds for
+    ``date_inscription`` (the pandas reference hardcodes 2000-01-01..utcnow;
+    explicit parameters keep runs reproducible and let other corpora use
+    their own epoch). ``max_date`` None applies no upper bound.
     """
     require_columns(raw, REQUIRED_CLIENT_COLS, "clients_raw")
-    hi = _require_max_date(max_date)
     df = (
         raw.select(
             F.col("id_client").try_cast("long").alias("id_client"),
@@ -92,10 +78,11 @@ def clean_clients(
             F.initcap(F.trim(F.col("pays").cast("string"))).alias("pays"),
         )
         .filter(F.col("id_client").isNotNull())
-        .filter(F.col("date_inscription").isNotNull())
-        .filter(F.col("date_inscription").between(F.lit(str(min_date)), F.lit(hi)))
+        .filter(F.col("date_inscription") >= F.lit(str(min_date)))
         .filter(F.col("email").contains("@"))
     )
+    if max_date is not None:
+        df = df.filter(F.col("date_inscription") <= F.lit(max_date))
     return _dedup_by_key(df, "id_client", keep="first")
 
 
@@ -109,11 +96,11 @@ def clean_achats(
     """P1-P5 + W4 keep-last + J4 semi-join orphan purge on purchases.
 
     ``max_date`` is an EXCLUSIVE timestamp bound (``date_achat < max_date``);
-    pass day-after-last-valid-day to keep a whole calendar day.
+    pass day-after-last-valid-day to keep a whole calendar day. None
+    applies no upper bound.
     ``max_amount``: the reference hardcodes 10,000 EUR; corpora with other
     monetary scales pass their own bound."""
     require_columns(raw, REQUIRED_ACHAT_COLS, "achats_raw")
-    hi = _require_max_date(max_date)
     df = (
         raw.select(
             F.col("id_achat").try_cast("long").alias("id_achat"),
@@ -131,8 +118,9 @@ def clean_achats(
         )
         .filter((F.col("montant") > 0) & (F.col("montant") <= F.lit(max_amount)))
         .filter(F.col("date_achat") >= F.lit(str(min_date)))
-        .filter(F.col("date_achat") < F.lit(str(hi)))
     )
+    if max_date is not None:
+        df = df.filter(F.col("date_achat") < F.lit(str(max_date)))
     df = _dedup_by_key(df, "id_achat", keep="last")
     if valid_clients is not None:
         # left_semi: no payload shuffle of the semi side; AQE broadcasts it

@@ -489,8 +489,7 @@ def ivf_topk(
     brute-force top-k is the contract here.
     """
     from pyspark.ml.clustering import KMeans
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
 
     if n_cells is None:
         n_cells = derive_cells(corpus)

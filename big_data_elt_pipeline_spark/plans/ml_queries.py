@@ -239,7 +239,6 @@ def q_ml_predictor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from big_data_elt_pipeline_spark.ml.predictor import fit_predict, labeled_features
     from big_data_elt_pipeline_spark.ml.segmentation import compact_fit_input
     from big_data_elt_pipeline_spark.operators import classify as CL
-    from big_data_elt_pipeline_spark.operators.gold import reference_date
 
     fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
@@ -297,7 +296,6 @@ def q_ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         rfm_features,
         segment_agreement,
     )
-    from big_data_elt_pipeline_spark.operators.gold import reference_date
 
     fact = _fact(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)

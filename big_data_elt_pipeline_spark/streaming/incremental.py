@@ -11,9 +11,11 @@ BIT-IDENTICAL to a full batch recompute — asserted in tests and under
 the oracle gate for two different gold keys (``mois``, ``pays``),
 showing the pattern generalizes. The commit is atomic (a manifest
 rename), and a re-delivered epoch finds its tag in the log and is
-skipped, so a restart never folds an epoch twice. On a cluster the merge
-is a Delta ``MERGE INTO`` under the same txnAppId protocol; the state is
-dimension-sized (one row per key).
+skipped, so a restart never folds an epoch twice. Each commit vacuums
+the state down to its latest version; the vacuum checkpoint keeps the
+highest folded epoch, so a replay of a vacuumed epoch is skipped too. On
+a cluster the merge is a Delta ``MERGE INTO`` under the same txnAppId
+protocol; the state is dimension-sized (one row per key).
 """
 
 from __future__ import annotations
@@ -43,6 +45,8 @@ def _merge_batch(
             .agg(F.sum("ca_dec").alias("ca_dec"), F.sum("n").alias("n"))
         )
     LH.write_table(merged.coalesce(1), state_dir, mode="overwrite", txn=txn)
+    # only the latest state is ever read; the checkpoint keeps the txn tags
+    LH.vacuum(state_dir, retain_versions=1)
 
 
 def incremental_gold(

@@ -312,6 +312,28 @@ def test_txn_commit_is_idempotent(spark, tmp_path):
     assert lh.read_table(spark, path).count() == 7
 
 
+def test_txn_epoch_replayed_after_vacuum_is_skipped(spark, tmp_path):
+    """Vacuum drops the manifests that carry the txn tags, so its
+    checkpoint keeps the highest epoch per app id (Delta's txnVersion):
+    a re-delivered epoch at or below it is skipped, across two vacuums,
+    while a new epoch and another app's epoch 0 still land."""
+    path = str(tmp_path / "t")
+    for epoch in range(3):
+        lh.write_table(_df(spark, epoch, epoch + 1), path, "append", txn=("app", epoch))
+    lh.write_table(_df(spark, 3, 4), path, "append", txn=("other", 5))
+    lh.vacuum(path, retain_versions=1)
+    assert lh.table_versions(path) == [3]
+    assert lh.write_table(_df(spark, 0, 1), path, "append", txn=("app", 0)) == -1
+    assert lh.write_table(_df(spark, 9, 10), path, "append", txn=("app", 3)) == 4
+    # the second vacuum folds the first checkpoint's epochs forward
+    lh.vacuum(path, retain_versions=1)
+    assert lh.table_versions(path) == [4]
+    for txn in [("app", 1), ("app", 3), ("other", 5)]:
+        assert lh.write_table(_df(spark, 0, 1), path, "append", txn=txn) == -1, txn
+    assert lh.write_table(_df(spark, 7, 8), path, "append", txn=("new", 0)) == 5
+    assert sorted(r.id for r in lh.read_table(spark, path).collect()) == [0, 1, 2, 3, 7, 9]
+
+
 def test_stream_ingest_replayed_epoch_not_duplicated(spark, tmp_path):
     """Simulated crash-replay: after stream_ingest finishes, committing the
     first epoch's batch again under the stream's txn app id (exactly what a

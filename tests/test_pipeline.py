@@ -45,7 +45,9 @@ def lake(spark, tmp_path_factory):
 
 def test_medallion_runs_and_counts(spark, lake):
     tmp, result, _ = lake
-    assert result["bronze_rows"]["achats"] == 6000
+    assert result["bronze_rows"] == {"clients": 150, "achats": 6000}
+    for t, q in result["silver_quality"].items():
+        assert result["bronze_rows"][t] == q["initial_rows"], t
     assert result["gold_rows"]["fact_achats"] == 6000  # clean corpus: no drops
     assert result["gold_rows"]["dim_clients"] == 150
     assert result["seconds"]["total"] > 0
@@ -88,7 +90,7 @@ def test_medallion_job_budget(lake):
     included: footer-inference reads, extra driver actions or range sorts
     creeping back into the medallion pass show up here."""
     _, _, jobs = lake
-    assert jobs <= 87, jobs  # 83 measured; 96 with inferred sink read-backs
+    assert jobs <= 79, jobs  # 75 measured; 96 with inferred sink read-backs
 
 
 def test_bounded_sinks_have_no_range_sort(spark, lake):

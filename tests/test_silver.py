@@ -97,18 +97,39 @@ def test_require_columns_raises(spark, dirty_achats):
         require_columns(dirty_achats.drop("montant"), ["montant"], "achats")
 
 
-def test_unpinned_max_date_rejected(spark, dirty_clients, dirty_achats):
-    """r5 verdict #6: no wall-clock-dependent default anywhere — an
-    unpinned upper bound must raise, not silently use today()."""
-    with pytest.raises(ValueError, match="max_date is required"):
-        silver.clean_clients(dirty_clients)
-    with pytest.raises(ValueError, match="max_date is required"):
-        silver.clean_achats(dirty_achats)
+def test_unpinned_max_date_matches_data_max_bound(spark, dirty_clients, dirty_achats):
+    """An unpinned ``max_date`` applies no upper bound, which keeps exactly
+    the rows a bound one day past the data max keeps: that bound is the
+    max of the very expressions the cleans filter on. No wall clock is
+    involved, and the future-dated (2030) client survives."""
+    from pyspark.sql import functions as F
+
+    def data_max(raw, col):
+        return raw.select(F.max(F.try_to_timestamp(col).try_cast("date"))).first()[0]
+
+    hi = max(data_max(dirty_clients, "date_inscription"),
+             data_max(dirty_achats, "date_achat")) + dt.timedelta(days=1)
+    assert hi == dt.date(2030, 1, 2)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    clients = silver.clean_clients(dirty_clients)
+    assert rows(clients) == rows(silver.clean_clients(dirty_clients, max_date=hi))
+    assert clients.filter("id_client = 5").count() == 1
+    achats = silver.clean_achats(dirty_achats, valid_clients=clients)
+    pinned = silver.clean_achats(
+        dirty_achats, valid_clients=silver.clean_clients(dirty_clients, max_date=hi),
+        max_date=hi,
+    )
+    assert rows(achats) == rows(pinned)
+    assert len(rows(achats)) == 2  # ids 10 and 17, as under the 2025 bound
 
 
 def test_pipeline_default_bound_deterministic(spark, dirty_clients, dirty_achats, tmp_path):
     """Two medallion runs on the same input (max_date unset) are bit-equal:
-    the derived bound comes from the data max, not the wall clock."""
+    an unpinned run applies no upper bound, and no bound reads the wall
+    clock."""
     from big_data_elt_pipeline_spark import pipeline as P
 
     src = str(tmp_path / "src")
@@ -122,6 +143,6 @@ def test_pipeline_default_bound_deterministic(spark, dirty_clients, dirty_achats
             sorted(map(tuple, spark.read.parquet(f"{lake}/silver/achats").collect()))
         )
     assert outs[0] == outs[1]
-    # the future-dated client (2030) survives under a data-max-derived bound
+    # the future-dated client (2030) survives: no upper bound when unpinned
     clients0 = spark.read.parquet(str(tmp_path / "lake0") + "/silver/clients")
     assert clients0.filter("id_client = 5").count() == 1

@@ -201,6 +201,29 @@ def test_incremental_gold_replayed_epoch_folds_once(spark, tmp_path):
     _assert_same_state(run(), want, key_name)
 
 
+def test_incremental_gold_state_keeps_one_commit(spark, tmp_path):
+    """Each epoch's state commit vacuums the older versions: after a
+    3-epoch run the state holds one data directory. A second run without
+    a checkpoint re-delivers epochs 0-2; the tags of 0 and 1 went with the
+    vacuumed manifests, yet every epoch is skipped (the checkpoint keeps
+    the highest folded one) and the state is unchanged."""
+    from pyspark.sql import functions as F
+
+    from big_data_elt_pipeline_spark import lakehouse as LH
+    from big_data_elt_pipeline_spark.sources.tpch import achats_df
+    from big_data_elt_pipeline_spark.streaming import incremental as inc
+
+    achats = achats_df(spark, SF_SMOKE).select("id_achat", "montant", "date_achat")
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    key, key_name = F.date_format("date_achat", "yyyy-MM"), "mois"
+    want = _ca_recompute(achats, key, key_name)
+    for _ in range(2):
+        got = inc.incremental_gold(spark, achats, src, state, key, key_name, chunks=3)
+        _assert_same_state(got.toPandas(), want, key_name)
+        assert len(list((tmp_path / "state" / "data").glob("commit-*"))) == 1
+        assert LH.table_versions(state) == [2]
+
+
 def test_tumbling_sink_checkpoint_recovery(spark, tmp_path):
     """Durable tumbling aggregate across a stop/restart: land half the
     events, drain to a parquet sink with a checkpoint, then land the rest
