@@ -21,9 +21,14 @@ VLDB'20 paper):
   manifest name; a rename collision means a concurrent writer won the
   version — optimistic retry with the next number (Delta's protocol).
 - Each commit records per-file column (min, max) folded from the parquet
-  footers; ``read_table_pruned`` uses them for Delta-style DATA SKIPPING
-  (whole files provably outside a predicate's range are never opened),
-  and ``cluster_by`` range-clusters a write so those ranges are tight.
+  footers, and this module alone decides which files a predicate can
+  skip (Delta-style DATA SKIPPING: whole files provably outside it are
+  never opened). Two predicate forms share one live-file walk: a range
+  ``lo <= column <= hi`` (``prune_files`` / ``read_table_pruned``, which
+  also filters rows) and a value set ``column IN values``
+  (``prune_files_in`` / ``read_table_pruned_in``, files only — the
+  persisted indexes' probed cells and query terms). ``cluster_by``
+  range-clusters a write so those ranges are tight.
 - ``txn=(app_id, epoch)`` tags make commits idempotent under streaming
   replay (Delta's txnAppId/txnVersion protocol).
 
@@ -34,6 +39,7 @@ files are ordinary partitioned parquet.
 
 from __future__ import annotations
 
+import bisect
 import json
 import os
 import pathlib
@@ -558,6 +564,27 @@ def live_file_stats(path: str, version: int | None = None) -> dict[str, dict]:
     return stats
 
 
+def _split_live(path: str, column: str, keep, version: int | None):
+    """Split the live file set at ``version`` into (kept, skipped): a file
+    is skipped only when it records a ``column`` range and ``keep(range)``
+    is False — files without stats for the column are always kept
+    (absence never loses rows)."""
+    stats = live_file_stats(path, version)
+    kept, skipped = [], []
+    for f in live_files(path, version):
+        rng = stats.get(f, {}).get(column)
+        (kept if rng is None or keep(rng) else skipped).append(f)
+    return kept, skipped
+
+
+def _scan(spark: SparkSession, path: str, files: list[str], version: int | None) -> DataFrame:
+    """Scan of the kept ``files``; none kept is an EMPTY frame with the
+    table schema, never a full-snapshot fallback."""
+    if not files:
+        return read_table(spark, path, version).limit(0)
+    return spark.read.parquet(*files)
+
+
 def prune_files(
     path: str,
     column: str,
@@ -569,19 +596,29 @@ def prune_files(
     ``lo <= column <= hi`` using the manifest min/max stats — the Delta
     data-skipping read path. A file is skipped only when its recorded
     range PROVABLY cannot overlap [lo, hi]; files without stats for the
-    column are always kept (absence never loses rows)."""
-    live = live_files(path, version)
-    stats = live_file_stats(path, version)
-    kept, skipped = [], []
-    for f in live:
-        rng = stats.get(f, {}).get(column)
-        if rng is not None and (
-            (lo is not None and rng[1] < lo) or (hi is not None and rng[0] > hi)
-        ):
-            skipped.append(f)
-        else:
-            kept.append(f)
-    return kept, skipped
+    column are always kept."""
+    return _split_live(
+        path, column,
+        lambda rng: (lo is None or rng[1] >= lo) and (hi is None or rng[0] <= hi),
+        version,
+    )
+
+
+def prune_files_in(
+    path: str, column: str, values, version: int | None = None
+) -> tuple[list[str], list[str]]:
+    """(kept, skipped) for the predicate ``column IN values``: a file is
+    kept iff its recorded range holds at least one value, or it has no
+    stats for the column. One manifest fold and one bisect per file for
+    the whole set (a ``prune_files`` loop per value would re-parse every
+    commit once per value)."""
+    vals = sorted(set(values))
+
+    def holds(rng) -> bool:
+        i = bisect.bisect_left(vals, rng[0])
+        return i < len(vals) and vals[i] <= rng[1]
+
+    return _split_live(path, column, holds, version)
 
 
 def read_table_pruned(
@@ -599,15 +636,23 @@ def read_table_pruned(
     the at-scale point of the stats: partition-style pruning without
     committing to one physical partition column."""
     kept, _ = prune_files(path, column, lo, hi, version)
-    if not kept:  # every file skipped: empty frame with the table schema
-        return read_table(spark, path, version).limit(0)
-    df = spark.read.parquet(*kept)
+    df = _scan(spark, path, kept, version)
     c = F.col(column)
     if lo is not None:
         df = df.filter(c >= lo)
     if hi is not None:
         df = df.filter(c <= hi)
     return df
+
+
+def read_table_pruned_in(
+    spark: SparkSession, path: str, column: str, values, version: int | None = None
+) -> DataFrame:
+    """Snapshot read opening only the files ``prune_files_in`` keeps, in
+    path order. It skips files only and adds no row filter: the callers'
+    equi-joins against the value set already apply the predicate."""
+    kept, _ = prune_files_in(path, column, values, version)
+    return _scan(spark, path, sorted(kept), version)
 
 
 def stream_ingest(

@@ -12,10 +12,10 @@ index, and rebuilds are time-travelable):
   cents array<struct<cid,cvec>>). KB-sized at any corpus scale (it IS
   the broadcast quantizer state). ``codes_version`` and
   ``tombstones_version`` record the commits this state row references,
-  so a default (unpinned) reader resolves a CONSISTENT snapshot — a
-  mutation that has committed data but not yet re-published state can
-  never be observed half-mixed (new codes against old centroids, or a
-  delete counted but not applied). ``tombstones_version`` is -1 while
+  so every reader resolves a CONSISTENT snapshot — a mutation that has
+  committed data but not yet re-published state can never be observed
+  half-mixed (new codes against old centroids, or a delete counted but
+  not applied). ``tombstones_version`` is -1 while
   no unfolded delete exists — in particular a REBUILD publishes -1, so
   tombstones from a previous index generation can never hide the new
   corpus's vectors.
@@ -105,13 +105,6 @@ def _stamp_gen(encoded: DataFrame, gen: int) -> DataFrame:
     return encoded.withColumn("gen", F.lit(gen).cast("long"))
 
 
-def _live_codes(spark: SparkSession, path: str, p: dict) -> DataFrame:
-    """The codes the state row ``p`` publishes, dead generations dropped."""
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
-    codes = LH.read_table(spark, f"{path}/codes", p["codes_version"])
-    return TS.anti(codes, tomb, "vec_id")
-
-
 def build_ivfpq_index(
     corpus: DataFrame,
     path: str,
@@ -131,10 +124,10 @@ def build_ivfpq_index(
     convergence bug a latest-read tombstone default would cause), then
     ``state`` — the one-row state commit is the publish point: it
     records the ``codes_version`` it references (and
-    ``tombstones_version = -1``), and default (unpinned) readers resolve
-    codes AT THAT VERSION, so a crash (or a racing read) between the
-    writes observes the previous consistent snapshot — never new codes
-    against old quantizers. Returns the commit metadata ``{"n_vectors",
+    ``tombstones_version = -1``), and readers resolve codes AT THAT
+    VERSION, so a crash (or a racing read) between the writes observes
+    the previous consistent snapshot — never new codes against old
+    quantizers. Returns the commit metadata ``{"n_vectors",
     "n_cells", "codes_version", "state_version"}``.
 
     ``n_files`` bounds the clustered code file count (default: the
@@ -180,9 +173,13 @@ def _recount_live_and_repair(
     commit, which the repair then publishes. Returns the repair dict, or
     ``{"skipped": True}`` when the stored state already matches."""
     latest = LH.table_versions(f"{path}/codes")[-1]
-    tomb, latest_tomb = TS.latest(spark, path)
+    latest_tomb = TS.latest(spark, path)
     true_n = (
-        TS.anti(LH.read_table(spark, f"{path}/codes"), tomb, "vec_id")
+        TS.read_live(
+            spark, path, "codes",
+            {"codes_version": latest, "tombstones_version": latest_tomb},
+            "vec_id",
+        )
         .select("vec_id").distinct().count()
     )
     if (
@@ -227,11 +224,11 @@ def append_to_index(
     codes relation, paid only on the rare replay path, never on the
     normal ingest path).
 
-    Snapshot note: default (unpinned) readers resolve codes at the
-    version the state row references, so the appended vectors become
-    visible exactly AT the state re-publish — the state commit is the
-    publish point for appends just as for builds; audits wanting an
-    older pair pin explicit versions.
+    Snapshot note: readers resolve codes at the version the state row
+    records, so the appended vectors become visible exactly AT the state
+    re-publish — the state commit is the publish point for appends just
+    as for builds; audits wanting an older snapshot pass the older
+    ``state_version`` (the returned one names this publish).
 
     Concurrency contract: CODES commits from racing appenders serialize
     safely (the manifest version CAS), but ``n_vectors`` is a
@@ -292,8 +289,6 @@ def ivfpq_probe(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     state_version: int | None = None,
-    codes_version: int | None = None,
-    tombstones_version: int | None = None,
 ) -> DataFrame:
     """Top-k over the STORED index — no corpus re-encode. Same output,
     bit for bit, as ``similarity.ivfpq_topk`` on the corpus the index
@@ -312,20 +307,16 @@ def ivfpq_probe(
     files, the file-level analogue of the equi-join's row pruning. The
     row-level cell equi-join still applies inside kept files.
 
-    Snapshot consistency: ``codes_version`` AND ``tombstones_version``
-    default to the versions the resolved state row RECORDS (the snapshot
-    the state publish named), so a default read is crash-consistent
-    across rebuilds and mutations by construction — a probe racing (or
-    following a crash) between a mutation's data commits and its state
-    overwrite scans the OLD snapshot, never mixed halves, and a delete
-    becomes visible exactly at its state publish. Pass explicit versions
-    to time travel (e.g. the pair a ``build``/``append`` returned).
+    Snapshot consistency: codes AND tombstones are read at the versions
+    the resolved state row RECORDS (``tombstones.read_live``), so a read
+    is crash-consistent across rebuilds and mutations by construction —
+    a probe racing (or following a crash) between a mutation's data
+    commits and its state overwrite scans the OLD snapshot, never mixed
+    halves, and a delete becomes visible exactly at its state publish.
+    ``state_version`` time travels (e.g. the one a ``build``/``append``
+    returned); it is the only version a probe can name.
     """
     cells, books, p = load_index_state(spark, path, state_version)
-    if codes_version is None:
-        codes_version = p["codes_version"]
-    if tombstones_version is None:
-        tombstones_version = p["tombstones_version"]
 
     # probed-cell hull: same ranked-slice expression as the scan's probe
     # side, reduced to ONE row holding the distinct cell set
@@ -355,39 +346,7 @@ def ivfpq_probe(
         .first()[0]
     )
 
-    codes_path = f"{path}/codes"
-    # one manifest fold for ALL probed cells (a per-cell prune_files loop
-    # would re-parse every commit JSON once per cell — O(n_cells) driver
-    # passes at a 4096-cell index); a file is kept iff its recorded cell
-    # range contains at least one probed cell, with the prune_files
-    # semantics preserved (no stats => always kept; absence never loses
-    # rows)
-    import bisect
-
-    stats = LH.live_file_stats(codes_path, codes_version)
-    probed_sorted = sorted(probed)
-    kept = []
-    for f in LH.live_files(codes_path, codes_version):
-        rng = stats.get(f, {}).get("cell")
-        if rng is None:
-            kept.append(f)
-            continue
-        i = bisect.bisect_left(probed_sorted, rng[0])
-        if i < len(probed_sorted) and probed_sorted[i] <= rng[1]:
-            kept.append(f)
-    if kept:
-        codes = spark.read.parquet(*sorted(kept))
-    else:
-        # kept == [] covers two distinct cases, both correctly EMPTY:
-        # an empty index (no live files) and every live file pruned (no
-        # file's recorded cell range intersects a probed cell — pruning
-        # is sound, so no row in a skipped file can survive the cell
-        # equi-join). The read_table(...).limit(0) idiom keeps the table
-        # schema without scanning the full snapshot (the best pruning
-        # outcome must not degenerate to a whole-table scan).
-        codes = LH.read_table(spark, codes_path, codes_version).limit(0)
-    tomb = TS.pinned(spark, path, tombstones_version)
-    codes = TS.anti(codes, tomb, "vec_id")
+    codes = TS.read_live(spark, path, "codes", p, "vec_id", keep_in=("cell", probed))
     return SIM.ivfpq_adc_scan(
         codes, cells, books, queries, k, n_probe, p["m"], p["dsub"],
         id_col, vec_col, query_id_col,
@@ -477,7 +436,7 @@ def delete_from_index(
     spark = ids.sparkSession
     cells, books, p = load_index_state(spark, path)
     victims, n_del, n_ignored = TS.split(
-        ids, id_col, _live_codes(spark, path, p), "vec_id"
+        ids, id_col, TS.read_live(spark, path, "codes", p, "vec_id"), "vec_id"
     )
     if n_del == 0:
         return {"n_deleted": 0, "n_ignored": n_ignored}
@@ -520,7 +479,7 @@ def update_index_vectors(
     spark = delta.sparkSession
     cells, books, p = load_index_state(spark, path)
     victims, n_updated, n_inserted = TS.split(
-        delta, id_col, _live_codes(spark, path, p), "vec_id"
+        delta, id_col, TS.read_live(spark, path, "codes", p, "vec_id"), "vec_id"
     )
     encoded = SIM.ivfpq_encode_with_state(
         delta, cells, books, p["m"], p["dsub"], id_col, vec_col
@@ -559,8 +518,8 @@ def compact_index(
     away (the generation-scoped anti-join — a tombstoned-then-updated
     vector keeps exactly its newest codes), re-publish the state row to
     reference the compacted commit (tombstones cleared), then truncate
-    the tombstones. Because default readers pin codes to the version
-    state names, a bare ``lakehouse.compact_table`` on the codes table
+    the tombstones. Because readers read codes at the version state
+    names, a bare ``lakehouse.compact_table`` on the codes table
     alone would leave probes reading the PRE-compaction files (correct
     but un-optimized, and vacuum-unsafe) — index compaction must move
     the state pointer too.
@@ -577,10 +536,9 @@ def compact_index(
     identical across the rewrite); with tombstones the audit reflects
     the deletion (hash over the surviving codes only)."""
     cells, books, p = load_index_state(spark, path)
-    codes = LH.read_table(spark, f"{path}/codes", p["codes_version"])
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
-    if tomb is not None:
-        codes = TS.anti(codes, tomb, "vec_id")
+    codes = TS.read_live(spark, path, "codes", p, "vec_id")
+    folds = p["tombstones_version"] >= 0
+    if folds:
         # folding deletes changes the physical row set — recount exactly
         # from the surviving codes (one agg over the already-materializing
         # rewrite input; should equal the state count delete maintains)
@@ -594,7 +552,7 @@ def compact_index(
     state_version = _publish_state(
         cells, books, p, path, n_vectors, codes_version, -1
     )
-    if tomb is not None:
+    if folds:
         TS.truncate(spark, path)
     return {
         "codes_version": codes_version,
@@ -662,7 +620,6 @@ def index_audit(
     spark: SparkSession,
     path: str,
     state_version: int | None = None,
-    codes_version: int | None = None,
     chunk_target: int = AUDIT_CHUNK_TARGET,
 ) -> DataFrame:
     """ONE verification row over the STORED index — the
@@ -693,21 +650,17 @@ def index_audit(
     bookkeeping, not content, so the hash is stable across compaction.
 
     Columns: (n_vectors, n_code_rows, n_cells_used, n_cells, m, dsub,
-    n_cents, n_tombstones, codes_hash). ``state_version``/
-    ``codes_version`` audit a pinned snapshot (time travel over the
-    index history); defaults resolve the latest state row and the
-    versions IT references (the crash-consistent snapshot).
+    n_cents, n_tombstones, codes_hash). ``state_version`` audits an
+    older publish (time travel over the index history); the default
+    resolves the latest state row. Either way codes and tombstones are
+    read at the versions that row records (the crash-consistent
+    snapshot).
     """
     _, _, p = load_index_state(spark, path, state_version)
-    if codes_version is None:
-        codes_version = p["codes_version"]
     denom = max(1, p["n_cells"] * chunk_target)
     n_chunks = max(1, (p["n_vectors"] + denom - 1) // denom)
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
-    n_tombstones = TS.n_ids(tomb, "vec_id")
-    codes = TS.anti(
-        LH.read_table(spark, f"{path}/codes", codes_version), tomb, "vec_id"
-    )
+    n_tombstones = TS.n_ids(TS.pinned(spark, path, p["tombstones_version"]), "vec_id")
+    codes = TS.read_live(spark, path, "codes", p, "vec_id")
     per_chunk = codes.groupBy(
         "cell", F.pmod(F.col("vec_id"), F.lit(n_chunks)).alias("chunk")
     ).agg(

@@ -129,12 +129,16 @@ def clean_achats(
     return df.select("id_achat", "id_client", "date_achat", "montant", "produit")
 
 
-def quality_audit(raw: DataFrame, kind: str = "achats") -> DataFrame:
+def quality_audit(
+    raw: DataFrame, kind: str = "achats", max_amount: float = MAX_PURCHASE_AMOUNT
+) -> DataFrame:
     """P9 one-pass quality counters.
 
     The pandas reference counts dropped rows per rule with one full pass per
     rule; here a single projection computes all rule flags and one aggregate
     returns every counter — one scan regardless of rule count.
+    ``max_amount`` is the amount bound ``clean_achats`` applies, so
+    ``dropped_bad_amount`` counts the rows that clean drops.
     """
     if kind == "achats":
         id_ok = F.col("id_achat").try_cast("long").isNotNull() & F.col("id_client").try_cast("long").isNotNull()
@@ -143,7 +147,7 @@ def quality_audit(raw: DataFrame, kind: str = "achats") -> DataFrame:
         flags = raw.select(
             (~id_ok).cast("int").alias("bad_id"),
             date_c.isNull().cast("int").alias("bad_date"),
-            (amt.isNull() | (amt <= 0) | (amt > MAX_PURCHASE_AMOUNT)).cast("int").alias("bad_amount"),
+            (amt.isNull() | (amt <= 0) | (amt > max_amount)).cast("int").alias("bad_amount"),
             F.col("produit").isNull().cast("int").alias("bad_product"),
         )
     else:

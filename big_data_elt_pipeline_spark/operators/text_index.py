@@ -42,7 +42,7 @@ half-built index, and rebuilds are time-travelable):
   averages over the dl relation, which only holds tokenized
   documents). Published LAST: the stats commit is the index's publish
   point, and it RECORDS the versions of every table it references, so
-  a default (unpinned) reader resolves a crash-consistent snapshot —
+  every reader resolves a crash-consistent snapshot —
   a mutation that has committed data but not yet re-published stats
   can never be observed half-mixed (the ``ann_index`` codes_version
   lesson applied from day one).
@@ -87,8 +87,6 @@ inverted-index + segment-scoped-delete public design).
 """
 
 from __future__ import annotations
-
-import bisect
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -155,15 +153,6 @@ def _publish_stats(
         F.lit(tombstones_version).cast("long").alias("tombstones_version"),
     )
     return LH.write_table(stats, f"{path}/stats", mode="overwrite")
-
-
-def _live(
-    spark: SparkSession, path: str, table: str, version: int,
-    tomb: DataFrame | None,
-) -> DataFrame:
-    """``{path}/{table}`` at ``version`` with dead generations dropped."""
-    rel = LH.read_table(spark, f"{path}/{table}", version)
-    return TS.anti(rel, tomb, "doc_id")
 
 
 def _corpus_row(spark: SparkSession, p: dict) -> DataFrame:
@@ -269,13 +258,17 @@ def _recount_live_and_repair(spark: SparkSession, path: str, p: dict) -> dict:
     latest_post = LH.table_versions(f"{path}/postings")[-1]
     latest_df = LH.table_versions(f"{path}/df")[-1]
     latest_docs = LH.table_versions(f"{path}/docs")[-1]
-    tomb, latest_tomb = TS.latest(spark, path)
-    counts = _live(spark, path, "postings", latest_post, tomb).agg(
+    latest_tomb = TS.latest(spark, path)
+    latest = {
+        "postings_version": latest_post, "docs_version": latest_docs,
+        "tombstones_version": latest_tomb,
+    }
+    counts = TS.read_live(spark, path, "postings", latest, "doc_id").agg(
         F.count_distinct("doc_id").cast("long").alias("n"),
         F.sum("tf").cast("long").alias("t"),
     ).first()
     true_tok, true_dl = int(counts["n"] or 0), int(counts["t"] or 0)
-    true_n_docs = _live(spark, path, "docs", latest_docs, tomb).count()
+    true_n_docs = TS.read_live(spark, path, "docs", latest, "doc_id").count()
     if (
         true_n_docs != p["n_docs"]
         or true_tok != p["n_docs_tokenized"]
@@ -421,14 +414,12 @@ def delete_from_text_index(
     """
     spark = ids.sparkSession
     p = load_text_index_stats(spark, path)
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
     victims, n_del, n_ignored = TS.split(
-        ids, id_col, _live(spark, path, "docs", p["docs_version"], tomb),
-        "doc_id",
+        ids, id_col, TS.read_live(spark, path, "docs", p, "doc_id"), "doc_id"
     )
     if n_del == 0:
         return {"n_deleted": 0, "n_ignored": n_ignored}
-    post = _live(spark, path, "postings", p["postings_version"], tomb)
+    post = TS.read_live(spark, path, "postings", p, "doc_id")
     vic_post = post.join(F.broadcast(victims), "doc_id", "left_semi")
     dec = vic_post.groupBy("term").agg(
         (-F.count(F.lit(1))).cast("long").alias("df")
@@ -497,13 +488,11 @@ def update_text_documents(
     spark = docs.sparkSession
     p = load_text_index_stats(spark, path)
     gen = p["postings_version"] + 1
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
     victims, n_updated, n_inserted = TS.split(
-        docs, id_col, _live(spark, path, "docs", p["docs_version"], tomb),
-        "doc_id",
+        docs, id_col, TS.read_live(spark, path, "docs", p, "doc_id"), "doc_id"
     )
     new_post = _postings(docs, id_col, text_col, gen)
-    post = _live(spark, path, "postings", p["postings_version"], tomb)
+    post = TS.read_live(spark, path, "postings", p, "doc_id")
     old_post = post.join(F.broadcast(victims), "doc_id", "left_semi")
 
     postings_version = LH.write_table(
@@ -596,9 +585,8 @@ def compact_text_index(
     identically across the fold (it already audits the live relation).
     """
     p = load_text_index_stats(spark, path)
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
     postings_version = LH.write_table(
-        _live(spark, path, "postings", p["postings_version"], tomb),
+        TS.read_live(spark, path, "postings", p, "doc_id"),
         f"{path}/postings", mode="overwrite", cluster_by=["term"],
         n_files=n_files,
     )
@@ -611,14 +599,14 @@ def compact_text_index(
         n_files=n_files,
     )
     docs_version = LH.write_table(
-        _live(spark, path, "docs", p["docs_version"], tomb), f"{path}/docs",
+        TS.read_live(spark, path, "docs", p, "doc_id"), f"{path}/docs",
         mode="overwrite",
     )
     stats_version = _publish_stats(
         spark, path, p["n_docs"], p["n_docs_tokenized"], p["total_dl"],
         postings_version, df_version, docs_version, -1,
     )
-    if tomb is not None:
+    if p["tombstones_version"] >= 0:
         TS.truncate(spark, path)
     return {
         "postings_version": postings_version,
@@ -626,41 +614,6 @@ def compact_text_index(
         "docs_version": docs_version,
         "stats_version": stats_version,
     }
-
-
-def prune_term_files(
-    path: str, terms: list[str], version: int | None = None
-) -> tuple[list[str], list[str]]:
-    """(kept, live) file split for a term SET — ONE manifest fold for the
-    whole set (the ``ivfpq_probe`` single-fold idiom; a per-term
-    prune_files loop would re-parse every commit JSON once per term). A
-    file is kept iff its recorded ``term`` range contains at least one
-    query term; prune semantics preserved (no stats => always kept)."""
-    stats = LH.live_file_stats(path, version)
-    terms_sorted = sorted(set(terms))
-    kept = []
-    live = LH.live_files(path, version)
-    for f in live:
-        rng = stats.get(f, {}).get("term")
-        if rng is None:
-            kept.append(f)
-            continue
-        i = bisect.bisect_left(terms_sorted, rng[0])
-        if i < len(terms_sorted) and terms_sorted[i] <= rng[1]:
-            kept.append(f)
-    return kept, live
-
-
-def _read_pruned_by_terms(
-    spark: SparkSession, path: str, terms: list[str], version: int | None
-) -> DataFrame:
-    """Snapshot read opening only the files ``prune_term_files`` keeps;
-    kept == [] is an EMPTY scan (schema kept), never a full-snapshot
-    fallback."""
-    kept, _ = prune_term_files(path, terms, version)
-    if kept:
-        return spark.read.parquet(*sorted(kept))
-    return LH.read_table(spark, path, version).limit(0)
 
 
 def bm25_index_probe(
@@ -671,8 +624,6 @@ def bm25_index_probe(
     k1: float = 1.2,
     b: float = 0.75,
     stats_version: int | None = None,
-    postings_version: int | None = None,
-    df_version: int | None = None,
 ) -> DataFrame:
     """Top-``k`` BM25 over the STORED index — no corpus tokenize, no
     corpus stats recompute in this plan. Same output, bit for bit, as
@@ -688,20 +639,16 @@ def bm25_index_probe(
     file-level analogue of the row-level term equi-join, which still
     applies inside kept files.
 
-    Snapshot consistency: ``postings_version``/``df_version`` default to
-    the versions the resolved stats row RECORDS, so a default read is
-    crash-consistent across rebuilds by construction; tombstones are
-    ALWAYS read at the stats-recorded version (a text delete changes
-    N/avgdl/df, so its visibility must flip atomically with the stats
-    that account for it — see ``delete_from_text_index``) and the
+    Snapshot consistency: postings, df AND tombstones are read at the
+    versions the resolved stats row RECORDS, so a read is
+    crash-consistent across rebuilds by construction (a text delete
+    changes N/avgdl/df, so its visibility must flip atomically with the
+    stats that account for it — see ``delete_from_text_index``) and the
     anti-join is generation-scoped (an updated document's re-appended
-    rows outrank its tombstone). Pass explicit versions to time travel.
+    rows outrank its tombstone). ``stats_version`` time travels; it is
+    the only version a probe can name.
     """
     p = load_text_index_stats(spark, path, stats_version)
-    if postings_version is None:
-        postings_version = p["postings_version"]
-    if df_version is None:
-        df_version = p["df_version"]
 
     # query vocabulary: bounded by the probe set, never corpus-sized
     qvocab = [
@@ -710,15 +657,11 @@ def bm25_index_probe(
         .select("term").distinct().collect()
     ]
 
-    post = TS.anti(
-        _read_pruned_by_terms(
-            spark, f"{path}/postings", qvocab, postings_version
-        ),
-        TS.pinned(spark, path, p["tombstones_version"]),
-        "doc_id",
+    post = TS.read_live(
+        spark, path, "postings", p, "doc_id", keep_in=("term", qvocab)
     )
     dfreq = (
-        _read_pruned_by_terms(spark, f"{path}/df", qvocab, df_version)
+        LH.read_table_pruned_in(spark, f"{path}/df", "term", qvocab, p["df_version"])
         # fold the additive increments (vocab-sized; pruned to ~query
         # vocab by the file skip + the kernel's qterms join)
         .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
@@ -768,16 +711,12 @@ def bm25_index_rm3(
     not once per downstream reference.
     """
     p = load_text_index_stats(spark, path, stats_version)
-    postings_version = p["postings_version"]
-    df_version = p["df_version"]
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
-
     base = bm25_index_probe(
         spark, path, queries, k=fb_k, k1=k1, b=b,
         stats_version=stats_version,
     ).localCheckpoint(eager=True)
 
-    post_full = _live(spark, path, "postings", postings_version, tomb)
+    post_full = TS.read_live(spark, path, "postings", p, "doc_id")
     qw = RETR.rm3_weights(
         base, post_full, queries, fb_k=fb_k, fb_terms=fb_terms, lam=lam
     ).localCheckpoint(eager=True)
@@ -786,15 +725,11 @@ def bm25_index_rm3(
     # probe batch (|queries| x (|q| + fb_terms)) — the serving
     # collect-the-vocab idiom bm25_index_probe documents
     evocab = [r["term"] for r in qw.select("term").distinct().collect()]
-    post = TS.anti(
-        _read_pruned_by_terms(
-            spark, f"{path}/postings", evocab, postings_version
-        ),
-        tomb,
-        "doc_id",
+    post = TS.read_live(
+        spark, path, "postings", p, "doc_id", keep_in=("term", evocab)
     )
     dfreq = (
-        _read_pruned_by_terms(spark, f"{path}/df", evocab, df_version)
+        LH.read_table_pruned_in(spark, f"{path}/df", "term", evocab, p["df_version"])
         .groupBy("term").agg(F.sum("df").cast("long").alias("df"))
     )
     return RETR.bm25_rank_weighted(
@@ -806,8 +741,6 @@ def text_index_audit(
     spark: SparkSession,
     path: str,
     stats_version: int | None = None,
-    postings_version: int | None = None,
-    df_version: int | None = None,
     chunk_target: int = AUDIT_CHUNK_TARGET,
 ) -> DataFrame:
     """ONE verification row over the STORED text index — the
@@ -843,20 +776,15 @@ def text_index_audit(
       the SQL oracle.
     """
     p = load_text_index_stats(spark, path, stats_version)
-    if postings_version is None:
-        postings_version = p["postings_version"]
-    if df_version is None:
-        df_version = p["df_version"]
     n_chunks = max(1, (p["n_docs"] + chunk_target - 1) // chunk_target)
 
     # the audit certifies the LIVE index: dead generations are logically
     # gone (physically folded at the next compact_text_index), so every
     # derivation — hash included — runs over the anti-joined relation,
     # matching an oracle that re-tokenizes the live corpus
-    tomb = TS.pinned(spark, path, p["tombstones_version"])
-    post = _live(spark, path, "postings", postings_version, tomb)
-    n_tombstones = TS.n_ids(tomb, "doc_id")
-    n_docs_live = _live(spark, path, "docs", p["docs_version"], tomb).count()
+    post = TS.read_live(spark, path, "postings", p, "doc_id")
+    n_tombstones = TS.n_ids(TS.pinned(spark, path, p["tombstones_version"]), "doc_id")
+    n_docs_live = TS.read_live(spark, path, "docs", p, "doc_id").count()
     per_chunk = post.groupBy(
         F.pmod(F.col("doc_id"), F.lit(n_chunks)).alias("chunk")
     ).agg(
@@ -875,7 +803,7 @@ def text_index_audit(
         F.count(F.lit(1)).cast("long").alias("ddf")
     )
     stored_df = (
-        LH.read_table(spark, f"{path}/df", df_version)
+        LH.read_table(spark, f"{path}/df", p["df_version"])
         .groupBy("term").agg(F.sum("df").cast("long").alias("sdf"))
         # fully-decremented terms legitimately fold to 0 while the
         # live postings have no row at all — not a mismatch

@@ -11,10 +11,13 @@ delete+append update shape works WITHOUT an intervening compaction, and
 compaction folds exactly the dead generations.
 
 Readers never take the latest tombstones: the index's publish row
-(``state`` / ``stats``) records the tombstone version it accounts for,
-so a delete becomes visible atomically at that publish. -1 means no
-unfolded delete; a rebuild truncates the table and publishes -1, so
-tombstones of a previous index generation can never hide new rows.
+(``state`` / ``stats``) records the version of every table it
+references, the tombstones included, so a delete becomes visible
+atomically at that publish. ``read_live`` is the one reader of that
+snapshot; the publish row is the only version a reader can name. -1
+means no unfolded delete; a rebuild truncates the table and publishes
+-1, so tombstones of a previous index generation can never hide new
+rows.
 The anti-join is broadcast: tombstones accumulated between compactions
 must stay dimension-sized (the Delta deletion-vector assumption).
 """
@@ -48,16 +51,37 @@ def pinned(
     return LH.read_table(spark, f"{path}/tombstones", version)
 
 
-def latest(spark: SparkSession, path: str) -> tuple[DataFrame | None, int]:
-    """(relation, version) of the LATEST tombstone snapshot — what a
-    replay repair re-publishes. A truncated (empty) snapshot is
-    ``(None, -1)``: every fold is complete."""
+def latest(spark: SparkSession, path: str) -> int:
+    """Version of the LATEST tombstone snapshot — what a replay repair
+    re-publishes. A truncated (empty) snapshot is -1: every fold is
+    complete."""
     tv = LH.table_versions(f"{path}/tombstones")
-    version = tv[-1] if tv else -1
-    tomb = pinned(spark, path, version)
-    if tomb is not None and tomb.limit(1).count() == 0:
-        return None, -1
-    return tomb, version
+    tomb = pinned(spark, path, tv[-1] if tv else -1)
+    if tomb is None or tomb.limit(1).count() == 0:
+        return -1
+    return tv[-1]
+
+
+def read_live(
+    spark: SparkSession,
+    path: str,
+    table: str,
+    p: dict,
+    key: str,
+    keep_in: tuple[str, list] | None = None,
+) -> DataFrame:
+    """``{path}/{table}`` as the publish row ``p`` names it: read at
+    ``p[f"{table}_version"]`` with dead generations dropped by the
+    tombstones at ``p["tombstones_version"]`` — the one snapshot a reader
+    of a persisted index can see. ``keep_in=(column, values)`` opens
+    only the files whose recorded range holds a value
+    (``lakehouse.read_table_pruned_in``)."""
+    table_path, version = f"{path}/{table}", p[f"{table}_version"]
+    if keep_in is None:
+        rel = LH.read_table(spark, table_path, version)
+    else:
+        rel = LH.read_table_pruned_in(spark, table_path, *keep_in, version=version)
+    return anti(rel, pinned(spark, path, p["tombstones_version"]), key)
 
 
 def anti(rel: DataFrame, tomb: DataFrame | None, key: str) -> DataFrame:

@@ -112,7 +112,9 @@ def silver_transform(
         ("audit clients",
          lambda: silver.quality_audit(clients_raw, kind="clients").first().asDict()),
         ("audit achats",
-         lambda: silver.quality_audit(achats_raw, kind="achats").first().asDict()),
+         lambda: silver.quality_audit(
+             achats_raw, kind="achats", max_amount=max_amount
+         ).first().asDict()),
     ]
     with ThreadPoolExecutor(max_workers=3) as pool:
         results = list(pool.map(_act, jobs))

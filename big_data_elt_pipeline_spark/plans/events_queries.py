@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_elt_pipeline_spark.plans.queries import register
+from big_data_elt_pipeline_spark.sources import tpch
 from big_data_elt_pipeline_spark.sources.tpch import EVENTS_SQL, events_df, read_table
 from big_data_elt_pipeline_spark.streaming import events as EV
 
@@ -176,11 +177,10 @@ def q_incremental_ca_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch-maintained gold aggregate: executed INCREMENTALLY over
     micro-batches, yet oracle-checkable because exact decimal merges make
     the final state equal a full recompute bit-for-bit."""
-    from big_data_elt_pipeline_spark.plans.queries import _silver_frames
     from big_data_elt_pipeline_spark.streaming import staging_dir
     from big_data_elt_pipeline_spark.streaming.incremental import incremental_ca_monthly
 
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     tmp = staging_dir("incr_gate", sf_dir)
     return incremental_ca_monthly(spark, achats, f"{tmp}/src", f"{tmp}/state", chunks=3)
 

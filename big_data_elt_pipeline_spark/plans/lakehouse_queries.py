@@ -21,7 +21,8 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 
 from big_data_elt_pipeline_spark.operators.scd import scd2_init, scd2_merge
-from big_data_elt_pipeline_spark.plans.queries import _D, _fact, _silver_frames, register
+from big_data_elt_pipeline_spark.plans.queries import _D, _fact, register
+from big_data_elt_pipeline_spark.sources import tpch
 
 # --------------------------------------------------------------------------
 # SCD2 fixture: snapshot + two update waves
@@ -272,7 +273,8 @@ def q_expectations_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     violation, both sides)."""
     from big_data_elt_pipeline_spark.operators import expectations as EX
 
-    clients, achats = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     bad = [
         (1, None, dt.datetime(2000, 1, 1), 50.0, "Brand#1"),
         (2, 999999999, dt.datetime(2000, 1, 1), 50.0, "Brand#1"),

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.operators import multimodal as MM
 from big_data_elt_pipeline_spark.plans.queries import _D, _REF_SQL, _fact, _ref_date, register
+from big_data_elt_pipeline_spark.sources import tpch
 from big_data_elt_pipeline_spark.sources.tpch import read_table
 
 _MM_SQL = """
@@ -169,9 +170,8 @@ def q_calendar_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense month calendar (generator surface), left join fills revenue 0s —
     the standard dense-time-series reshape."""
     from big_data_elt_pipeline_spark.functions.core import money_sum
-    from big_data_elt_pipeline_spark.plans.queries import _silver_frames
 
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     cam = achats.groupBy(F.date_format("date_achat", "yyyy-MM").alias("mois")).agg(
         money_sum("montant", "ca")
     )

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from big_data_elt_pipeline_spark.functions.core import money_sum
 from big_data_elt_pipeline_spark.operators.asof import asof_join
-from big_data_elt_pipeline_spark.plans.queries import _SCORES_SQL, _scored, _silver_frames, register
+from big_data_elt_pipeline_spark.plans.queries import _SCORES_SQL, _scored, register
 from big_data_elt_pipeline_spark.sources import tpch
 from big_data_elt_pipeline_spark.sources.tpch import EVENTS_SQL, events_df
 
@@ -206,7 +206,7 @@ FROM ev e ASOF LEFT JOIN r
   ON e.user_id = r.id_client AND r.date_achat <= e.ts
 """)
 def q_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     events = events_df(spark, sf_dir).select("event_id", "user_id", "ts")
     w = Window.partitionBy("id_client", "date_achat").orderBy(F.desc("id_achat"))
     right = (
@@ -249,7 +249,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     a BroadcastNestedLoopJoin — correct for dimension-sized range tables;
     for two large interval sets, bucketize + equi-join (the as-of pattern).
     """
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     bands = spark.createDataFrame(PRICE_BANDS, "label string, lo double, hi double")
     return (
         achats.join(

@@ -171,15 +171,10 @@ scores AS (
 """
 
 
-def _silver_frames(spark: SparkSession, sf_dir: str):
-    clients = tpch.clients_df(spark, sf_dir)
-    achats = tpch.achats_df(spark, sf_dir)
-    return clients, achats
-
-
 @tpch.memoized("customer", "nation", "lineitem", "orders", "part")
 def _fact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     return gold.build_fact(achats, clients)
 
 
@@ -458,7 +453,8 @@ WHERE id_client IN (SELECT id_client FROM clients)
 
 @register("silver_achats", _SILVER_ACHATS_SQL)
 def q_silver_achats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, achats = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     return silver.clean_achats(
         achats,
         valid_clients=clients,
@@ -497,7 +493,7 @@ SELECT id_client, nom, email, date_inscription, pays FROM (
 
 @register("silver_clients", _SILVER_CLIENTS_SQL)
 def q_silver_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, _ = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
     cleaned = silver.clean_clients(
         clients, min_date=dt.date(1992, 1, 1), max_date=dt.date(1997, 1, 1)
     )
@@ -515,7 +511,7 @@ SELECT count(*) AS initial_rows,
 FROM achats
 """)
 def q_quality_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     return silver.quality_audit(achats, kind="achats")
 
 
@@ -667,7 +663,7 @@ SELECT count(*) AS initial_rows,
 FROM clients
 """)
 def q_quality_counters_clients(spark: SparkSession, sf_dir: str) -> DataFrame:
-    clients, _ = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
     return silver.quality_audit(clients, kind="clients")
 
 
@@ -696,7 +692,7 @@ def q_union_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``scripts/benchmark.py:25-46`` reproduced as an engine op)."""
     from functools import reduce
 
-    _, achats = _silver_frames(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     base = achats.select("id_achat", "montant")
     copies = [
         base.select((F.col("id_achat") + F.lit(i * 1_000_000_000)).alias("id_achat"), "montant")
@@ -727,7 +723,8 @@ def q_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     days before the dataset reference date — lapsed-client detection."""
     import datetime as _dt
 
-    clients, achats = _silver_frames(spark, sf_dir)
+    clients = tpch.clients_df(spark, sf_dir)
+    achats = tpch.achats_df(spark, sf_dir)
     ref = _ref_date(spark, sf_dir)
     recent = achats.filter(F.col("date_achat") >= F.lit(ref - _dt.timedelta(days=90)))
     return clients.join(recent.select("id_client"), "id_client", "left_anti").select(

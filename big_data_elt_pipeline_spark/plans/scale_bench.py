@@ -51,6 +51,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_elt_pipeline_spark import lakehouse as LH
 from big_data_elt_pipeline_spark.operators import dedup as D
 from big_data_elt_pipeline_spark.operators import similarity as S
 from big_data_elt_pipeline_spark.session import pinned_rdds, unpersist_rdds
@@ -398,9 +399,9 @@ def bm25_scale_pin(
             _timed(spark, out, f"bm25pin_build_x{factor}",
                    lambda: TIX.build_text_index(docs, idx), runs=1,
                    progress=progress)
-            kept, live = TIX.prune_term_files(f"{idx}/postings", qvocab)
+            kept, skipped = LH.prune_files_in(f"{idx}/postings", "term", qvocab)
             out[f"bm25pin_x{factor}_kept_files"] = float(len(kept))
-            out[f"bm25pin_x{factor}_total_files"] = float(len(live))
+            out[f"bm25pin_x{factor}_total_files"] = float(len(kept) + len(skipped))
 
             key = f"bm25pin_probe_x{factor}"
             _timed(spark, out, key,
@@ -490,9 +491,9 @@ def hybrid_scale_pin(
                 for r in RETR.tokenize(queries, "query_id", "query_text")
                 .select("term").distinct().collect()
             ]
-            kept, live = TIX.prune_term_files(f"{tix_idx}/postings", qvocab)
+            kept, skipped = LH.prune_files_in(f"{tix_idx}/postings", "term", qvocab)
             out[f"hybridpin_x{factor}_kept_files"] = float(len(kept))
-            out[f"hybridpin_x{factor}_total_files"] = float(len(live))
+            out[f"hybridpin_x{factor}_total_files"] = float(len(kept) + len(skipped))
 
             def fused():
                 lex = TIX.bm25_index_probe(spark, tix_idx, queries, k=50).filter(

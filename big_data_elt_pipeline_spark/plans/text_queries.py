@@ -774,22 +774,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
-def _sign_bucket_sql(vec: str, n_bits: int, mus: str | None = None) -> str:
-    """Sign-bucket expression; with ``mus`` set, the CENTERED form
-    (bit j = vec[j] - mus[j] > 0) mirroring ``similarity.sign_bucket`` —
-    one IEEE double subtraction per bit, bit-identical cross-engine."""
-    terms = []
-    for j in range(n_bits):
-        comp = f"CAST({vec}[{j + 1}] AS DOUBLE)"
-        if mus is not None:
-            comp = f"({comp} - {mus}[{j + 1}])"
-        terms.append(
-            f"(CASE WHEN {comp} > 0 THEN CAST({1 << j} AS BIGINT) "
-            f"ELSE CAST(0 AS BIGINT) END)"
-        )
-    return " + ".join(terms)
-
-
 def _nb_cte(src: str, target_bucket_rows: int, lo: int = 4, hi: int = 24) -> str:
     """CTEs ``nbn, nb``: the corpus-derived sign-bucket width — the DuckDB
     mirror of ``similarity.auto_bits``/``derive_bits``. Same threshold-count
@@ -814,10 +798,10 @@ nb AS (
 
 def _sign_bucket_sql_dyn(vec: str, mus: str, nbits: str = "nb.n_bits") -> str:
     """Dynamic-width centered sign bucket (requires ``nb`` in the FROM
-    list): the ``_sign_bucket_sql`` expression with the unrolled loop
-    replaced by ``list_transform(range(0, n_bits), ...)`` — same one IEEE
-    double subtraction and same power-of-two term per bit, so the bucket
-    value is identical to Spark's ``sign_bucket`` at the derived width."""
+    list), the DuckDB mirror of ``similarity.sign_bucket``: bit j is
+    ``vec[j] - mus[j] > 0`` over ``range(0, n_bits)`` — one IEEE double
+    subtraction and one power-of-two term per bit, so the bucket value is
+    identical to Spark's at the derived width."""
     return (
         f"CAST(coalesce(list_sum(list_transform(range(0, {nbits}), "
         f"j -> CASE WHEN (CAST({vec}[j + 1] AS DOUBLE) - {mus}[j + 1]) > 0 "
@@ -827,9 +811,14 @@ def _sign_bucket_sql_dyn(vec: str, mus: str, nbits: str = "nb.n_bits") -> str:
 
 
 def _mu_ctes_dyn(src: str) -> str:
-    """``_mu_ctes`` with the dimension count taken from the ``nb`` CTE
-    (``_nb_cte`` must precede): exact per-dim means of the first
-    ``n_bits`` embedding components, n_bits derived from the corpus."""
+    """CTEs ``nmu, mudim, muarr``: exact per-dim means of the first
+    ``n_bits`` embedding components of ``src``, n_bits taken from the
+    ``nb`` CTE (``_nb_cte`` must precede) — the DuckDB mirror of
+    ``similarity.component_means`` (DECIMAL(25,9) sums of 9-dp-snapped
+    values, one exact double division)."""
+    # non-finite guard mirrors similarity.component_means: NULL/NaN/overflow
+    # components map to NULL (skipped by sum) in BOTH engines — DuckDB's
+    # CAST(NaN AS DECIMAL) would otherwise error where Spark silently NULLs
     comp = "CAST(embedding[CAST(t.i AS INT) + 1] AS DOUBLE)"
     guarded = (
         f"CASE WHEN {comp} IS NOT NULL AND NOT isnan({comp}) "
@@ -842,32 +831,6 @@ mudim AS (
            CAST(sum({guarded}) AS DOUBLE)
                / CAST(max(nmu.n) AS DOUBLE) AS mu
     FROM {src}, unnest(range(0, (SELECT n_bits FROM nb))) AS t(i), nmu
-    GROUP BY t.i
-),
-muarr AS (SELECT list(mu ORDER BY i) AS mus FROM mudim)"""
-
-
-def _mu_ctes(src: str, n_bits: int) -> str:
-    """CTEs ``nmu, mudim, muarr``: exact per-dim means of the first
-    ``n_bits`` embedding components of ``src`` — the DuckDB mirror of
-    ``similarity.component_means`` (DECIMAL(25,9) sums of 9-dp-snapped
-    values, one exact double division; the embedding_covariance mean
-    kernel sliced to the bucketed prefix)."""
-    # non-finite guard mirrors similarity.component_means: NULL/NaN/overflow
-    # components map to NULL (skipped by sum) in BOTH engines — DuckDB's
-    # CAST(NaN AS DECIMAL) would otherwise error where Spark silently NULLs
-    comp = f"CAST(embedding[CAST(t.i AS INT) + 1] AS DOUBLE)"
-    guarded = (
-        f"CASE WHEN {comp} IS NOT NULL AND NOT isnan({comp}) "
-        f"AND abs({comp}) <= 1e308 "
-        f"THEN CAST(round({comp}, 9) AS DECIMAL(25,9)) END"
-    )
-    return f"""nmu AS (SELECT CAST(count(*) AS BIGINT) AS n FROM {src}),
-mudim AS (
-    SELECT t.i AS i,
-           CAST(sum({guarded}) AS DOUBLE)
-               / CAST(max(nmu.n) AS DOUBLE) AS mu
-    FROM {src}, unnest(range(0, {n_bits})) AS t(i), nmu
     GROUP BY t.i
 ),
 muarr AS (SELECT list(mu ORDER BY i) AS mus FROM mudim)"""

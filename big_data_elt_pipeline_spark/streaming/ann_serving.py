@@ -50,11 +50,13 @@ def stream_index_probe(
     Returns the sink table snapshot (query_id, vec_id, adc_l2sq, rank).
 
     Index-freshness semantics: each micro-batch resolves the latest
-    state row and the codes version IT references (``ivfpq_probe``'s
-    crash-consistent default), so a concurrent ``append_to_index``
-    becomes visible to queries from the next epoch after its state
-    publish — the serving behavior a vector store wants. Pin versions
-    inside a custom ``foreachBatch`` for frozen-index replay.
+    state row and the codes and tombstone versions IT records
+    (``ivfpq_probe``'s crash-consistent snapshot), so a concurrent
+    ``append_to_index`` becomes visible to queries from the next epoch
+    after its state publish — the serving behavior a vector store
+    wants. For frozen-index replay, pass one publish-row
+    ``state_version`` to ``ivfpq_probe`` inside a custom
+    ``foreachBatch``.
 
     Idempotence contract: WITHOUT ``checkpoint_dir`` there is no stream
     state, so epoch ids restart at 0 every invocation while the txn app

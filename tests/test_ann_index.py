@@ -100,18 +100,15 @@ def test_append_ingest_and_idempotence(spark, tmp_path, index_copy):
     assert AIX.append_to_index(delta, path, txn=("t", 1)) == {"skipped": True}
     assert AIX.index_audit(spark, path).first().codes_hash == before
 
-    # snapshot-pinned read: the pre-append version pair still answers as
+    # snapshot-pinned read: the pre-append publish row still answers as
     # the base-only index (time travel over the index history)
     pinned_audit = AIX.index_audit(
-        spark, path,
-        state_version=meta["state_version"],
-        codes_version=meta["codes_version"],
+        spark, path, state_version=meta["state_version"]
     ).first()
     assert pinned_audit.n_vectors == base.count()
     pinned = AIX.ivfpq_probe(
         spark, path, queries, k=5, n_probe=4,
         state_version=meta["state_version"],
-        codes_version=meta["codes_version"],
     )
     base_twin = SIM.ivfpq_adc_scan(
         SIM.ivfpq_encode_with_state(base, cells, books, p["m"], p["dsub"]),

@@ -236,7 +236,8 @@ def test_cluster_by_write_enables_file_skipping(spark, tmp_path):
 def test_file_skipping_respects_snapshots_and_unclustered_commits(spark, tmp_path):
     """Stats fold per-version like the file list itself; appends without
     clustering still record footer stats; files lacking stats for the
-    probed column are always kept (absence never loses rows)."""
+    probed column are always kept (absence never loses rows). Checked
+    for both predicate forms: the range and the value set."""
     path = str(tmp_path / "t")
     lh.write_table(_df(spark, 0, 100), path, "append", cluster_by=["id"], n_files=2)
     lh.write_table(_df(spark, 100, 200), path, "append", cluster_by=["id"], n_files=2)
@@ -253,6 +254,29 @@ def test_file_skipping_respects_snapshots_and_unclustered_commits(spark, tmp_pat
     # a column with no recorded stats prunes nothing
     kept_all, skipped_none = lh.prune_files(path, "nope", lo=0, hi=1)
     assert len(kept_all) == 4 and skipped_none == []
+
+    # value-set form: a file is kept exactly when its range holds a value
+    stats = lh.live_file_stats(path)
+    vals = [5, 150, 151]
+    kept_in, skipped_in = lh.prune_files_in(path, "id", vals)
+    assert sorted(kept_in) == sorted(
+        f for f, s in stats.items()
+        if any(s["id"][0] <= v <= s["id"][1] for v in vals)
+    )
+    assert len(kept_in) == 2 and len(skipped_in) == 2
+    # it skips files only: every row of the kept files comes back
+    got = lh.read_table_pruned_in(spark, path, "id", vals)
+    assert got.count() == spark.read.parquet(*kept_in).count() > len(vals)
+    # nothing kept: an empty frame with the table schema
+    empty = lh.read_table_pruned_in(spark, path, "id", [150], version=0)
+    assert empty.count() == 0
+    assert empty.schema == lh.read_table(spark, path, 0).schema
+    # files without stats for the column are kept; the one with stats
+    # that holds no value is skipped
+    extra = _df(spark, 500, 510).withColumn("extra", F.col("id")).coalesce(1)
+    lh.write_table(extra, path, "append")
+    kept_x, skipped_x = lh.prune_files_in(path, "extra", [0])
+    assert len(kept_x) == 4 and len(skipped_x) == 1
 
 
 def test_string_and_date_stats_prune(spark, tmp_path):

@@ -90,6 +90,16 @@ def test_quality_audit_one_pass(spark, dirty_achats):
     assert row.dropped_bad_product == 1
 
 
+def test_quality_audit_uses_the_run_amount_bound(spark, dirty_achats):
+    """The audit flags amounts against the bound the clean applies: with
+    ``max_amount=1e9`` the 20,000 purchase is kept, so only the
+    non-positive amount counts as dropped."""
+    row = silver.quality_audit(dirty_achats, kind="achats", max_amount=1e9).first()
+    assert row.dropped_bad_amount == 1
+    kept = silver.clean_achats(dirty_achats, max_date=MAXD, max_amount=1e9)
+    assert kept.filter("montant > 10000").count() == 1
+
+
 def test_require_columns_raises(spark, dirty_achats):
     from big_data_elt_pipeline_spark.schemas import require_columns
 

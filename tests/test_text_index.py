@@ -181,7 +181,7 @@ def test_probe_prunes_files_and_handles_absent_terms(spark, index_path):
     assert skipped and len(kept) < len(live)
 
     # a term above every file's max range: empty scan, never a full read
-    probe = TIX._read_pruned_by_terms(spark, postings, ["zzzzzzz"], None)
+    probe = LH.read_table_pruned_in(spark, postings, "term", ["zzzzzzz"])
     assert probe.count() == 0
     # a query of absent terms ranks nothing (and does not error)
     q = _queries(spark, [("q_absent", "zzzzzzz qqqqqqq")])
